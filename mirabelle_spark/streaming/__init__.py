@@ -13,38 +13,24 @@ from mirabelle_spark.streaming.core import (  # noqa: F401
     stream_ratio,
     stream_top,
     stream_changed,
-    stream_changed_jvm_run,
-    stream_changed_sharded,
     stream_coalesce,
     stream_cond_dt,
-    stream_cond_dt_sharded,
     stream_ddt,
-    stream_ddt_sharded,
     stream_dedup,
     stream_ewma,
-    stream_ewma_sharded,
     stream_expired,
-    stream_expired_sharded,
     stream_fixed_event_window,
-    stream_fixed_event_window_sharded,
     stream_fixed_time_window,
     stream_moving_event_window,
-    stream_moving_event_window_sharded,
     stream_moving_time_window,
-    stream_coalesce_sharded,
     stream_smax,
     stream_smax_jvm,
-    stream_smax_sharded,
     stream_smin,
     stream_smin_jvm,
-    stream_smin_sharded,
     stream_ssort,
     stream_stable,
-    stream_stable_sharded,
     stream_throttle,
-    stream_throttle_sharded,
     stream_zscore,
-    stream_zscore_sharded,
     reinject_sink,
     reinject_source,
     to_console,

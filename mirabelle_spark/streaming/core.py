@@ -129,283 +129,6 @@ def _native(v):
     return v.item() if hasattr(v, "item") else v
 
 
-def stream_changed(
-    df: DataFrame,
-    fieldname: str,
-    by: Sequence[str],
-    time_col: str = "time",
-    init=None,
-) -> DataFrame:
-    """Streaming ``changed`` via keyed state: emits rows whose
-    ``field`` differs (null-safe, matching the batch twin's
-    eqNullSafe) from the previous row of the same key. ``init`` is
-    the reference's :init — the value each key's first event is
-    compared against (action.clj:334-360). The micro-batch compare
-    is one vectorized shift — no per-row Python.
-    """
-
-    def batch_fn(s, pdf):
-        (last,) = s
-        vals = pdf[fieldname]
-        prev = vals.shift(1)
-        if len(pdf):
-            prev.iloc[0] = last
-        same = (vals == prev) | (vals.isna() & prev.isna())
-        out = pdf[~same.to_numpy(dtype=bool)]
-        new_last = _native(vals.iloc[-1]) if len(pdf) else last
-        return (new_last,), out
-
-    return _keyed_batch_scan(
-        df, by, time_col, f"last {dict(df.dtypes)[fieldname]}", (init,), batch_fn
-    )
-
-
-def stream_changed_jvm_run(
-    df: DataFrame,
-    fieldname: str,
-    by: Sequence[str],
-    work_dir: str,
-    time_col: str = "time",
-    init=None,
-    out_writer=None,
-    query_name: str = "changed_jvm",
-    trigger: dict | None = None,
-    n_buckets: int = 64,
-    compact_every: int = 16,
-    prune_reads: bool = False,
-):
-    """Pure-JVM per-event ``changed`` (VERDICT r8 ask #6 experiment):
-    zero Python on the data path, per-event emission grain.
-
-    Why this is a ``foreachBatch`` TERMINAL op and not an in-pipeline
-    transformation: per-event ``changed`` needs each row's
-    predecessor within (key, time) order. On a streaming DataFrame
-    Spark rejects analytic window functions (``lag``), and the
-    in-pipeline stateful surfaces available to PySpark
-    (applyInPandasWithState / transformWithStateInPandas) are
-    Python-priced by construction. Inside ``foreachBatch`` the
-    micro-batch is a plain DataFrame, so the whole recurrence stays
-    JVM-side:
-
-    - within-batch predecessor: ``lag(struct(field))`` over
-      ``partitionBy(by).orderBy(time)``;
-    - cross-batch predecessor: left join against a parquet
-      last-value table keyed on ``by`` (one struct row per key),
-      consulted only where ``lag`` returned null (first row of the
-      key in this batch);
-    - first event ever: compared against ``init`` (null-safe),
-      action.clj:334-360;
-    - state update: ``max_by(struct(field), time)`` per key in the
-      batch, written as an LSM-STYLE DELTA — a version dir holding
-      ONLY this batch's keys (O(batch) rows) — with a full
-      compaction into a ``pmod(xxhash64(keys), n_buckets)``-
-      partitioned base every ``compact_every`` batches. Per-batch
-      state WRITE cost is O(batch keys) + O(total keys)/
-      compact_every amortized, not O(total distinct keys) every
-      batch (the r9-verdict scale finding: at 100M+ keys a
-      full-table rewrite per batch dwarfs any batch). The state
-      READ per batch resolves base ∪ deltas by newest version —
-      a bounded union of <= compact_every+1 dirs. (A per-batch
-      bucket-granular overwrite — the verdict's sketch — was
-      measured first and REJECTED: 1k random keys touch ~all
-      buckets, so each batch paid ~1000 file creates/reads; 16.6 s
-      vs 1.8 s per batch at 100k keys. Deltas write one dir of
-      O(batch) rows instead. ``compact_every=1`` reproduces the r9
-      full-rewrite behavior for benchmarking.)
-
-    Replay-idempotent and crash-atomic (r9 ADVICE): each batch
-    writes its version dir (``state/b<batch_id>``) and then
-    publishes a MANIFEST (``state/manifest_b<batch_id>.json``,
-    tmp+rename, written LAST) listing the current base and delta
-    dirs in order. A replayed micro-batch (batch_id <= the newest
-    manifest: the crash-after-commit-log-gap case) re-emits from
-    the PRE-batch manifest — so genuinely-changed first-of-key
-    rows are not suppressed by already-advanced state — and skips
-    the state write; a crash BEFORE the manifest rename leaves the
-    previous manifest authoritative and the half-written version
-    dir is simply overwritten on retry. State is exactly-once;
-    emission through ``out_writer`` is at-least-once (standard
-    foreachBatch sink semantics). The last two manifests and the
-    version dirs they reference are retained; older ones are GC'd
-    per batch.
-
-    The trade vs :func:`stream_changed` / the sharded tier: a
-    foreachBatch sink cannot feed further stream operators directly
-    (compose via ``reinject!``/a topic dir if needed), ties on
-    ``time_col`` within a key order arbitrarily (the apws twins keep
-    arrival order), and each batch pays one keyed shuffle + a
-    bucket-pruned state read/merge/write. ``out_writer(df,
-    batch_id)`` receives each batch's emitted rows (default: noop
-    write — bench shape). Returns the started StreamingQuery."""
-    import json as _json
-    import os as _os
-    import shutil as _sh
-
-    from pyspark.sql.window import Window as _W
-
-    spark = df.sparkSession
-    key_cols = list(by)
-    ftype = dict(df.dtypes)[fieldname]
-    state_root = _os.path.join(work_dir, "state")
-    bkt = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
-
-    def _manifest_ids():
-        try:
-            names = _os.listdir(state_root)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            int(m[len("manifest_b"):-len(".json")])
-            for m in names
-            if m.startswith("manifest_b") and m.endswith(".json")
-        )
-
-    def _manifest_path(mid):
-        return _os.path.join(state_root, f"manifest_b{mid}.json")
-
-    def _load_manifest(mid):
-        with open(_manifest_path(mid)) as f:
-            return _json.load(f)
-
-    def _read_state(man, touched=None):
-        """Resolve base ∪ deltas to one row per key (newest wins).
-        Bounded: <= compact_every+1 dirs; deltas are O(their batch).
-        ``touched`` (bucket ids) PRUNES the base read to those
-        partitions — the emission join only needs state for the
-        batch's own keys, so a key-local batch reads a key-local
-        slice of the base (deltas are O(batch), always read whole);
-        compaction passes None for the full table."""
-        dirs = ([man["base"]] if man.get("base") else []) + man.get("deltas", [])
-        if not dirs:
-            return None
-        parts = []
-        for i, d in enumerate(dirs):
-            p = spark.read.parquet(d)
-            if touched is not None and d == man.get("base"):
-                p = p.filter(F.col("__bkt__").isin(touched))
-            parts.append(
-                p.select(*key_cols, "__lv__").withColumn("__seq__", F.lit(i))
-            )
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        if len(parts) == 1:
-            return u.drop("__seq__")
-        return u.groupBy(*key_cols).agg(
-            F.max_by("__lv__", "__seq__").alias("__lv__")
-        )
-
-    def _emit_noop(out, _bid):
-        out.write.format("noop").mode("overwrite").save()
-
-    writer = out_writer or _emit_noop
-
-    def handle(batch, batch_id):
-        if batch.isEmpty():
-            return
-        ids = _manifest_ids()
-        replay = bool(ids) and batch_id <= ids[-1]
-        # pre-batch state: on replay, the newest manifest BELOW this
-        # batch (its own manifest reflects post-batch state)
-        pre_ids = [i for i in ids if i < batch_id] if replay else ids
-        pre = _load_manifest(pre_ids[-1]) if pre_ids else {"base": None, "deltas": []}
-        # prune_reads: one bounded driver action (<= n_buckets ints)
-        # buys a bucket-pruned emission-side base read. Net WIN only
-        # when the pruned slice out-saves the extra job — large
-        # bases on remote storage with key-local batches; measured a
-        # net LOSS at local scale (+0.5 s/batch collect vs ~0 read
-        # savings at 1M keys, PERF §60), hence default off.
-        touched = None
-        if prune_reads:
-            touched = [
-                r["__tb__"]
-                for r in batch.select(bkt.alias("__tb__")).distinct().collect()
-            ]
-        st = _read_state(pre, touched=touched)
-
-        w = _W.partitionBy(*key_cols).orderBy(time_col)
-        e = batch.withColumn(
-            "__pv__", F.lag(F.struct(F.col(fieldname).alias("v"))).over(w)
-        )
-        if st is not None:
-            e = e.join(st.withColumnRenamed("__lv__", "__sv__"), key_cols, "left")
-        else:
-            e = e.withColumn("__sv__", F.lit(None).cast(f"struct<v:{ftype}>"))
-        prev = F.coalesce(F.col("__pv__"), F.col("__sv__"))
-        prev_v = F.when(prev.isNull(), F.lit(init).cast(ftype)).otherwise(
-            prev["v"]
-        )
-        out = e.filter(~prev_v.eqNullSafe(F.col(fieldname))).drop(
-            "__pv__", "__sv__"
-        )
-        writer(out, batch_id)
-        if replay:
-            return  # state already reflects this batch
-
-        last = batch.groupBy(*key_cols).agg(
-            F.max_by(
-                F.struct(F.col(fieldname).alias("v")), F.col(time_col)
-            ).alias("__lv__")
-        )
-        vdir = _os.path.join(state_root, f"b{batch_id}")
-        compact = st is None or len(pre["deltas"]) + 1 >= compact_every
-        if compact:
-            # compaction rewrites EVERY key: unpruned state read
-            st = _read_state(pre)
-            if st is not None:
-                merged = st.alias("s").join(
-                    last.alias("l"), key_cols, "full_outer"
-                ).select(
-                    *[
-                        F.coalesce(F.col(f"l.{c}"), F.col(f"s.{c}")).alias(c)
-                        for c in key_cols
-                    ],
-                    F.coalesce(F.col("l.__lv__"), F.col("s.__lv__")).alias(
-                        "__lv__"
-                    ),
-                )
-            else:
-                merged = last
-            merged.withColumn("__bkt__", bkt).write.mode(
-                "overwrite"
-            ).partitionBy("__bkt__").parquet(vdir)
-            man = {"batch_id": batch_id, "base": vdir, "deltas": []}
-        else:
-            last.write.mode("overwrite").parquet(vdir)
-            man = {
-                "batch_id": batch_id,
-                "base": pre["base"],
-                "deltas": pre["deltas"] + [vdir],
-            }
-        tmp = _manifest_path(batch_id) + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(man, f)
-        _os.rename(tmp, _manifest_path(batch_id))  # the commit point
-
-        # GC: keep the last two manifests + every version dir they
-        # reference (replay depth after a crash is one batch)
-        ids2 = _manifest_ids()
-        kept, dropped = ids2[-2:], ids2[:-2]
-        referenced = set()
-        for mid in kept:
-            m = _load_manifest(mid)
-            for p in ([m["base"]] if m.get("base") else []) + m.get("deltas", []):
-                referenced.add(_os.path.basename(p))
-        for mid in dropped:
-            _os.remove(_manifest_path(mid))
-        for d in _os.listdir(state_root):
-            if d.startswith("b") and d[1:].isdigit() and d not in referenced:
-                _sh.rmtree(_os.path.join(state_root, d), ignore_errors=True)
-
-    wq = (
-        df.writeStream.queryName(query_name)
-        .foreachBatch(handle)
-        .option("checkpointLocation", _os.path.join(work_dir, "ck"))
-    )
-    wq = wq.trigger(**(trigger or {"availableNow": True}))
-    return wq.start()
-
-
 def stream_dedup(
     df: DataFrame,
     keys: Sequence[str],
@@ -654,7 +377,7 @@ def stream_neardup_dedup(
     2. posexplode to one narrow row per band; the ORIGINAL row rides
        as a struct on the pos-0 row only, so document bodies cross
        the two shuffles ~once, not ``bands`` times.
-    3. ONE sharded keyed-state pass (the ewma-sharded shell:
+    3. ONE sharded keyed-state pass (the keyed-state shell's shard layout:
        ``shards`` state groups, not one per band hash): state is a
        set of 64-bit band keys (+ last-seen event time for the
        ``state_ttl_s`` horizon eviction) — ~8 bytes per band key
@@ -773,29 +496,26 @@ def _stream_band_dedup(
         )
     )
 
-    def shard_fold(carry, ks, pdf):
-        band_ids = pdf["__band_id__"].tolist()
-        dup = [False] * len(ks)
-        prev = None
-        for i, k in enumerate(ks):
-            if band_ids[i] < 0:
-                # sentinel: never duplicate, never seeds state; reset
-                # the run tracker so a real key sharing the string is
-                # re-checked against the carry (correct either way)
-                prev = None
-                continue
-            if k != prev:
-                dup[i] = k in carry
+    def fold(carry, segs, pdf):
+        import numpy as np
+
+        real = pdf["__band_id__"].to_numpy() >= 0
+        dup = np.zeros(len(pdf), dtype=bool)
+        for k, s0, e0 in segs:
+            # sentinel rows (band_id < 0) never duplicate and never
+            # seed state; a key's first real row checks the carry,
+            # every later one in the batch is a duplicate of it
+            hit = np.flatnonzero(real[s0:e0])
+            if hit.size:
+                dup[s0 + hit] = True
+                dup[s0 + hit[0]] = k in carry
                 carry[k] = 1
-                prev = k
-            else:
-                dup[i] = True
         res = pdf.copy()
         res["__dup__"] = dup
         return res
 
-    scanned = _sharded_keyed_batch_scan(
-        ex, ["__band_key__"], time_col, shards, shard_fold,
+    scanned = _keyed_scan(
+        ex, ["__band_key__"], time_col, fold, shards,
         extra_out="__dup__ boolean", state_ttl_s=state_ttl_s,
     )
     # Row-format shim: FlatMapGroupsInPandasWithStateExec declares
@@ -896,292 +616,6 @@ def reinject_source(spark: SparkSession, topic_dir: str, schema: str) -> DataFra
     return file_source(spark, topic_dir, schema)
 
 
-
-
-def _keyed_batch_scan(
-    df: DataFrame,
-    by,
-    time_col,
-    state_struct,
-    init,
-    batch_fn,
-    state_ttl_s=None,
-    out_schema=None,
-    ttl_clock="event",
-):
-    """Shared shell for order-dependent keyed-state twins: per key,
-    run ``batch_fn(state, pdf_sorted) -> (state, out_pdf)`` over each
-    micro-batch sorted by event time, persisting state across
-    batches. This is the streaming analog of the reference's
-    per-operator atoms (single-threaded per key, parallel across
-    keys) — but each operator's fold is vectorized over the whole
-    micro-batch (numpy scans / pandas shifts), never a per-row
-    ``iterrows``/``to_dict`` loop (r2 perf finding: a hot key melts
-    on per-row Python).
-
-    ``state_ttl_s`` is the reference's `by` fork GC
-    (action.clj:1559-1582 :fork-ttl): keys idle past the ttl have
-    their state evicted — the next event starts fresh, and state
-    size stays bounded by the active-key set. ``ttl_clock`` picks
-    the timeout clock: ``"event"`` (watermark-driven; requires a
-    watermark on ``df``, and Spark then drops late rows before the
-    operator) or ``"processing"`` (wall-clock, the reference's
-    :gc-interval timer in Spark form — no watermark, late rows
-    still delivered, right for operators that must keep the
-    reference's out-of-order behavior).
-
-    ``out_schema`` (StructType or DDL string) lets an operator emit
-    rows shaped differently from its input (e.g. window rows with an
-    events array); ``batch_fn`` must then return exactly those
-    columns.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    schema = df.schema
-    out_struct = out_schema if out_schema is not None else schema
-    cols = (
-        [f.name for f in schema.fields] if out_schema is None else None
-    )  # None → trust batch_fn's column set
-    ttl_ms = int(state_ttl_s * 1000) if state_ttl_s else None
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        s = state.get if state.exists else init
-        outs = []
-        max_ms = None
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(time_col, kind="mergesort")
-            s, out = batch_fn(s, pdf)
-            if out is not None and len(out):
-                outs.append(out[cols] if cols is not None else out)
-            t = pdf[time_col]
-            mx = (
-                int(t.max().value // 1_000_000)
-                if str(t.dtype).startswith("datetime64")
-                else int(float(t.max()) * 1000)
-            )
-            max_ms = mx if max_ms is None else max(max_ms, mx)
-        state.update(tuple(s))
-        if ttl_ms and ttl_clock == "processing":
-            state.setTimeoutDuration(ttl_ms)
-        elif ttl_ms and max_ms is not None:
-            # clamp above the watermark: an out-of-order tail event can
-            # put last-event + ttl BEHIND the watermark, which Spark
-            # rejects; the key then just times out at the next bound
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(max_ms + ttl_ms, wm + 1))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    return df.groupBy(*[F.col(c) for c in by]).applyInPandasWithState(
-        fn,
-        outputStructType=out_struct,
-        stateStructType=state_struct,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if not state_ttl_s
-            else GroupStateTimeout.ProcessingTimeTimeout
-            if ttl_clock == "processing"
-            else GroupStateTimeout.EventTimeTimeout
-        ),
-    )
-
-
-def stream_throttle(
-    df: DataFrame,
-    count: int,
-    duration_s: float,
-    by: Sequence[str],
-    time_col: str = "time",
-) -> DataFrame:
-    """Streaming anchored-window throttle (action.clj:1163-1217) —
-    keyed state (anchor_us, n); exact integer-µs window math like the
-    batch twin. The scan loops over a primitive int64 array (the
-    anchored recurrence is inherently sequential) but never builds
-    per-row dicts/Series."""
-    import numpy as np
-
-    dur_us = int(round(duration_s * 1_000_000))
-
-    def batch_fn(s, pdf):
-        anchor, n = s
-        tv = _series_us(pdf[time_col])
-        keep = np.empty(len(tv), dtype=bool)
-        for i, t in enumerate(tv.tolist()):
-            if anchor is None or t >= anchor + dur_us:
-                anchor, n = t, 1
-                keep[i] = True
-            elif n < count:
-                n += 1
-                keep[i] = True
-            else:
-                keep[i] = False
-        return (anchor, n), pdf[keep]
-
-    return _keyed_batch_scan(
-        df, by, time_col, "anchor BIGINT, n INT", (None, 0), batch_fn
-    )
-
-
-def stream_ewma(
-    df: DataFrame,
-    r: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    state_ttl_s: float | None = None,
-) -> DataFrame:
-    """Streaming ewma-timeless (action.clj:1248-1276): keyed running
-    average, identical double recurrence (same fold order) as the
-    batch twin. ``state_ttl_s`` evicts idle keys (fork GC) — pass a
-    watermarked input when set. The fold runs over a primitive
-    float64 array; null metrics pass through as null without
-    touching the state."""
-    import numpy as np
-    import pandas as pd
-
-    def batch_fn(s, pdf):
-        (m,) = s
-        x = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        out = np.empty(len(x))
-        for i, v in enumerate(x.tolist()):
-            if v != v:  # null/NaN input → emit null, keep state
-                out[i] = np.nan
-            else:
-                m = r * v + (1.0 - r) * (m if m is not None else 0.0)
-                out[i] = m
-        res = pdf.copy()
-        # NaN in a float64 column round-trips to SQL NULL via Arrow
-        res[metric_col] = pd.array(out, dtype="float64")
-        return (m,), res
-
-    return _keyed_batch_scan(
-        df, by, time_col, "m DOUBLE", (None,), batch_fn, state_ttl_s=state_ttl_s
-    )
-
-
-def stream_smax(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-) -> DataFrame:
-    """Streaming smax (action.clj:2742-2772): per input event emit
-    the best-so-far event of its key; strict > keeps the first
-    winner on ties. State carries the best row as JSON (one
-    encode/decode per micro-batch, not per event). The winner scan
-    runs over a primitive float64 array; output rows materialize as
-    one positional gather, plus at most one stored-best prefix
-    (once a batch row wins, the stored best never re-emits)."""
-    import json as _json
-
-    import numpy as np
-    import pandas as pd
-
-    def batch_fn(s, pdf):
-        (best_json,) = s
-        best = _json.loads(best_json) if best_json else None
-        v = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        n = len(v)
-        best_v = -np.inf
-        if best is not None and best.get(metric_col) is not None:
-            best_v = float(best[metric_col])
-        have = best is not None
-        src = np.empty(n, dtype=np.int64)  # -1 = stored best row
-        cur = -1
-        for i, x in enumerate(v.tolist()):
-            if not have or (x == x and x > best_v):
-                cur = i
-                have = True
-                if x == x:
-                    best_v = x
-            src[i] = cur
-        out = pdf.iloc[np.where(src >= 0, src, 0)].reset_index(drop=True)
-        k = int((src < 0).sum())  # contiguous prefix re-emitting stored best
-        if k:
-            stored = {
-                key: (pd.Timestamp(val) if key == time_col and isinstance(val, str) else val)
-                for key, val in best.items()
-            }
-            for col_name, val in stored.items():
-                if col_name not in out.columns:
-                    continue
-                if isinstance(val, (list, tuple, np.ndarray)):
-                    # array-typed columns (e.g. tags): a .loc set with
-                    # a list value is an elementwise broadcast —
-                    # ValueError when len(val) != k, silent scatter
-                    # when equal. Assign cell-by-cell as objects.
-                    out[col_name] = out[col_name].astype(object)
-                    idx = out.columns.get_loc(col_name)
-                    for i in range(k):
-                        out.iat[i, idx] = list(val)
-                else:
-                    out.loc[: k - 1, col_name] = val
-        if cur >= 0:
-            row = pdf.iloc[cur]
-            best = {
-                key: _native(val.isoformat() if hasattr(val, "isoformat") else val)
-                for key, val in row.items()
-            }
-        return (_json.dumps(best),), out
-
-    return _keyed_batch_scan(df, by, time_col, "best STRING", (None,), batch_fn)
-
-
-def stream_cond_dt(
-    df: DataFrame,
-    cond,
-    dt_s: float,
-    by: Sequence[str],
-    time_col: str = "time",
-) -> DataFrame:
-    """Streaming cond-dt family (action.clj:476-508): keyed state
-    (ok, flip_us); valid events pass once the condition has held
-    continuously for more than dt seconds.
-
-    ``cond`` accepts the SAME condition vectors as the batch twins
-    (``[":>", "metric", 100]`` — compiled per micro-batch by
-    :func:`mirabelle_spark.conditions.compile_condition_pandas`,
-    fully vectorized) or a python row-predicate for custom logic
-    (applied row-wise, the slow path)."""
-    import numpy as np
-
-    dt_us = int(round(dt_s * 1_000_000))
-    if callable(cond):
-        def valid_series(pdf):
-            return pdf.apply(cond, axis=1).to_numpy(dtype=bool)
-    else:
-        from mirabelle_spark.conditions import compile_condition_pandas
-
-        _pred = compile_condition_pandas(cond)
-
-        def valid_series(pdf):
-            return _pred(pdf).to_numpy(dtype=bool)
-
-    def batch_fn(s, pdf):
-        ok, flip = s
-        tv = _series_us(pdf[time_col])
-        valid = valid_series(pdf)
-        keep = np.empty(len(tv), dtype=bool)
-        for i, (t, va) in enumerate(zip(tv.tolist(), valid.tolist())):
-            if va and not ok:
-                ok, flip = True, t
-            elif not va:
-                ok, flip = False, None
-            keep[i] = va and ok and t > flip + dt_us
-        return (ok, flip), pdf[keep]
-
-    return _keyed_batch_scan(
-        df, by, time_col, "ok BOOLEAN, flip BIGINT", (False, None), batch_fn
-    )
-
-
 def stream_ssort(
     df: DataFrame,
     duration_s: float,
@@ -1216,421 +650,6 @@ def stream_ssort(
     return exploded.select(
         *[F.col(c) for c in by], "window_start", "seq", "__e__.*"
     ).drop("__k__")
-
-
-def stream_stable(
-    df: DataFrame,
-    dt_s: float,
-    field: str,
-    by: Sequence[str],
-    time_col: str = "time",
-) -> DataFrame:
-    """Streaming ``stable`` (action.clj:2053-2138): keyed value-run
-    state; events pass once their run's ``field`` value has stayed
-    identical for more than ``dt`` seconds. The run's early events
-    buffer in state and flush at confirmation; a value change drops
-    an unconfirmed buffer (flap suppression). Out-of-order events
-    (time < running max) are dropped, like the reference.
-    """
-    import json as _json
-
-    import numpy as np
-    import pandas as pd
-
-    dt_us = int(round(dt_s * 1_000_000))
-
-    def _row_ser(pdf, i):
-        return {
-            k: _native(v.isoformat() if hasattr(v, "isoformat") else v)
-            for k, v in pdf.iloc[i].items()
-        }
-
-    def batch_fn(st, pdf):
-        (blob,) = st
-        s = (
-            _json.loads(blob)
-            if blob
-            else {"max": None, "has": False, "value": None, "flip": None,
-                  "confirmed": False, "buffer": []}
-        )
-        t = _series_us(pdf[time_col])
-        n = len(t)
-        # drop out-of-order rows: time < running max (incl. state max)
-        run_max = np.maximum.accumulate(t)
-        prior = np.concatenate(([s["max"] if s["max"] is not None else -(1 << 62)],
-                                run_max[:-1]))
-        keep = t >= prior
-        s["max"] = (
-            int(max(run_max[-1], -(1 << 62) if s["max"] is None else s["max"]))
-            if n
-            else s["max"]
-        )
-        pdf = pdf[keep].reset_index(drop=True)
-        t = t[keep]
-        n = len(t)
-        emit: list[pd.DataFrame] = []
-        vals = pdf[field].tolist()
-
-        def _eq(a, b):
-            if a is None or b is None:
-                return a is None and b is None
-            if isinstance(a, float) and isinstance(b, float) and a != a and b != b:
-                return True
-            return a == b
-
-        i = 0
-        while i < n:
-            v = vals[i]
-            j = i + 1
-            while j < n and _eq(vals[j], v):
-                j += 1
-            if not (s["has"] and _eq(v, s["value"])):
-                # value changed: unconfirmed buffer is dropped
-                s.update(value=v, has=True, flip=int(t[i]),
-                         confirmed=False, buffer=[])
-            if not s["confirmed"]:
-                thresh = s["flip"] + dt_us
-                k = i
-                while k < j and t[k] <= thresh:
-                    k += 1
-                if k == j:  # run not yet stable: buffer the segment
-                    s["buffer"].extend(_row_ser(pdf, x) for x in range(i, j))
-                else:  # confirmed at row k: flush buffer + segment prefix
-                    s["confirmed"] = True
-                    buf = s["buffer"] + [_row_ser(pdf, x) for x in range(i, k)]
-                    s["buffer"] = []
-                    if buf:
-                        bdf = _revive_datetime_cols(
-                            pd.DataFrame(buf, columns=list(pdf.columns)), pdf
-                        )
-                        emit.append(bdf)
-                    emit.append(pdf.iloc[k:j])
-            else:
-                emit.append(pdf.iloc[i:j])
-            i = j
-        out = pd.concat(emit, ignore_index=True) if emit else None
-        return (_json.dumps(s),), out
-
-    return _keyed_batch_scan(df, by, time_col, "state STRING", (None,), batch_fn)
-
-
-def stream_fixed_event_window(
-    df: DataFrame,
-    n: int,
-    by: Sequence[str],
-    time_col: str = "time",
-    fork_ttl_s: float | None = None,
-    gc_wall_s: float | None = None,
-) -> DataFrame:
-    """Streaming ``fixed-event-window`` (action.clj:233-262) with the
-    reference's ``:fork-ttl`` semantics (stream_test.clj:331-408):
-    per-key buffer in state; every ``n`` buffered events flush as one
-    window row ``(by…, window_start, events)``.
-
-    Eviction is two-layered, matching the reference's by-fork GC:
-
-    - **gap eviction** (the reference's timer GC in its continuous
-      limit): an event arriving more than ``fork_ttl_s`` after the
-      key's previous event drops the stale partial buffer — the
-      window restarts from the newcomer.
-    - **gap eviction** uses the EVENT clock, exactly like the
-      reference (action.clj:1575-1600 compares fork times against
-      the incoming event's ``:time``). The reference's GC can also
-      sweep OTHER keys' idle forks when one key's event advances the
-      clock; per-key state can't see across keys, so that sweep maps
-      to the optional ``gc_wall_s`` **wall-clock timeout** — a
-      memory-bound backstop for keys that never speak again (a push
-      engine's wall clock tracks its event clock). It is NOT the
-      event-time watermark: a watermark makes Spark drop late rows
-      before the operator, which would break the reference's
-      out-of-order behavior.
-
-    Events are processed in event-time order within a micro-batch
-    (per-event batches degrade gracefully to the reference's arrival
-    order, which its out-of-order deftest relies on).
-    """
-    import json as _json
-
-    import pandas as pd
-
-    ttl_us = int(round(fork_ttl_s * 1_000_000)) if fork_ttl_s else None
-    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-
-    def _row_ser(pdf, i):
-        return {
-            k: _native(v.isoformat() if hasattr(v, "isoformat") else v)
-            for k, v in pdf.iloc[i].items()
-        }
-
-    ev_struct = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    by_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields if f.name in by
-    )
-    out_schema = f"{by_struct}, window_start double, events array<struct<{ev_struct}>>"
-
-    def batch_fn(st, pdf):
-        last_us, buf_json = st
-        buf = _json.loads(buf_json) if buf_json else []
-        t = _series_us(pdf[time_col])
-        windows = []
-        for i in range(len(pdf)):
-            ti = int(t[i])
-            if (
-                ttl_us is not None
-                and last_us is not None
-                and ti - last_us > ttl_us
-            ):
-                buf = []  # stale fork: GC dropped it before this event
-            buf.append(_row_ser(pdf, i))
-            last_us = ti
-            if len(buf) == n:
-                windows.append(buf)
-                buf = []
-        if not windows:
-            return (last_us, _json.dumps(buf)), None
-        keyvals = {c: pdf.iloc[0][c] for c in by}
-        rows = []
-        for w in windows:
-            evs = [_revive_ts_fields(e, ts_cols) for e in w]
-            first = evs[0][time_col]
-            start = (
-                first.timestamp()
-                if hasattr(first, "timestamp")
-                else float(first)
-            )
-            rows.append({**keyvals, "window_start": start, "events": evs})
-        out = pd.DataFrame(rows)
-        return (last_us, _json.dumps(buf)), out
-
-    return _keyed_batch_scan(
-        df,
-        by,
-        time_col,
-        "last_us BIGINT, buf STRING",
-        (None, None),
-        batch_fn,
-        state_ttl_s=gc_wall_s,
-        out_schema=out_schema,
-        ttl_clock="processing",
-    )
-
-
-def stream_moving_event_window(
-    df: DataFrame,
-    n: int,
-    by: Sequence[str],
-    time_col: str = "time",
-    gc_wall_s: float | None = None,
-) -> DataFrame:
-    """Streaming ``moving-event-window`` (action.clj:1219-1246): on
-    every event, emit the trailing ``n`` events of its key as an
-    ``events`` array — the keyed-state sliding buffer, emitted
-    per-row like the batch twin's collect_list window. ``gc_wall_s``
-    bounds state for silent keys (wall-clock backstop)."""
-    import json as _json
-
-    import pandas as pd
-
-    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-
-    def _row_ser(pdf, i):
-        return {
-            k: _native(v.isoformat() if hasattr(v, "isoformat") else v)
-            for k, v in pdf.iloc[i].items()
-        }
-
-    ev_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-        + f", events array<struct<{ev_struct}>>"
-    )
-
-    def _revive(e):
-        return _revive_ts_fields(e, ts_cols)
-
-    def batch_fn(st, pdf):
-        (buf_json,) = st
-        buf = _json.loads(buf_json) if buf_json else []
-        events_col = []
-        for i in range(len(pdf)):
-            buf.append(_row_ser(pdf, i))
-            buf = buf[-n:]
-            events_col.append([_revive(e) for e in buf])
-        out = pdf.copy()
-        out["events"] = events_col
-        return (_json.dumps(buf),), out
-
-    return _keyed_batch_scan(
-        df,
-        by,
-        time_col,
-        "buf STRING",
-        (None,),
-        batch_fn,
-        state_ttl_s=gc_wall_s,
-        out_schema=out_schema,
-        ttl_clock="processing",
-    )
-
-
-def stream_smin(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-) -> DataFrame:
-    """Streaming smin (action.clj:2774-2804): smax over the negated
-    metric, negated back — the stored-best state machinery is shared
-    and nulls pass through (-NULL = NULL)."""
-    neg = df.withColumn(metric_col, -F.col(metric_col))
-    out = stream_smax(neg, by, time_col, metric_col)
-    return out.withColumn(metric_col, -F.col(metric_col))
-
-
-def stream_ddt(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    remove_neg: bool = False,
-) -> DataFrame:
-    """Streaming ddt/ddt-pos (action.clj:1041-1083): keyed state
-    (last_us, last_metric) carries the previous event across
-    micro-batches; the per-batch derivative is one vectorized
-    shift/diff. Null-metric events are skipped entirely (they never
-    become the new previous); zero time delta is skipped."""
-    import numpy as np
-
-    def batch_fn(s, pdf):
-        last_us, last_m = s
-        keep = pdf[metric_col].notna().to_numpy(dtype=bool)
-        pdf = pdf[keep].reset_index(drop=True)
-        n = len(pdf)
-        if not n:
-            return (last_us, last_m), None
-        t = _series_us(pdf[time_col]).astype("float64")
-        m = pdf[metric_col].to_numpy(dtype="float64")
-        prev_t = np.concatenate(([last_us if last_us is not None else np.nan], t[:-1]))
-        prev_m = np.concatenate(([last_m if last_m is not None else np.nan], m[:-1]))
-        dt = (t - prev_t) / 1_000_000.0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            diff = (m - prev_m) / dt
-        ok = np.isfinite(diff)
-        if remove_neg:
-            ok &= diff >= 0
-        out = pdf[ok].copy()
-        out[metric_col] = diff[ok]
-        return (int(t[-1]), float(m[-1])), out
-
-    return _keyed_batch_scan(
-        df, by, time_col, "last_us BIGINT, last_m DOUBLE", (None, None), batch_fn
-    )
-
-
-def stream_coalesce(
-    df: DataFrame,
-    duration_s: float,
-    fields: Sequence[str],
-    by: Sequence[str] = (),
-    time_col: str = "time",
-    ttl_col: str = "ttl",
-    state_col: str = "state",
-    default_ttl_s: float = 120.0,
-) -> DataFrame:
-    """Streaming ``coalesce`` (action.clj:721-791): keep the latest
-    event per ``fields`` tuple; every ``duration`` seconds of EVENT
-    time (the tick clock is the running max event time, not wall
-    time), flush all kept non-expired events. Expiry follows
-    event.clj:12-19: state == "expired" or age > ttl (default 120 s).
-
-    Keyed state carries {buffer, current_time, last_tick}; the
-    per-event recurrence is a Python loop — coalesce is an
-    alert-volume operator (one row per service×host per tick), never
-    a data-plane scan.
-    """
-    import json as _json
-
-    import pandas as pd
-
-    dur_us = int(round(duration_s * 1_000_000))
-    default_ttl_us = int(round(default_ttl_s * 1_000_000))
-    has_ttl = ttl_col in df.columns
-    has_state = state_col in df.columns
-
-    def _row_ser(pdf, i):
-        return {
-            k: _native(v.isoformat() if hasattr(v, "isoformat") else v)
-            for k, v in pdf.iloc[i].items()
-        }
-
-    def _expired(row, t_us, ct_us):
-        if has_state and row.get(state_col) == "expired":
-            return True
-        ttl_us = default_ttl_us
-        if has_ttl and row.get(ttl_col) is not None:
-            ttl_us = int(round(float(row[ttl_col]) * 1_000_000))
-        return ct_us - t_us > ttl_us
-
-    def batch_fn(st, pdf):
-        (blob,) = st
-        s = _json.loads(blob) if blob else {"buffer": {}, "ct": 0, "lt": None}
-        t = _series_us(pdf[time_col])
-        null_t = pdf[time_col].isna().to_numpy(dtype=bool)
-        emitted: list[dict] = []
-        for i in range(len(pdf)):
-            if null_t[i]:
-                continue
-            ti = int(t[i])
-            row = _row_ser(pdf, i)
-            s["ct"] = max(s["ct"], ti)
-            if _expired(row, ti, s["ct"]):
-                continue
-            key = _json.dumps([row.get(f) for f in fields])
-
-            def _update(cur):
-                # e/most-recent?: the stored event wins ties
-                if cur is not None and cur["__t__"] >= ti:
-                    return cur
-                return {"__t__": ti, "row": row}
-
-            if s["lt"] is None:
-                s["buffer"][key] = _update(s["buffer"].get(key))
-                s["lt"] = ti
-            elif s["ct"] < s["lt"] + dur_us:
-                s["buffer"][key] = _update(s["buffer"].get(key))
-            else:
-                s["buffer"][key] = _update(s["buffer"].get(key))
-                alive = {
-                    k: v
-                    for k, v in s["buffer"].items()
-                    if not _expired(v["row"], v["__t__"], s["ct"])
-                }
-                s["buffer"] = alive
-                s["lt"] = s["ct"]
-                emitted.extend(v["row"] for v in alive.values())
-        out = None
-        if emitted:
-            # revive EVERY timestamp column, not just time_col — a
-            # timestamp-typed payload column must round-trip the JSON
-            # buffer too (ADVICE r8 #2's per-key sibling)
-            out = _revive_datetime_cols(
-                pd.DataFrame(emitted, columns=list(pdf.columns)), pdf
-            )
-        return (_json.dumps(s),), out
-
-    if not by:
-        # single global coalesce (the reference's unkeyed form): one
-        # synthetic key -> one state group, same as the single-node
-        # reference. Alert-rate traffic; supply `by` to shard.
-        keyed = df.withColumn("__g__", F.lit(0))
-        out = _keyed_batch_scan(
-            keyed, ["__g__"], time_col, "state STRING", (None,), batch_fn,
-            out_schema=keyed.schema,
-        )
-        return out.drop("__g__")
-    return _keyed_batch_scan(df, by, time_col, "state STRING", (None,), batch_fn)
 
 
 # -- windowed aggregation twins (watermark + tumbling window) ---------------
@@ -1794,115 +813,6 @@ def stream_project(
     return _wfinish(_wgroup(df, duration_s, delay_s, by, time_col).agg(*aggs))
 
 
-def stream_moving_time_window(
-    df: DataFrame,
-    duration_s: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    gc_wall_s: float | None = None,
-) -> DataFrame:
-    """Streaming ``moving-time-window`` (action.clj:2596-2639): per
-    event, all of its key's events within the trailing ``duration``
-    seconds — a keyed-state buffer trimmed by exact µs bound (same
-    (-(dur-1µs), 0] range as the batch twin's range frame)."""
-    import json as _json
-
-    import pandas as pd
-
-    dur_us = int(round(duration_s * 1_000_000))
-    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-
-    def _row_ser(pdf, i):
-        return {
-            k: _native(v.isoformat() if hasattr(v, "isoformat") else v)
-            for k, v in pdf.iloc[i].items()
-        }
-
-    ev_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-        + f", events array<struct<{ev_struct}>>"
-    )
-
-    def _revive(e):
-        return _revive_ts_fields(e, ts_cols)
-
-    def batch_fn(st, pdf):
-        (buf_json,) = st
-        buf = _json.loads(buf_json) if buf_json else []  # [(t_us, row)]
-        t = _series_us(pdf[time_col])
-        events_col = []
-        for i in range(len(pdf)):
-            ti = int(t[i])
-            buf.append((ti, _row_ser(pdf, i)))
-            lo = ti - dur_us + 1
-            buf = [(tb, e) for tb, e in buf if tb >= lo]
-            events_col.append([_revive(e) for _, e in buf])
-        out = pdf.copy()
-        out["events"] = events_col
-        return (_json.dumps(buf),), out
-
-    return _keyed_batch_scan(
-        df,
-        by,
-        time_col,
-        "buf STRING",
-        (None,),
-        batch_fn,
-        state_ttl_s=gc_wall_s,
-        out_schema=out_schema,
-        ttl_clock="processing",
-    )
-
-
-def stream_expired(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    ttl_col: str | None = "ttl",
-    state_col: str | None = "state",
-    keep_expired: bool = True,
-) -> DataFrame:
-    """Streaming ``expired``/``not-expired`` (action.clj:427-474):
-    the stream clock is the running max event time PER KEY (the
-    reference's clock is per-stream; a key's fork owns its clock
-    downstream of `by`), carried in keyed state; expiry follows
-    event.clj:12-19 (state == "expired" or age > coalesce(ttl, 120)).
-    """
-    import numpy as np
-
-    has_ttl = ttl_col is not None and ttl_col in df.columns
-    has_state = state_col is not None and state_col in df.columns
-
-    def batch_fn(s, pdf):
-        (mx,) = s
-        has_time = pdf[time_col].notna().to_numpy(dtype=bool)
-        t = _series_us(pdf[time_col]).astype("float64")
-        t = np.where(has_time, t, -np.inf)  # null time: no age, no clock
-        run = np.maximum.accumulate(t)
-        if mx is not None:
-            run = np.maximum(run, float(mx))
-        age_s = (run - t) / 1_000_000.0
-        if has_ttl:
-            ttl = pdf[ttl_col].astype("float64").fillna(120.0).to_numpy()
-        else:
-            ttl = np.full(len(pdf), 120.0)
-        # null time ⇒ not expired-by-age (batch twin's null-safe rule)
-        exp = (age_s > ttl) & has_time
-        if has_state:
-            exp |= (pdf[state_col] == "expired").to_numpy(dtype=bool)
-        out = pdf[exp if keep_expired else ~exp]
-        finite = run[np.isfinite(run)]
-        new_mx = float(finite[-1]) if len(finite) else mx
-        return (new_mx,), out
-
-    return _keyed_batch_scan(
-        df, by, time_col, "mx DOUBLE", (None,), batch_fn
-    )
-
-
 def stream_sessionize(
     df: DataFrame,
     gap_s: float,
@@ -1935,7 +845,1326 @@ def stream_sessionize(
     )
 
 
-# The zscore twins fold Decimal moments under this precision (a
+def stream_smax_jvm(
+    df: DataFrame,
+    by: Sequence[str],
+    time_col: str = "time",
+    metric_col: str = "metric",
+) -> DataFrame:
+    """Pure-JVM smax tier (VERDICT r7 ask #1b): keyed streaming
+    aggregation ``max(struct(metric, -t, row))`` — scalar-struct
+    state in Spark's own state store, NO Python on the path at all.
+
+    Emission grain is the trade vs :func:`stream_smax`, which
+    forwards the best-so-far event for EVERY input event
+    (action.clj:2742-2772's per-event Riemann semantics); this tier
+    emits one best-so-far row per key per micro-batch that touched
+    the key (update output mode) — at 1M+ hot keys that is the
+    emission grain an alert consumer can absorb anyway, and the last
+    update per key is bit-equal to the batch twin's final best
+    (parity pytest). Tie-breaks deterministically: strictly greater
+    metric wins, then the EARLIEST event (:func:`stream_smax`'s
+    first-winner-on-ties rule under time-ordered arrival); a NULL
+    metric never beats a non-null one (struct ordering sorts nulls
+    lowest), diverging from :func:`stream_smax`'s "a null first event
+    occupies the slot" edge.
+
+    State per key is one struct row (bounded by key cardinality, no
+    row buffers); use ``.outputMode("update")`` on the writer."""
+    is_ts = dict(df.dtypes)[time_col].startswith("timestamp")
+    tnum = (
+        F.unix_micros(F.col(time_col))
+        if is_ts
+        else F.col(time_col).cast("double")
+    )
+    best = F.max(
+        F.struct(
+            F.col(metric_col).alias("__m__"),
+            (-tnum).alias("__nt__"),
+            F.struct(*[F.col(c) for c in df.columns]).alias("__row__"),
+        )
+    ).alias("__best__")
+    return df.groupBy(*[F.col(c) for c in by]).agg(best).select("__best__.__row__.*")
+
+
+def stream_smin_jvm(
+    df: DataFrame,
+    by: Sequence[str],
+    time_col: str = "time",
+    metric_col: str = "metric",
+) -> DataFrame:
+    """Pure-JVM smin tier: :func:`stream_smax_jvm` over the negated
+    metric, negated back (the same composition as the per-key
+    :func:`stream_smin`; -NULL = NULL so null metrics still lose)."""
+    neg = df.withColumn(metric_col, -F.col(metric_col))
+    out = stream_smax_jvm(neg, by, time_col, metric_col)
+    return out.withColumn(metric_col, -F.col(metric_col))
+
+
+# -- keyed state shell --------------------------------------------------------
+# Every keyed streaming operator below is ONE segment-grain fold,
+# ``fold(carry, segs, pdf) -> out_pdf``: ``pdf`` is a micro-batch
+# slice in event-time order within each key, every key is exactly one
+# contiguous segment (``segs``), and ``carry`` maps a key to its
+# JSON-able state, read at segment starts and written back per key.
+# The shell owns everything else — key identity, grouping, time sort,
+# TTL eviction and the carry codec — and runs the fold in one of two
+# layouts, chosen by ``shards`` alone:
+#
+# - per key (``shards=None``): one applyInPandasWithState group per
+#   ``by`` tuple, the slice is one segment and the carry holds one key;
+# - sharded (``shards=N``): one group per ``pmod(xxhash64(keys), N)``
+#   and one carry map per shard. applyInPandasWithState calls Python
+#   once per GROUP per micro-batch, so at 10^6 keys the per-key
+#   interpreter round-trips, not the fold, dominate (PERF §39: ewma
+#   7.9k ev/s per key vs 214k sharded). The trade: the whole shard map
+#   round-trips per batch — right when most keys are touched each
+#   batch; sparse-update workloads stay per key.
+
+_SHARD_COL = "__shard__"
+_NULL_KEY = "\x00null"
+_KEY_SEP = "\x1f"
+_INT_TYPES = ("tinyint", "smallint", "int", "bigint", "long")
+_FLOAT_TYPES = ("float", "double")
+
+# ewma: key runs longer than this take the scalar loop — the
+# vectorized stepper costs O(max run) numpy dispatches per batch, so
+# one hot key must not set the step count for the whole shard.
+_EWMA_VEC_CAP = 512
+
+
+class _Segs:
+    """The key segments of a slice: rows ``starts[i]:ends[i]`` are all
+    of key ``keys[i]``'s rows, in event-time order; no key repeats."""
+
+    __slots__ = ("keys", "starts", "ends")
+
+    def __init__(self, keys, starts, ends):
+        self.keys, self.starts, self.ends = keys, starts, ends
+
+    def __iter__(self):
+        return zip(self.keys, self.starts.tolist(), self.ends.tolist())
+
+    def filter(self, keep):
+        """The segments of ``pdf[keep]``; keys left without rows drop."""
+        import numpy as np
+
+        pos = np.concatenate(([0], np.cumsum(keep)))
+        s, e = pos[self.starts], pos[self.ends]
+        live = e > s
+        keys = [k for k, x in zip(self.keys, live.tolist()) if x]
+        return _Segs(keys, s[live], e[live])
+
+
+def _shard_key_strings(pdf, key_cols, key_dtypes, nulls=None):
+    """Composite string key per row under Spark's grouping identity.
+
+    - NULL folds under a sentinel distinct from any real value. Arrow
+      hands a float/double column's NULL and NaN to pandas alike as
+      NaN, so ``nulls`` ({col: bool array}) carries the real NULL mask
+      for those columns; Spark groups NaN apart from NULL and so does
+      this. Without a mask NaN reads as NULL (right for integral
+      columns, which Arrow upcasts to float64 when they hold NULLs).
+    - -0.0 and 0.0 are one key, as in Spark's grouping (and in
+      ``xxhash64``, so both land in one shard).
+    - TYPE-STABLE across micro-batches: integral Spark types format
+      through int(v), so an int64 key seen as float64 in a
+      NULL-bearing slice still reads "7", not "7.0".
+    - INJECTIVE under adversarial string values: a value containing
+      the separator or the escape byte is escaped (\\x00 -> \\x00"0",
+      \\x1f -> \\x00"1") before joining, so escaped values never
+      contain a bare separator and can never spell the null sentinel
+      (whose second byte 'n' follows \\x00 only in the sentinel)."""
+
+    def esc(s):
+        if "\x00" in s or _KEY_SEP in s:
+            return s.replace("\x00", "\x00" + "0").replace(_KEY_SEP, "\x00" + "1")
+        return s
+
+    def conv_for(dtype):
+        if dtype in _INT_TYPES:
+            return lambda v: str(int(v))
+        if dtype in _FLOAT_TYPES:
+            return lambda v: "NaN" if v != v else ("0.0" if v == 0 else repr(v))
+        return lambda v: esc(str(v))
+
+    def strings(c, dtype):
+        conv = conv_for(dtype)
+        vals = pdf[c].tolist()
+        mask = nulls.get(c) if nulls else None
+        if mask is None:
+            return [_NULL_KEY if v is None or v != v else conv(v) for v in vals]
+        return [_NULL_KEY if m else conv(v) for v, m in zip(vals, mask.tolist())]
+
+    cols = [strings(c, t) for c, t in zip(key_cols, key_dtypes)]
+    if len(cols) == 1:
+        return cols[0]
+    return [_KEY_SEP.join(row) for row in zip(*cols)]
+
+
+def _is_null(v):
+    if v is None:
+        return True
+    if isinstance(v, float) or hasattr(v, "isoformat"):
+        return v != v  # NaN, NaT
+    return False
+
+
+def _value_codec(dtype: str):
+    """``(enc, dec)`` carrying one cell of Spark type ``dtype`` through
+    the JSON carry: ``dec(enc(v)) == v`` for the value pandas hands
+    the fold, and NULL (None/NaN/NaT) encodes as None. Types JSON
+    cannot hold (timestamps, dates, decimals, binary, day-time
+    intervals) get a lossless text or integer form."""
+    import datetime
+    from decimal import Decimal
+
+    import pandas as pd
+
+    if dtype.startswith("timestamp"):
+        enc, dec = (lambda v: v.isoformat()), pd.Timestamp
+    elif dtype == "date":
+        enc, dec = (lambda v: v.isoformat()), datetime.date.fromisoformat
+    elif dtype.startswith("decimal"):
+        enc, dec = str, Decimal
+    elif dtype == "binary":
+        enc, dec = (lambda v: bytes(v).hex()), bytes.fromhex
+    elif dtype.startswith("interval"):
+        enc, dec = (lambda v: int(v.value)), (lambda v: pd.Timedelta(v, unit="ns"))
+    else:
+        enc, dec = _native, (lambda v: v)
+    return (
+        lambda v: None if _is_null(v) else enc(v),
+        lambda v: None if v is None else dec(v),
+    )
+
+
+def _json_cell(v):
+    """``json.dumps`` default for nested cells (arrays, structs, maps):
+    a canonical JSON form, so two cells are equal iff their dumps are."""
+    import numpy as np
+
+    if isinstance(v, np.ndarray):
+        return v.tolist()
+    if isinstance(v, np.generic):
+        return v.item()
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v).hex()
+    if hasattr(v, "isoformat"):
+        return v.isoformat()
+    return str(v)
+
+
+def _ddl(fields) -> str:
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
+
+
+def _keyed_scan(
+    df: DataFrame,
+    by,
+    time_col: str,
+    fold,
+    shards: int | None = None,
+    out_schema: str | None = None,
+    extra_out: str | None = None,
+    state_ttl_s: float | None = None,
+    ttl_clock: str = "event",
+) -> DataFrame:
+    """Run ``fold`` as keyed streaming state (see the section note).
+
+    Output rows are the fold's rows, shaped like the input plus the
+    ``extra_out`` DDL columns, or exactly ``out_schema`` when given.
+    Within a micro-batch each key's rows fold in event-time order,
+    time ties in arrival order.
+
+    ``state_ttl_s`` is the reference's `by` fork GC (action.clj:1559-
+    1582 :fork-ttl): a key idle past the ttl loses its carry — its next
+    event starts fresh — so state stays bounded by the active key set.
+
+    - per key: a GroupState timeout on ``ttl_clock`` — ``"event"``
+      (watermark-driven; needs a watermark on ``df``, and Spark then
+      drops late rows before the operator) or ``"processing"``
+      (wall clock: the reference's :gc-interval timer, no watermark,
+      late rows still delivered);
+    - sharded: evicted INSIDE the shard map on the event clock, which
+      shard-level GroupState timeouts cannot express per key: before
+      the fold a key whose gap since its last event exceeds the ttl
+      restarts from scratch, and after it keys idle past the ttl
+      behind the shard's running max event time are dropped.
+
+    The carry is state ``carry STRING``: JSON of the key's carry (per
+    key) or of ``{"c": carry map, "t": last event µs per key}`` (sharded;
+    ``"t"`` only with a ttl)."""
+    import json as _json
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    key_cols = list(by)
+    dtypes = dict(df.dtypes)
+    key_dtypes = [dtypes[c] for c in key_cols]
+    if out_schema is None:
+        out_schema = _ddl(df.schema.fields) + (f", {extra_out}" if extra_out else "")
+    ttl_us = int(round(state_ttl_s * 1_000_000)) if state_ttl_s else None
+    one_key = ""
+    masks, helper_cols = {}, []
+    if shards:
+        masks = {
+            c: f"__null{i}__"
+            for i, c in enumerate(key_cols)
+            if dtypes[c] in _FLOAT_TYPES
+        }
+        src = df.withColumn(
+            _SHARD_COL,
+            F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(shards)),
+        )
+        for c, m in masks.items():
+            src = src.withColumn(m, F.col(c).isNull())
+        helper_cols = [_SHARD_COL, *masks.values()]
+        group = src.groupBy(F.col(_SHARD_COL))
+        timeout = GroupStateTimeout.NoTimeout
+    else:
+        # the state store keys a group by its key's raw bytes, which
+        # would split -0.0 from 0.0 (and one NaN bit pattern from
+        # another) across micro-batches: group float keys on their
+        # canonical value, as Spark's own grouping does
+        canon = {
+            c: f"__key{i}__"
+            for i, c in enumerate(key_cols)
+            if dtypes[c] in _FLOAT_TYPES
+        }
+        src = df
+        for c, h in canon.items():
+            x = F.col(c)
+            src = src.withColumn(
+                h,
+                F.when(F.isnan(x), F.lit(float("nan")))
+                .when(x == 0, F.lit(0.0))
+                .otherwise(x)
+                .cast(dtypes[c]),
+            )
+        helper_cols = list(canon.values())
+        group = src.groupBy(*[F.col(canon.get(c, c)) for c in key_cols])
+        timeout = (
+            GroupStateTimeout.NoTimeout
+            if not ttl_us
+            else GroupStateTimeout.ProcessingTimeTimeout
+            if ttl_clock == "processing"
+            else GroupStateTimeout.EventTimeTimeout
+        )
+
+    def segment(pdf):
+        """The shard slice regrouped: one contiguous segment per key,
+        keys in first-seen order, event-time order kept inside each."""
+        nulls = {c: pdf[m].to_numpy(dtype=bool) for c, m in masks.items()}
+        pdf = pdf.drop(columns=helper_cols)
+        codes, uniq = pd.factorize(
+            np.asarray(_shard_key_strings(pdf, key_cols, key_dtypes, nulls), dtype=object)
+        )
+        if (codes[1:] < codes[:-1]).any():
+            order = np.argsort(codes, kind="stable")
+            codes = codes[order]
+            pdf = pdf.take(order)
+            pdf.index = pd.RangeIndex(len(pdf))
+        starts = np.flatnonzero(np.concatenate(([True], codes[1:] != codes[:-1])))
+        ends = np.append(starts[1:], len(codes))
+        return pdf, _Segs(uniq[codes[starts]].tolist(), starts, ends)
+
+    def evict_idle(seen, carry, segs, tv):
+        """Restart rule, BEFORE the fold: a key whose gap since its
+        last event exceeds the ttl folds from scratch."""
+        for k, s0, _ in segs:
+            prev = seen.get(k)
+            if prev is not None and int(tv[s0]) - prev > ttl_us:
+                del seen[k]
+                carry.pop(k, None)
+
+    def bound_idle(seen, carry, segs, tv):
+        """Memory bound, AFTER the fold: keys idle past the ttl on the
+        shard's event clock drop even if they never return."""
+        for k, _, e0 in segs:
+            t_last = int(tv[e0 - 1])
+            prev = seen.get(k)
+            seen[k] = t_last if prev is None else max(prev, t_last)
+        cutoff = max(seen.values()) - ttl_us
+        for k in [k for k, t in seen.items() if t < cutoff]:
+            del seen[k]
+            carry.pop(k, None)
+
+    def fn(key, pdf_iter, state: GroupState):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        chunks = [p for p in pdf_iter if len(p)]
+        if not chunks:
+            return
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        if not pdf[time_col].is_monotonic_increasing:
+            pdf = pdf.sort_values(time_col, kind="mergesort", ignore_index=True)
+        if shards:
+            blob = _json.loads(state.get[0]) if state.exists else {}
+            carry = blob.get("c", {})
+            seen = blob.get("t", {})
+            pdf, segs = segment(pdf)
+            if ttl_us:
+                tv = _series_us(pdf[time_col])
+                evict_idle(seen, carry, segs, tv)
+            out = fold(carry, segs, pdf)
+            if ttl_us:
+                bound_idle(seen, carry, segs, tv)
+            state.update((_json.dumps({"c": carry, "t": seen} if ttl_us else {"c": carry}),))
+        else:
+            if helper_cols:
+                pdf = pdf.drop(columns=helper_cols)
+            carry = {one_key: _json.loads(state.get[0])} if state.exists else {}
+            segs = _Segs([one_key], np.array([0]), np.array([len(pdf)]))
+            out = fold(carry, segs, pdf)
+            if one_key in carry:
+                state.update((_json.dumps(carry[one_key]),))
+                if ttl_us and ttl_clock == "processing":
+                    state.setTimeoutDuration(ttl_us // 1000)
+                elif ttl_us:
+                    # clamp above the watermark: an out-of-order tail
+                    # event can put last-event + ttl BEHIND the
+                    # watermark, which Spark rejects; the key then
+                    # just times out at the next bound
+                    t = pdf[time_col].max()
+                    mx = (
+                        int(t.value // 1_000_000)
+                        if hasattr(t, "value")
+                        else int(float(t) * 1000)
+                    )
+                    wm = state.getCurrentWatermarkMs()
+                    state.setTimeoutTimestamp(max(mx + ttl_us // 1000, wm + 1))
+        if out is not None and len(out):
+            yield out
+
+    return group.applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType="carry STRING",
+        outputMode="append",
+        timeoutConf=timeout,
+    )
+
+
+def _cell_native(v):
+    """One buffered cell → JSON-able (timestamps to isoformat — the
+    row buffers' rule, applied per value)."""
+    return _native(v.isoformat() if hasattr(v, "isoformat") else v)
+
+
+class _RawCols:
+    """Cell access for the row-buffer folds, adaptive to the touch
+    density the batch size implies. ``pdf[c].iloc[i]`` per touch pays
+    a Series lookup + slice object; two regimes fix it:
+
+    - small/medium batches (≤ ``_DENSE_MAX`` rows — where a fold may
+      touch MOST rows, e.g. every key buffering at 1M distinct
+      keys): one lazy ``.tolist()`` per touched column, then plain
+      list indexing (measured 2-2.7× on the §43 worst case);
+    - huge batches (a 10M-row availableNow pass touching only a few
+      thousand buffered cells): cached-Series ``.iat``/``.iloc`` —
+      whole-column materialization there costs more than it saves.
+
+    Both regimes yield the same values (datetime64 → pd.Timestamp →
+    isoformat, numpy scalars native via _native)."""
+
+    _DENSE_MAX = 2_000_000
+
+    def __init__(self, pdf):
+        self._pdf = pdf
+        self._dense = len(pdf) <= self._DENSE_MAX
+        self._cols: dict = {}
+
+    def _series(self, c):
+        got = self._cols.get(c)
+        if got is None:
+            got = self._cols[c] = (
+                self._pdf[c].tolist() if self._dense else self._pdf[c]
+            )
+        return got
+
+    def cell(self, c, i):
+        col = self._series(c)
+        return _cell_native(col[i] if self._dense else col.iat[i])
+
+    def row(self, cols, i):
+        return {c: self.cell(c, i) for c in cols}
+
+    def slice_native(self, c, i, j):
+        col = self._series(c)
+        vals = col[i:j] if self._dense else col.iloc[i:j]
+        return [_cell_native(v) for v in vals]
+
+
+def _revive_datetime_cols(bdf, like_pdf):
+    import pandas as pd
+
+    for c in like_pdf.columns:
+        if str(like_pdf[c].dtype).startswith("datetime64"):
+            # isoformat drops the fraction of a whole second, so one
+            # column mixes two layouts: parse each as ISO 8601
+            bdf[c] = pd.to_datetime(bdf[c], format="ISO8601")
+    return bdf
+
+
+def _revive_ts_fields(e, ts_cols):
+    """One buffered JSON row dict → emission: isoformat strings back
+    to pd.Timestamp for EVERY timestamp-typed column — a
+    timestamp-typed payload field must round-trip the JSON buffer
+    exactly like the time column (ADVICE r8 #2 and siblings)."""
+    import pandas as pd
+
+    rv = {c: pd.Timestamp(e[c]) for c in ts_cols if e.get(c) is not None}
+    return {**e, **rv} if rv else e
+
+
+def _events_col_ddl(df: DataFrame) -> str:
+    return f"events array<struct<{_ddl(df.schema.fields)}>>"
+
+
+# -- keyed operators: one fold each -------------------------------------------
+# ``shards`` picks the shell layout only; a fold sees the same segments
+# either way, so per-key and sharded runs are bit-identical by
+# construction (parity pytests pin both against the batch twins).
+
+
+def stream_changed(
+    df: DataFrame,
+    fieldname: str,
+    by: Sequence[str],
+    time_col: str = "time",
+    init=None,
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming ``changed``: emits rows whose ``field`` differs
+    (null-safe, matching the batch twin's eqNullSafe) from the previous
+    row of the same key. ``init`` is the reference's :init — the value
+    each key's first event is compared against (action.clj:334-360).
+
+    The compare is ONE vectorized shift over the slice: only segment
+    starts read the carry and only segment ends write it, so the
+    Python work is O(keys in batch), not O(rows). The last value
+    carries through :func:`_value_codec` (timestamps, dates, decimals,
+    binary and intervals included); nested fields (arrays, structs,
+    maps) compare and carry as canonical JSON."""
+    import json as _json
+
+    import numpy as np
+    import pandas as pd
+
+    dtype = dict(df.dtypes)[fieldname]
+    nested = dtype.startswith(("array", "struct", "map"))
+    if nested:
+        def as_json(v):
+            return None if v is None else _json.dumps(v, default=_json_cell)
+
+        enc, dec = (lambda v: v), (lambda v: v)
+        init = as_json(init)
+    else:
+        enc, dec = _value_codec(dtype)
+
+    def fold(carry, segs, pdf):
+        vals = pdf[fieldname]
+        if nested:
+            vals = pd.Series([as_json(v) for v in vals.tolist()], dtype=object)
+        prev = vals.shift(1)
+        first = [dec(carry[k]) if k in carry else init for k in segs.keys]
+        if prev.dtype.kind in "fmM":  # NULL as the column's own NA
+            na = np.nan if prev.dtype.kind == "f" else pd.NaT
+            first = [na if v is None else v for v in first]
+        # ONE positional scatter per batch — per-element .iloc writes
+        # cost more than the whole fold at 1-row segments
+        prev.iloc[segs.starts] = first
+        same = (vals == prev) | (vals.isna() & prev.isna())
+        for k, v in zip(segs.keys, vals.iloc[segs.ends - 1].tolist()):
+            carry[k] = enc(v)
+        return pdf[~same.to_numpy(dtype=bool)]
+
+    return _keyed_scan(df, by, time_col, fold, shards)
+
+
+def stream_throttle(
+    df: DataFrame,
+    count: int,
+    duration_s: float,
+    by: Sequence[str],
+    time_col: str = "time",
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming anchored-window throttle (action.clj:1163-1217): per
+    key carry (anchor_us, n); exact integer-µs window math like the
+    batch twin. The anchored recurrence is inherently sequential, so
+    the fold loops over a primitive int list, never per-row dicts."""
+    import numpy as np
+
+    dur_us = int(round(duration_s * 1_000_000))
+
+    def fold(carry, segs, pdf):
+        tv = _series_us(pdf[time_col]).tolist()
+        keep = np.empty(len(tv), dtype=bool)
+        for k, s0, e0 in segs:
+            anchor, n = carry.get(k, (None, 0))
+            for i in range(s0, e0):
+                t = tv[i]
+                if anchor is None or t >= anchor + dur_us:
+                    anchor, n = t, 1
+                    keep[i] = True
+                elif n < count:
+                    n += 1
+                    keep[i] = True
+                else:
+                    keep[i] = False
+            carry[k] = (anchor, n)
+        return pdf[keep]
+
+    return _keyed_scan(df, by, time_col, fold, shards)
+
+
+def stream_ewma(
+    df: DataFrame,
+    r: float,
+    by: Sequence[str],
+    time_col: str = "time",
+    metric_col: str = "metric",
+    state_ttl_s: float | None = None,
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming ewma-timeless (action.clj:1248-1276): keyed running
+    average, identical double recurrence (same fold order) as the
+    batch twin. Null metrics pass through as null without touching
+    the state. ``state_ttl_s`` evicts idle keys (fork GC; per key it
+    is a watermark timeout, so pass a watermarked input).
+
+    A slice holding one key runs the scalar loop. A slice of many keys
+    (the sharded layout) is VECTORIZED across keys: step j updates
+    every key's j-th event at once with the SAME scalar expression
+    ``r*v + (1.0-r)*m`` (numpy float64 scalar ops are IEEE doubles, so
+    each key sees the scalar loop's op order — a clean-machine split
+    measured the per-row loop at ~62 % of the sharded tier). Keys
+    whose run exceeds ``_EWMA_VEC_CAP`` take the scalar loop over
+    their rows."""
+    import numpy as np
+    import pandas as pd
+
+    def fold(carry, segs, pdf):
+        vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
+        out = np.empty(len(vals))
+        lens = segs.ends - segs.starts
+        vec = (lens <= _EWMA_VEC_CAP) if len(segs.keys) > 1 else np.zeros(1, bool)
+        if vec.any():
+            keys = [k for k, x in zip(segs.keys, vec.tolist()) if x]
+            s_starts, s_lens = segs.starts[vec], lens[vec]
+            m0 = [carry.get(k) for k in keys]
+            seen = np.array([v is not None for v in m0], dtype=bool)
+            m = np.array([0.0 if v is None else v for v in m0], dtype=np.float64)
+            # length-descending order → the keys still active at step
+            # j are a prefix; total work is Σ lens, no padding
+            order = np.argsort(-s_lens, kind="stable")
+            s_starts, s_lens, m, seen = s_starts[order], s_lens[order], m[order], seen[order]
+            for j in range(int(s_lens[0])):
+                a = int(np.searchsorted(-s_lens, -(j + 1), side="right"))
+                pos = s_starts[:a] + j
+                v = vals[pos]
+                real = v == v
+                stepped = r * v + (1.0 - r) * m[:a]
+                m[:a] = np.where(real, stepped, m[:a])
+                out[pos] = np.where(real, stepped, np.nan)
+                seen[:a] |= real
+            for i in np.flatnonzero(seen).tolist():
+                carry[keys[order[i]]] = float(m[i])
+        if not vec.all():
+            vl = vals.tolist()
+            for (k, lo, hi), x in zip(segs, vec.tolist()):
+                if x:
+                    continue
+                m = carry.get(k)
+                for i in range(lo, hi):
+                    v = vl[i]
+                    if v != v:  # null/NaN input → emit null, keep state
+                        out[i] = np.nan
+                    else:
+                        m = r * v + (1.0 - r) * (m if m is not None else 0.0)
+                        out[i] = m
+                if m is not None:
+                    carry[k] = m
+        res = pdf.copy()
+        # NaN in a float64 column round-trips to SQL NULL via Arrow
+        res[metric_col] = pd.array(out, dtype="float64")
+        return res
+
+    return _keyed_scan(df, by, time_col, fold, shards, state_ttl_s=state_ttl_s)
+
+
+def stream_smax(
+    df: DataFrame,
+    by: Sequence[str],
+    time_col: str = "time",
+    metric_col: str = "metric",
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming smax (action.clj:2742-2772): per input event emit the
+    best-so-far event of its key; strict > keeps the first winner on
+    ties. The carry holds the best row (one dict per key, serialized
+    once per batch per key); the winner scan walks a primitive float64
+    array and the output materializes as two positional gathers
+    (batch-sourced winners + carry-sourced re-emits) merged back into
+    event order — no per-event dict building.
+    :func:`stream_smax_jvm` is the per-batch-grain alternative."""
+    import numpy as np
+    import pandas as pd
+
+    def fold(carry, segs, pdf):
+        n = len(pdf)
+        if not n:
+            return pdf
+        cols = list(pdf.columns)
+        raw = _RawCols(pdf)
+        v = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
+        emit: list = []  # ("b", idx) batch winner | ("o", dict) carried best
+        for k, s0, e0 in segs:
+            st = carry.get(k)
+            if st is None:
+                have, best_v, best_ref = False, -np.inf, None
+            else:
+                have = True
+                best_v = -np.inf if st["m"] is None else float(st["m"])
+                best_ref = ("o", st["b"])
+            for i in range(s0, e0):
+                x = v[i]
+                if not have or (x == x and x > best_v):
+                    best_ref = ("b", i)
+                    have = True
+                    if x == x:
+                        best_v = x
+                emit.append(best_ref)
+            if best_ref is not None and best_ref[0] == "b":
+                i = best_ref[1]
+                carry[k] = {
+                    "m": None if v[i] != v[i] else float(v[i]),
+                    "b": raw.row(cols, i),
+                }
+        b_pos = [p for p, e in enumerate(emit) if e[0] == "b"]
+        o_pos = [p for p, e in enumerate(emit) if e[0] == "o"]
+        frames = []
+        if b_pos:
+            frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
+        if o_pos:
+            odf = pd.DataFrame(
+                {c: [emit[p][1][c] for p in o_pos] for c in cols}, columns=cols
+            )
+            frames.append(_revive_datetime_cols(odf, pdf))
+        if len(frames) == 1:
+            return frames[0]
+        out = pd.concat(frames, ignore_index=True)
+        # concat row q holds emit position (b_pos+o_pos)[q]; restore
+        # event order by sorting rows on that position
+        return out.iloc[np.argsort(np.asarray(b_pos + o_pos), kind="stable")]
+
+    return _keyed_scan(df, by, time_col, fold, shards)
+
+
+def stream_smin(
+    df: DataFrame,
+    by: Sequence[str],
+    time_col: str = "time",
+    metric_col: str = "metric",
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming smin (action.clj:2774-2804): smax over the negated
+    metric, negated back — nulls pass through (-NULL = NULL)."""
+    neg = df.withColumn(metric_col, -F.col(metric_col))
+    out = stream_smax(neg, by, time_col, metric_col, shards=shards)
+    return out.withColumn(metric_col, -F.col(metric_col))
+
+
+def stream_cond_dt(
+    df: DataFrame,
+    cond,
+    dt_s: float,
+    by: Sequence[str],
+    time_col: str = "time",
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming cond-dt family (action.clj:476-508): per key carry
+    (ok, flip_us); valid events pass once the condition has held
+    continuously for more than dt seconds.
+
+    ``cond`` accepts the SAME condition vectors as the batch twins
+    (``[":>", "metric", 100]`` — compiled by
+    :func:`mirabelle_spark.conditions.compile_condition_pandas` and
+    evaluated once over the whole slice) or a python row-predicate
+    for custom logic (applied row-wise, the slow path). PERF §39
+    (sharded): 552k ev/s at 1M keys vs 5.6k per key."""
+    import numpy as np
+
+    dt_us = int(round(dt_s * 1_000_000))
+    if callable(cond):
+        def valid_series(pdf):
+            return pdf.apply(cond, axis=1).to_numpy(dtype=bool)
+    else:
+        from mirabelle_spark.conditions import compile_condition_pandas
+
+        _pred = compile_condition_pandas(cond)
+
+        def valid_series(pdf):
+            return _pred(pdf).to_numpy(dtype=bool)
+
+    def fold(carry, segs, pdf):
+        tv = _series_us(pdf[time_col]).tolist()
+        valid = valid_series(pdf).tolist()
+        keep = np.empty(len(tv), dtype=bool)
+        for k, s0, e0 in segs:
+            ok, flip = carry.get(k, (False, None))
+            for i in range(s0, e0):
+                t, va = tv[i], valid[i]
+                if va and not ok:
+                    ok, flip = True, t
+                elif not va:
+                    ok, flip = False, None
+                keep[i] = va and ok and t > flip + dt_us
+            carry[k] = (ok, flip)
+        return pdf[keep]
+
+    return _keyed_scan(df, by, time_col, fold, shards)
+
+
+def stream_stable(
+    df: DataFrame,
+    dt_s: float,
+    field: str,
+    by: Sequence[str],
+    time_col: str = "time",
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming ``stable`` (action.clj:2053-2138): per key value-run
+    state; events pass once their run's ``field`` value has stayed
+    identical for more than ``dt`` seconds. The run's early events
+    buffer in the carry and flush at confirmation; a value change
+    drops an unconfirmed buffer (flap suppression). Out-of-order
+    events (time < the key's running max) are dropped, like the
+    reference.
+
+    Python work per batch is O(value-runs), not O(rows): run
+    boundaries come from one vectorized null-safe shift compare,
+    confirmation points from searchsorted, confirmed-run emission
+    from slice coalescing (one concat at the end), and only
+    UNCONFIRMED rows (the flap buffer, carried as parallel column
+    arrays {col: [values]}) pay per-value JSON conversion."""
+    import numpy as np
+    import pandas as pd
+
+    dt_us = int(round(dt_s * 1_000_000))
+
+    def _eq(a, b):
+        if a is None or b is None:
+            return a is None and b is None
+        if isinstance(a, float) and isinstance(b, float) and a != a and b != b:
+            return True
+        return a == b
+
+    def _store(v):
+        # keep NaN as NaN in the carry: Python json round-trips it and
+        # _eq treats NaN==NaN; _native's NaN→None fold would make
+        # _eq(nan, None) False and reset the run at every micro-batch
+        # boundary (ADVICE r8 #1)
+        if isinstance(v, float) and v != v:
+            return float(v)
+        return _native(v)
+
+    def fold(carry, segs, pdf):
+        n = len(pdf)
+        if not n:
+            return pdf
+        t = _series_us(pdf[time_col])
+        # out-of-order drop + running-max update per key: each segment
+        # is time-sorted, so only rows below the key's STORED max can
+        # drop, and the new max is the segment's last timestamp.
+        # s = [max_us, has, value, flip_us, confirmed]
+        keep = np.ones(n, dtype=bool)
+        for k, s0, e0 in segs:
+            st = carry.get(k)
+            if st is None:
+                carry[k] = {"s": [int(t[e0 - 1]), False, None, None, False], "b": None}
+                continue
+            if st["s"][0] is not None:
+                keep[s0:e0] = t[s0:e0] >= st["s"][0]
+                st["s"][0] = max(st["s"][0], int(t[e0 - 1]))
+            else:
+                st["s"][0] = int(t[e0 - 1])
+        if not keep.all():
+            pdf = pdf[keep].reset_index(drop=True)
+            t = t[keep]
+            segs = segs.filter(keep)
+            n = len(pdf)
+            if not n:
+                return pdf
+        # run boundaries: key change OR null-safe field value change
+        fs = pdf[field]
+        same_val = (
+            fs.eq(fs.shift()) | (fs.isna() & fs.isna().shift(fill_value=False))
+        ).to_numpy(dtype=bool)
+        same_val[segs.starts] = False
+        rstarts = np.flatnonzero(~same_val)
+        rends = np.append(rstarts[1:], n)
+        run_seg = np.searchsorted(segs.starts, rstarts, side="right") - 1
+        vals = fs.tolist()
+        cols = list(pdf.columns)
+        raw = _RawCols(pdf)
+
+        parts: list = []  # ordered mix of [i, j] slices and DataFrames
+
+        def emit_slice(i, j):
+            if parts and isinstance(parts[-1], list) and parts[-1][1] == i:
+                parts[-1][1] = j  # coalesce adjacent confirmed slices
+            else:
+                parts.append([i, j])
+
+        for i, j, si in zip(rstarts.tolist(), rends.tolist(), run_seg.tolist()):
+            st = carry[segs.keys[si]]
+            s = st["s"]
+            v = vals[i]
+            if not (s[1] and _eq(v, s[2])):
+                # value changed: unconfirmed buffer is dropped
+                s[1:5] = [True, _store(v), int(t[i]), False]
+                st["b"] = None
+            if not s[4]:
+                kk = i + int(np.searchsorted(t[i:j], s[3] + dt_us, side="right"))
+                if kk == j:  # run not yet stable: buffer the segment
+                    if st["b"] is None:
+                        st["b"] = {c: [] for c in cols}
+                    for c in cols:
+                        st["b"][c].extend(raw.slice_native(c, i, j))
+                else:  # confirmed at kk: flush buffer + whole run
+                    s[4] = True
+                    if st["b"] is not None and next(iter(st["b"].values())):
+                        bdf = pd.DataFrame({c: st["b"][c] for c in cols}, columns=cols)
+                        parts.append(_revive_datetime_cols(bdf, pdf))
+                    st["b"] = None
+                    emit_slice(i, j)
+            else:
+                emit_slice(i, j)
+        if not parts:
+            return pdf.iloc[0:0]
+        frames = [pdf.iloc[p[0]:p[1]] if isinstance(p, list) else p for p in parts]
+        return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+
+    return _keyed_scan(df, by, time_col, fold, shards)
+
+
+def stream_fixed_event_window(
+    df: DataFrame,
+    n: int,
+    by: Sequence[str],
+    time_col: str = "time",
+    fork_ttl_s: float | None = None,
+    gc_wall_s: float | None = None,
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming ``fixed-event-window`` (action.clj:233-262) with the
+    reference's ``:fork-ttl`` semantics (stream_test.clj:331-408): per
+    key buffer in the carry; every ``n`` buffered events flush as one
+    window row ``(by…, window_start, events)``.
+
+    Eviction is two-layered, matching the reference's by-fork GC:
+
+    - **gap eviction** on the EVENT clock, exactly like the reference
+      (action.clj:1575-1600 compares fork times against the incoming
+      event's ``:time``): an event arriving more than ``fork_ttl_s``
+      after the key's previous event drops the stale partial buffer —
+      the window restarts from the newcomer.
+    - the reference's GC can also sweep OTHER keys' idle forks when
+      one key's event advances the clock; that sweep maps to the
+      optional ``gc_wall_s`` state ttl — a memory-bound backstop for
+      keys that never speak again. Per key it is a wall-clock timeout
+      (a push engine's wall clock tracks its event clock), NOT the
+      event-time watermark: a watermark makes Spark drop late rows
+      before the operator, which would break the reference's
+      out-of-order behavior. Sharded, it is the shell's in-shard
+      event-clock eviction.
+
+    Events fold in event-time order within a micro-batch (per-event
+    batches degrade gracefully to the reference's arrival order,
+    which its out-of-order deftest relies on). The partial window
+    carries COLUMNAR ({col: [...]}, ≤ n-1 rows); batch rows are
+    referenced by position and serialize at most once."""
+    import pandas as pd
+
+    ttl_us = int(round(fork_ttl_s * 1_000_000)) if fork_ttl_s else None
+    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
+    key_cols = list(by)
+
+    def fold(carry, segs, pdf):
+        cols = list(pdf.columns)
+        out_rows: list = []
+        raw = _RawCols(pdf)
+        t = _series_us(pdf[time_col])
+        for k, s0, e0 in segs:
+            st = carry.get(k)
+            if st is None:
+                last_us, buf = None, []
+            else:
+                last_us, bc = st["l"], st["b"]
+                blen = len(next(iter(bc.values()))) if bc else 0
+                buf = [{c: bc[c][x] for c in cols} for x in range(blen)]
+            keyvals = {c: pdf.iloc[s0][c] for c in key_cols}
+            for i in range(s0, e0):
+                ti = int(t[i])
+                if ttl_us is not None and last_us is not None and ti - last_us > ttl_us:
+                    buf = []  # stale fork: GC dropped it before this event
+                buf.append(i)
+                last_us = ti
+                if len(buf) == n:
+                    evs = [
+                        _revive_ts_fields(e if isinstance(e, dict) else raw.row(cols, e), ts_cols)
+                        for e in buf
+                    ]
+                    first = evs[0][time_col]
+                    start = first.timestamp() if hasattr(first, "timestamp") else float(first)
+                    out_rows.append({**keyvals, "window_start": start, "events": evs})
+                    buf = []
+            rest = [e if isinstance(e, dict) else raw.row(cols, e) for e in buf]
+            carry[k] = {
+                "l": last_us,
+                "b": {c: [e[c] for e in rest] for c in cols} if rest else {},
+            }
+        if not out_rows:
+            return None
+        return pd.DataFrame(out_rows)
+
+    by_fields = [f for f in df.schema.fields if f.name in by]
+    return _keyed_scan(
+        df, by, time_col, fold, shards,
+        out_schema=f"{_ddl(by_fields)}, window_start double, {_events_col_ddl(df)}",
+        state_ttl_s=gc_wall_s, ttl_clock="processing",
+    )
+
+
+def stream_moving_event_window(
+    df: DataFrame,
+    n: int,
+    by: Sequence[str],
+    time_col: str = "time",
+    gc_wall_s: float | None = None,
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming ``moving-event-window`` (action.clj:1219-1246): on
+    every event, emit the trailing ``n`` events of its key as an
+    ``events`` array — the carried sliding buffer, emitted per row
+    like the batch twin's collect_list window. Emission cost is
+    O(rows·n) dicts in either layout (the output shape demands it).
+    ``gc_wall_s`` bounds state for silent keys (see
+    :func:`stream_fixed_event_window`)."""
+    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
+
+    def fold(carry, segs, pdf):
+        cols = list(pdf.columns)
+        events_col: list = [None] * len(pdf)
+        raw = _RawCols(pdf)
+        for k, s0, e0 in segs:
+            bc = carry.get(k)
+            if bc:
+                blen = len(next(iter(bc.values())))
+                buf = [{c: bc[c][x] for c in cols} for x in range(blen)]
+            else:
+                buf = []
+            for i in range(s0, e0):
+                buf.append(raw.row(cols, i))
+                buf = buf[-n:]
+                events_col[i] = [_revive_ts_fields(e, ts_cols) for e in buf]
+            carry[k] = {c: [e[c] for e in buf] for c in cols} if buf else {}
+        out = pdf.copy()
+        out["events"] = events_col
+        return out
+
+    return _keyed_scan(
+        df, by, time_col, fold, shards, extra_out=_events_col_ddl(df),
+        state_ttl_s=gc_wall_s, ttl_clock="processing",
+    )
+
+
+def stream_moving_time_window(
+    df: DataFrame,
+    duration_s: float,
+    by: Sequence[str],
+    time_col: str = "time",
+    gc_wall_s: float | None = None,
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming ``moving-time-window`` (action.clj:2596-2639): per
+    event, all of its key's events within the trailing ``duration``
+    seconds — a carried buffer of ``[t_us, row]`` trimmed by exact µs
+    bound (same (-(dur-1µs), 0] range as the batch twin's range
+    frame). ``gc_wall_s`` as in :func:`stream_fixed_event_window`."""
+    dur_us = int(round(duration_s * 1_000_000))
+    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
+
+    def fold(carry, segs, pdf):
+        cols = list(pdf.columns)
+        events_col: list = [None] * len(pdf)
+        raw = _RawCols(pdf)
+        t = _series_us(pdf[time_col])
+        for k, s0, e0 in segs:
+            buf = carry.get(k, [])
+            for i in range(s0, e0):
+                ti = int(t[i])
+                buf.append((ti, raw.row(cols, i)))
+                lo = ti - dur_us + 1
+                buf = [(tb, e) for tb, e in buf if tb >= lo]
+                events_col[i] = [_revive_ts_fields(e, ts_cols) for _, e in buf]
+            carry[k] = buf
+        out = pdf.copy()
+        out["events"] = events_col
+        return out
+
+    return _keyed_scan(
+        df, by, time_col, fold, shards, extra_out=_events_col_ddl(df),
+        state_ttl_s=gc_wall_s, ttl_clock="processing",
+    )
+
+
+def stream_ddt(
+    df: DataFrame,
+    by: Sequence[str],
+    time_col: str = "time",
+    metric_col: str = "metric",
+    remove_neg: bool = False,
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming ddt/ddt-pos (action.clj:1041-1083): the carry holds
+    each key's previous (t_us, metric); the derivative is one
+    vectorized diff over the slice with the previous sample injected
+    at segment starts only — O(keys) Python, O(rows) numpy. Null-metric
+    events are dropped before the shift, so they never become the
+    previous sample; a zero time delta is skipped."""
+    import numpy as np
+
+    def fold(carry, segs, pdf):
+        keepna = pdf[metric_col].notna().to_numpy(dtype=bool)
+        if not keepna.all():
+            pdf = pdf[keepna].reset_index(drop=True)
+            segs = segs.filter(keepna)
+        n = len(pdf)
+        if not n:
+            return None
+        t = _series_us(pdf[time_col]).astype("float64")
+        m = pdf[metric_col].to_numpy(dtype="float64")
+        prev_t = np.concatenate(([np.nan], t[:-1]))
+        prev_m = np.concatenate(([np.nan], m[:-1]))
+        for k, s0, _ in segs:
+            last = carry.get(k)
+            prev_t[s0], prev_m[s0] = (
+                (np.nan, np.nan) if last is None else (float(last[0]), float(last[1]))
+            )
+        dt = (t - prev_t) / 1_000_000.0
+        with np.errstate(divide="ignore", invalid="ignore"):
+            diff = (m - prev_m) / dt
+        ok = np.isfinite(diff)
+        if remove_neg:
+            ok &= diff >= 0
+        for k, _, e0 in segs:
+            carry[k] = (int(t[e0 - 1]), float(m[e0 - 1]))
+        out = pdf[ok].copy()
+        out[metric_col] = diff[ok]
+        return out
+
+    return _keyed_scan(df, by, time_col, fold, shards)
+
+
+def stream_coalesce(
+    df: DataFrame,
+    duration_s: float,
+    fields: Sequence[str],
+    by: Sequence[str] = (),
+    time_col: str = "time",
+    ttl_col: str = "ttl",
+    state_col: str = "state",
+    default_ttl_s: float = 120.0,
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming ``coalesce`` (action.clj:721-791): keep the latest
+    event per ``fields`` tuple; every ``duration`` seconds of EVENT
+    time (the tick clock is the key's running max event time, not
+    wall time), flush all kept non-expired events. Expiry follows
+    event.clj:12-19: state == "expired" or age > ttl (default 120 s).
+
+    The per-event loop touches only scalars/tuples (tick clock, dict
+    upsert, expiry compare): each key's buffer carries COLUMNAR and
+    batch rows are referenced by POSITION until the end of the batch,
+    so JSON conversion happens once per batch for the rows still
+    buffered at its end, and emission is two positional gathers
+    (batch-sourced + carry-sourced) merged back into flush order.
+    Coalesce is an alert-volume operator (one row per service×host
+    per tick), never a data-plane scan. Unkeyed, it is the reference's
+    single global coalesce: one tick clock, one state group (``shards``
+    does not apply)."""
+    import json as _json
+
+    import numpy as np
+    import pandas as pd
+
+    dur_us = int(round(duration_s * 1_000_000))
+    default_ttl_us = int(round(default_ttl_s * 1_000_000))
+    has_ttl_col = ttl_col in df.columns
+    has_state_col = state_col in df.columns
+
+    def fold(carry, segs, pdf):
+        t = _series_us(pdf[time_col])
+        null_t = pdf[time_col].isna().to_numpy(dtype=bool)
+        cols = list(pdf.columns)
+        f_arrs = [pdf[f].tolist() for f in fields]
+        st_arr = pdf[state_col].tolist() if has_state_col else None
+        ttl_arr = (
+            pdf[ttl_col].to_numpy(dtype="float64", na_value=np.nan)
+            if has_ttl_col
+            else None
+        )
+
+        def batch_expired(i, ti, ct):
+            if st_arr is not None and st_arr[i] == "expired":
+                return True
+            ttl_us = default_ttl_us
+            if ttl_arr is not None and ttl_arr[i] == ttl_arr[i]:
+                ttl_us = int(round(float(ttl_arr[i]) * 1_000_000))
+            return ct - ti > ttl_us
+
+        def old_expired(store, idx, ti, ct):
+            if has_state_col and store[state_col][idx] == "expired":
+                return True
+            ttl_us = default_ttl_us
+            if has_ttl_col and store[ttl_col][idx] is not None:
+                ttl_us = int(round(float(store[ttl_col][idx]) * 1_000_000))
+            return ct - ti > ttl_us
+
+        raw = _RawCols(pdf)
+        emit: list = []  # (src 0=batch/1=carried, row idx, carried store)
+        for k, s0, e0 in segs:
+            c = carry.get(k)
+            if c is None:
+                ct, lt, buf, store = 0, None, {}, None
+            else:
+                # buf: fields tuple -> [src, idx, t_us]
+                ct, lt, store = c["ct"], c["lt"], c["bc"]
+                buf = {fk: [1, x, c["bt"][x]] for x, fk in enumerate(c["bf"])}
+            for i in range(s0, e0):
+                if null_t[i]:
+                    continue
+                ti = int(t[i])
+                ct = max(ct, ti)
+                if batch_expired(i, ti, ct):
+                    continue
+                # _cell_native, not _native: a timestamp-typed fields
+                # column must isoformat (raw pd.Timestamp is not
+                # JSON-serializable, ADVICE r8 #2)
+                ftk = _json.dumps([_cell_native(a[i]) for a in f_arrs])
+                ent = buf.get(ftk)
+                # e/most-recent?: the stored event wins ties
+                if ent is None or ent[2] < ti:
+                    buf[ftk] = [0, i, ti]
+                if lt is None:
+                    lt = ti
+                elif ct >= lt + dur_us:
+                    alive = {}
+                    for fk, e in buf.items():
+                        if e[0] == 0:
+                            dead = batch_expired(e[1], e[2], ct)
+                        else:
+                            dead = old_expired(store, e[1], e[2], ct)
+                        if not dead:
+                            alive[fk] = e
+                            emit.append((e[0], e[1], store))
+                    buf = alive
+                    lt = ct
+            # rebuild the key's carry: surviving buffer rows go
+            # columnar (batch-sourced rows pay JSON conversion HERE)
+            bc: dict = {col: [] for col in cols}
+            for e in buf.values():
+                for col in cols:
+                    bc[col].append(raw.cell(col, e[1]) if e[0] == 0 else store[col][e[1]])
+            carry[k] = {"ct": ct, "lt": lt, "bf": list(buf),
+                        "bt": [e[2] for e in buf.values()], "bc": bc}
+        if not emit:
+            return None
+        b_pos = [p for p, e in enumerate(emit) if e[0] == 0]
+        o_pos = [p for p, e in enumerate(emit) if e[0] == 1]
+        frames = []
+        if b_pos:
+            frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
+        if o_pos:
+            odf = pd.DataFrame(
+                {c: [emit[p][2][c][emit[p][1]] for p in o_pos] for c in cols},
+                columns=cols,
+            )
+            frames.append(_revive_datetime_cols(odf, pdf))
+        if len(frames) == 1:
+            return frames[0]
+        out = pd.concat(frames, ignore_index=True)
+        # concat row q holds emit position (b_pos+o_pos)[q]; restore
+        # flush order by sorting rows on that position
+        return out.iloc[np.argsort(np.asarray(b_pos + o_pos), kind="stable")]
+
+    if not by:
+        # single global coalesce (the reference's unkeyed form): one
+        # synthetic key, one state group, whatever ``shards`` says.
+        # Alert-rate traffic; supply `by` to spread it.
+        keyed = df.withColumn("__g__", F.lit(0))
+        out = _keyed_scan(keyed, ["__g__"], time_col, fold)
+        return out.drop("__g__")
+    return _keyed_scan(df, by, time_col, fold, shards)
+
+
+def stream_expired(
+    df: DataFrame,
+    by: Sequence[str],
+    time_col: str = "time",
+    ttl_col: str | None = "ttl",
+    state_col: str | None = "state",
+    keep_expired: bool = True,
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming ``expired``/``not-expired`` (action.clj:427-474): the
+    stream clock is the running max event time PER KEY (the
+    reference's clock is per-stream; a key's fork owns its clock
+    downstream of `by`), carried per key; expiry follows
+    event.clj:12-19 (state == "expired" or age > coalesce(ttl, 120)).
+    Each segment's accumulate seeds from the carry and writes its
+    last clock back; the rest is one vectorized pass."""
+    import numpy as np
+
+    has_ttl = ttl_col is not None and ttl_col in df.columns
+    has_state = state_col is not None and state_col in df.columns
+
+    def fold(carry, segs, pdf):
+        has_time = pdf[time_col].notna().to_numpy(dtype=bool)
+        t = _series_us(pdf[time_col]).astype("float64")
+        t = np.where(has_time, t, -np.inf)  # null time: no age, no clock
+        run = np.empty(len(t), dtype="float64")
+        for k, s0, e0 in segs:
+            seg = np.maximum.accumulate(t[s0:e0])
+            mx = carry.get(k)
+            if mx is not None:
+                seg = np.maximum(seg, float(mx))
+            run[s0:e0] = seg
+            fin = seg[np.isfinite(seg)]
+            if len(fin):
+                carry[k] = float(fin[-1])
+        age_s = (run - t) / 1_000_000.0
+        if has_ttl:
+            ttl = pdf[ttl_col].astype("float64").fillna(120.0).to_numpy()
+        else:
+            ttl = np.full(len(t), 120.0)
+        # null time ⇒ not expired-by-age (batch twin's null-safe rule)
+        exp = (age_s > ttl) & has_time
+        if has_state:
+            exp |= (pdf[state_col] == "expired").to_numpy(dtype=bool)
+        return pdf[exp if keep_expired else ~exp]
+
+    return _keyed_scan(df, by, time_col, fold, shards)
+
+
+# The zscore fold keeps Decimal moments under this precision (a
 # DECIMAL(38,9) term has up to 38 significant digits; 60 keeps the
 # running sums exact past ~1e21 such terms — the default context's
 # 28 would silently round sums AND raise InvalidOperation quantizing
@@ -1980,12 +2209,13 @@ def stream_zscore(
     min_n: int = 2,
     out: str = "zscore",
     state_ttl_s: float | None = None,
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming twin of :func:`mirabelle_spark.operators.stateful.zscore`:
     per event, the metric's deviation from the trailing ``window_s``
     seconds of its key, in standard deviations.
 
-    Exactness: keyed state carries the trailing window as
+    Exactness: the carry holds the trailing window as
     ``(t_us, q1, q2)`` triples plus running DECIMAL(38,9) sums, where
     ``q1``/``q2`` are the metric and its double-squared value rounded
     HALF_UP at scale 9 from the shortest decimal representation —
@@ -1998,558 +2228,10 @@ def stream_zscore(
     peer arriving later is not retroactively included, the standard
     trade of every streaming twin here, cf. stream_moving_time_window).
 
-    Cost: O(1) amortized per event (deque append + evict, two decimal
+    Cost: O(1) amortized per event (append + evict, two decimal
     adds/subs); state is bounded by events-per-window per key.
-    ``state_ttl_s`` evicts idle keys (fork GC)."""
-    import json as _json
-    import math
-    from collections import deque
-    from decimal import Decimal, localcontext
-
-    import numpy as np
-    import pandas as pd
-
-    win_us = int(round(window_s * 1_000_000))
-
-    def batch_fn(st, pdf):
-        (sj,) = st
-        if sj:
-            d = _json.loads(sj)
-            buf = deque(
-                (t, None if a is None else Decimal(a), None if b is None else Decimal(b))
-                for t, a, b in d["b"]
-            )
-            s1, s2 = Decimal(d["s1"]), Decimal(d["s2"])
-            # pre-r8 checkpoints carried no term counters: every
-            # stored term was non-NULL then, so recompute from buf
-            c1 = d.get("c1", sum(1 for _, a, _b in buf if a is not None))
-            c2 = d.get("c2", sum(1 for _, _a, b in buf if b is not None))
-        else:
-            buf, s1, s2, c1, c2 = deque(), Decimal(0), Decimal(0), 0, 0
-        t = _series_us(pdf[time_col])
-        vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        zs = np.full(len(pdf), np.nan)
-        with localcontext() as ctx:
-            ctx.prec = _ZSCORE_PREC
-            for i in range(len(pdf)):
-                ti = int(t[i])
-                v = vals[i]
-                m = 0.0 if v != v else float(v)
-                q1, q2 = _zscore_q9(m), _zscore_q9(m * m)
-                buf.append((ti, q1, q2))
-                if q1 is not None:
-                    s1 += q1
-                    c1 += 1
-                if q2 is not None:
-                    s2 += q2
-                    c2 += 1
-                lo = ti - win_us
-                while buf and buf[0][0] < lo:
-                    _, a, b = buf.popleft()
-                    if a is not None:
-                        s1 -= a
-                        c1 -= 1
-                    if b is not None:
-                        s2 -= b
-                        c2 -= 1
-                n = len(buf)
-                if n >= min_n and v == v and c1 and c2:
-                    nd = float(n)
-                    mean = float(s1) / nd
-                    var = max(float(s2) / nd - mean * mean, 0.0)
-                    if var > 0.0:
-                        zs[i] = (float(v) - mean) / math.sqrt(var)
-        res = pdf.copy()
-        res[out] = pd.array(zs, dtype="float64")
-        sj2 = _json.dumps(
-            {
-                "b": [
-                    [tt, None if a is None else str(a), None if b is None else str(b)]
-                    for tt, a, b in buf
-                ],
-                "s1": str(s1),
-                "s2": str(s2),
-                "c1": c1,
-                "c2": c2,
-            }
-        )
-        return (sj2,), res
-
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-        + f", {out} double"
-    )
-    return _keyed_batch_scan(
-        df,
-        by,
-        time_col,
-        "buf STRING",
-        (None,),
-        batch_fn,
-        state_ttl_s=state_ttl_s,
-        out_schema=out_schema,
-        ttl_clock="processing",
-    )
-
-# -- sharded keyed state (r7) ----------------------------------------------
-# applyInPandasWithState calls the Python state fn once per KEY per
-# micro-batch; at 10^6 distinct keys the interpreter round-trips —
-# not the fold — dominate (PERF §39: ewma 7.9k ev/s, cond_dt 5.6k).
-# Sharding the GROUP key to pmod(xxhash64(keys), shards) with one
-# carry map per shard collapses 10^6 calls to `shards`, while the
-# fold still runs per ORIGINAL key: the shard slice is sorted by
-# (key, time) and the carry resets at key boundaries, so each key
-# sees exactly the per-key twin's operation sequence (bit-exact
-# parity pytests). Trades: the whole shard map round-trips per batch
-# (right when most keys are touched each batch; for sparse-update
-# workloads stay per-key), and there is no per-key TTL inside a
-# shard (state is bounded by key cardinality / shards).
-
-_SHARD_COL = "__shard__"
-_NULL_KEY = "\x00null"
-_KEY_SEP = "\x1f"
-
-# stream_ewma_sharded: key runs longer than this take the scalar
-# loop — the vectorized stepper costs O(max run) numpy dispatches
-# per batch, so one hot key must not set the step count for the
-# whole shard. At the tier's design point (high cardinality, short
-# runs) every run is far below this.
-_EWMA_VEC_CAP = 512
-
-
-def _shard_key_strings(pdf, key_cols, key_dtypes):
-    """Composite string key per row (JSON-map-safe); nulls fold
-    under a sentinel distinct from any real value, matching the
-    per-key twins' null-group semantics.
-
-    ``key_dtypes`` (Spark simpleString per key col) makes the string
-    TYPE-STABLE across micro-batches: Arrow hands an int64 slice
-    that contains any NULL to pandas as float64, so a bare str(v)
-    would serialize the same key as "7" in one batch and "7.0" in
-    the next — silently resetting its state. Integral Spark types
-    therefore format through int(v); everything else through str.
-
-    INJECTIVE under adversarial string values: a value containing
-    the separator or the escape byte is escaped (\\x00 -> \\x00"0",
-    \\x1f -> \\x00"1") before joining, so escaped values never
-    contain a bare separator and can never spell the null sentinel
-    (whose second byte 'n' follows \\x00 only in the sentinel) —
-    two distinct key tuples can't alias one state slot. Non-string
-    key types (numeric formatting) never produce either byte, so
-    the common path pays one containment check per value."""
-
-    def esc(s):
-        if "\x00" in s or _KEY_SEP in s:
-            return s.replace("\x00", "\x00" + "0").replace(_KEY_SEP, "\x00" + "1")
-        return s
-
-    def conv_for(dtype):
-        if dtype in ("tinyint", "smallint", "int", "bigint", "long"):
-            return lambda v: str(int(v))
-        return lambda v: esc(str(v))
-
-    convs = [conv_for(t) for t in key_dtypes]
-    if len(key_cols) == 1:
-        col, conv = pdf[key_cols[0]], convs[0]
-        return [(_NULL_KEY if v is None or v != v else conv(v)) for v in col.tolist()]
-    cols = [pdf[c].tolist() for c in key_cols]
-    return [
-        _KEY_SEP.join(
-            _NULL_KEY if v is None or v != v else conv(v)
-            for conv, v in zip(convs, row)
-        )
-        for row in zip(*cols)
-    ]
-
-
-def _sharded_keyed_batch_scan(
-    df, by, time_col, shards, shard_fold, extra_out=None, state_ttl_s=None,
-    out_schema=None,
-):
-    """Shared shell for the sharded twins: group on the shard id,
-    state = one JSON carry map for the shard's keys, and per batch
-    call ``shard_fold(carry, ks, pdf)`` with the shard slice sorted
-    by (key, time) (stable on top of _keyed_batch_scan's time sort)
-    and the shard column dropped; ``ks`` is the per-row key string.
-    ``shard_fold`` mutates ``carry`` and returns the output rows.
-    ``extra_out`` appends DDL columns the fold adds (e.g. zscore).
-
-    ``state_ttl_s`` is the fork GC INSIDE the shard map (the
-    reference's :fork-ttl at per-key grain, which shard-level
-    GroupState timeouts cannot express): the shell tracks each key's
-    last event time next to the carry and, after the fold, drops
-    keys idle longer than the ttl relative to the shard's event
-    clock (its running max event time). An evicted key's next event
-    starts fresh — identical semantics to the per-key twins'
-    eviction — and shard state stays bounded by the ACTIVE key set
-    instead of the ever-seen key set."""
-    import json as _json
-
-    key_cols = list(by)
-    dtypes = dict(df.dtypes)
-    key_dtypes = [dtypes[c] for c in key_cols]
-    src = df.withColumn(
-        _SHARD_COL,
-        F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(shards)),
-    )
-    if out_schema is None:
-        # default: input columns (+ extra_out appendix); a fold whose
-        # rows are shaped differently (window emission) passes its
-        # own DDL
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-        )
-        if extra_out:
-            out_schema += f", {extra_out}"
-    ttl_us = int(round(state_ttl_s * 1_000_000)) if state_ttl_s else None
-
-    def batch_fn(s, pdf):
-        (carry_json,) = s
-        blob = _json.loads(carry_json) if carry_json else {}
-        carry = blob.get("c", {})
-        seen = blob.get("t", {})
-        pdf = pdf.sort_values(key_cols, kind="mergesort").drop(columns=[_SHARD_COL])
-        ks = _shard_key_strings(pdf, key_cols, key_dtypes)
-        if ttl_us is not None and len(pdf):
-            import numpy as np
-
-            tv = _series_us(pdf[time_col])
-            ks_arr = np.array(ks, dtype=object)
-            starts = np.flatnonzero(
-                np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            )
-            ends = np.concatenate((starts[1:] - 1, [len(ks) - 1]))
-            # restart rule BEFORE the fold: a key whose gap since its
-            # last event exceeds the ttl folds from scratch (exactly
-            # the per-key twins' event-clock eviction)
-            for sidx in starts.tolist():
-                k = ks_arr[sidx]
-                prev = seen.get(k)
-                if prev is not None and int(tv[sidx]) - prev > ttl_us:
-                    seen.pop(k, None)
-                    carry.pop(k, None)
-            out = shard_fold(carry, ks, pdf)
-            # memory bound AFTER the fold: keys idle past the ttl on
-            # the shard's event clock drop even if they never return
-            for sidx, e in zip(starts.tolist(), ends.tolist()):
-                k = ks_arr[sidx]
-                t_last = int(tv[e])
-                prev = seen.get(k)
-                seen[k] = t_last if prev is None else max(prev, t_last)
-            cutoff = max(seen.values()) - ttl_us
-            for k in [k for k, t in seen.items() if t < cutoff]:
-                seen.pop(k, None)
-                carry.pop(k, None)
-        else:
-            out = shard_fold(carry, ks, pdf)
-        return (_json.dumps({"c": carry, "t": seen} if ttl_us else {"c": carry}),), out
-
-    return _keyed_batch_scan(
-        src, [_SHARD_COL], time_col, "carry STRING", (None,), batch_fn,
-        out_schema=out_schema,
-    )
-
-
-def stream_ewma_sharded(
-    df: DataFrame,
-    r: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    shards: int = 64,
-    state_ttl_s: float | None = None,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_ewma`: same double
-    fold, bit-identical per key (parity pytest vs the batch
-    operator), through the sharded shell above. PERF §39: 214k ev/s
-    at 1M keys vs 7.9k per-key — 27×, above the JVM windowed agg at
-    that cardinality.
-
-    r17 (guide §4.2; VERDICT r16 ask #8): the fold is VECTORIZED
-    across keys instead of looping per row — a clean-machine cost
-    split measured the per-row Python loop at ~62 % of the whole
-    tier (2M events / 1M keys: 6.34 s real vs 2.40 s with a
-    passthrough fold). The shard slice arrives sorted by (key,
-    time), so key runs are contiguous segments; step j updates
-    every key's j-th event at once with the SAME scalar expression
-    ``r*v + (1.0-r)*m`` (numpy float64 scalar ops are IEEE doubles
-    — each key's value sequence sees the identical op order as the
-    scalar loop, pinned by the existing batch-parity pytest). A NaN
-    event emits NaN and leaves the key's state unchanged, exactly
-    the scalar branch. Keys whose run exceeds ``_EWMA_VEC_CAP``
-    (one hot key would make the step loop O(run) numpy dispatches)
-    take the original scalar loop over just their rows — identical
-    semantics, never slower than the old path."""
-    import numpy as np
-    import pandas as pd
-
-    cap = _EWMA_VEC_CAP
-
-    def _scalar_run(carry, k, vals, out, lo, hi):
-        m = carry.get(k)
-        for i in range(lo, hi):
-            v = vals[i]
-            if v != v:
-                out[i] = np.nan
-            else:
-                m = r * v + (1.0 - r) * (m if m is not None else 0.0)
-                out[i] = m
-        if m is not None:
-            carry[k] = m
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        out = np.empty(n)
-        if n:
-            ks_arr = np.asarray(ks, dtype=object)
-            starts = np.flatnonzero(
-                np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            )
-            lens = np.diff(np.concatenate((starts, [n])))
-            short = lens <= cap
-            s_starts = starts[short]
-            s_lens = lens[short]
-            if s_starts.size:
-                keys_list = ks_arr[s_starts].tolist()
-                m0 = [carry.get(k) for k in keys_list]
-                seen = np.array([v is not None for v in m0], dtype=bool)
-                m = np.array(
-                    [v if v is not None else 0.0 for v in m0],
-                    dtype=np.float64,
-                )
-                # length-descending order → the keys still active at
-                # step j are a prefix; total work is Σ lens, no padding
-                order = np.argsort(-s_lens, kind="stable")
-                s_starts = s_starts[order]
-                s_lens = s_lens[order]
-                m = m[order]
-                seen = seen[order]
-                # active count per step: s_lens sorted desc, so keys
-                # with len > j form the prefix
-                for j in range(int(s_lens[0])):
-                    a = int(np.searchsorted(-s_lens, -(j + 1), side="right"))
-                    pos = s_starts[:a] + j
-                    v = vals[pos]
-                    real = v == v
-                    stepped = r * v + (1.0 - r) * m[:a]
-                    m[:a] = np.where(real, stepped, m[:a])
-                    out[pos] = np.where(real, stepped, np.nan)
-                    seen[:a] |= real
-                for i in np.flatnonzero(seen).tolist():
-                    carry[ks_arr[s_starts[i]]] = float(m[i])
-            if not short.all():
-                vl = vals.tolist()
-                for si in np.flatnonzero(~short).tolist():
-                    lo = int(starts[si])
-                    _scalar_run(
-                        carry, ks_arr[lo], vl, out, lo, lo + int(lens[si])
-                    )
-        res = pdf.copy()
-        res[metric_col] = pd.array(out, dtype="float64")
-        return res
-
-    return _sharded_keyed_batch_scan(
-        df, by, time_col, shards, shard_fold, state_ttl_s=state_ttl_s
-    )
-
-
-def stream_cond_dt_sharded(
-    df: DataFrame,
-    cond,
-    dt_s: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_cond_dt` — the same
-    (ok, flip_us) recurrence per key, condition vectorized once over
-    the whole shard slice, identical output rows to the per-key twin
-    (parity pytest). PERF §39: 552k ev/s at 1M keys vs 5.6k per-key
-    (98×); 1.73M ev/s at 10M events / 10k keys — at or above the
-    reference's ~1M ev/s/node lineage claim."""
-    import numpy as np
-
-    dt_us = int(round(dt_s * 1_000_000))
-    if callable(cond):
-        def valid_series(pdf):
-            return pdf.apply(cond, axis=1).to_numpy(dtype=bool)
-    else:
-        from mirabelle_spark.conditions import compile_condition_pandas
-
-        _pred = compile_condition_pandas(cond)
-
-        def valid_series(pdf):
-            return _pred(pdf).to_numpy(dtype=bool)
-
-    def shard_fold(carry, ks, pdf):
-        tv = _series_us(pdf[time_col])
-        valid = valid_series(pdf)
-        keep = np.empty(len(tv), dtype=bool)
-        unset = object()
-        prev = unset
-        ok, flip = False, None
-        for i, (k, t, va) in enumerate(zip(ks, tv.tolist(), valid.tolist())):
-            if k != prev:
-                if prev is not unset:
-                    carry[prev] = (ok, flip)
-                ok, flip = carry.get(k, (False, None))
-                prev = k
-            if va and not ok:
-                ok, flip = True, t
-            elif not va:
-                ok, flip = False, None
-            keep[i] = va and ok and t > flip + dt_us
-        if prev is not unset:
-            carry[prev] = (ok, flip)
-        return pdf[keep]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_changed_sharded(
-    df: DataFrame,
-    fieldname: str,
-    by: Sequence[str],
-    time_col: str = "time",
-    init=None,
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_changed`: the shard
-    slice compares via ONE vectorized shift — only the per-key
-    SEGMENT STARTS (first row of each key in the batch) read the
-    carry map, and only segment ends write it, so the Python work is
-    O(distinct keys in batch), not O(rows). Null-safe compare and
-    :init semantics identical to the per-key twin (parity pytest).
-
-    The carried last-value must survive the shard map's JSON round
-    trip: timestamp fields encode as isoformat (revived to
-    pd.Timestamp for the compare), binary as hex; JSON-native types
-    pass through. Other field dtypes (decimal, arrays) raise a named
-    error up front — use the per-key twin's typed state for those."""
-    import numpy as np
-    import pandas as pd
-
-    dtype = dict(df.dtypes)[fieldname]
-    is_ts = dtype in ("timestamp", "timestamp_ntz")
-    is_bin = dtype == "binary"
-    # exact simpleString names, not prefixes: 'int' as a prefix would
-    # also admit 'interval day to second', whose timedelta then fails
-    # at runtime inside json.dumps instead of this up-front error
-    if not (is_ts or is_bin) and dtype not in (
-        "string", "boolean", "double", "float", "tinyint",
-        "smallint", "int", "bigint", "long",
-    ):
-        raise NotImplementedError(
-            f"stream_changed_sharded cannot JSON-carry field dtype "
-            f"{dtype!r}; use the per-key stream_changed (typed state)"
-        )
-
-    def enc(v):
-        v = _native(v.isoformat() if is_ts and v is not None and v == v else v)
-        if is_bin and v is not None:
-            return bytes(v).hex()
-        return v
-
-    def dec(v):
-        if v is None:
-            return None
-        if is_ts:
-            return pd.Timestamp(v)
-        if is_bin:
-            return bytes.fromhex(v)
-        return v
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        if not n:
-            return pdf
-        vals = pdf[fieldname]
-        prev = vals.shift(1)
-        ks_arr = np.array(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        start_keys = ks_arr[starts].tolist()
-        # ONE positional gather/scatter per batch — per-element .iloc
-        # writes cost more than the whole fold at 1-row segments
-        prev.iloc[starts] = [dec(carry.get(k, enc(init))) for k in start_keys]
-        same = (vals == prev) | (vals.isna() & prev.isna())
-        ends = np.concatenate((starts[1:] - 1, [n - 1]))
-        for k, v in zip(start_keys, vals.iloc[ends].tolist()):
-            carry[k] = enc(v)
-        return pdf[~same.to_numpy(dtype=bool)]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_ddt_sharded(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    remove_neg: bool = False,
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_ddt`: the derivative is
-    one vectorized diff over the shard slice with the previous
-    (t, metric) injected from the carry map at segment starts only —
-    O(distinct keys) Python, O(rows) numpy. Null-metric events are
-    dropped before the shift exactly like the per-key twin, so they
-    never become the previous sample."""
-    import numpy as np
-
-    def shard_fold(carry, ks, pdf):
-        keepna = pdf[metric_col].notna().to_numpy(dtype=bool)
-        if not keepna.all():
-            pdf = pdf[keepna].reset_index(drop=True)
-            ks = [k for k, good in zip(ks, keepna.tolist()) if good]
-        n = len(pdf)
-        if not n:
-            return pdf
-        t = _series_us(pdf[time_col]).astype("float64")
-        m = pdf[metric_col].to_numpy(dtype="float64")
-        prev_t = np.concatenate(([np.nan], t[:-1]))
-        prev_m = np.concatenate(([np.nan], m[:-1]))
-        ks_arr = np.array(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        for s in starts.tolist():
-            last = carry.get(ks_arr[s])
-            prev_t[s], prev_m[s] = (
-                (np.nan, np.nan) if last is None else (float(last[0]), float(last[1]))
-            )
-        dt = (t - prev_t) / 1_000_000.0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            diff = (m - prev_m) / dt
-        ok = np.isfinite(diff)
-        if remove_neg:
-            ok &= diff >= 0
-        ends = np.concatenate((starts[1:] - 1, [n - 1]))
-        for s, e in zip(starts.tolist(), ends.tolist()):
-            carry[ks_arr[s]] = (int(t[e]), float(m[e]))
-        out = pdf[ok].copy()
-        out[metric_col] = diff[ok]
-        return out
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_zscore_sharded(
-    df: DataFrame,
-    window_s: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    min_n: int = 2,
-    out: str = "zscore",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_zscore`: the carry map
-    holds each key's trailing-window triples and decimal moment sums
-    (identical quantization and fold order — bit-exact parity with
-    the per-key twin and the batch range frame on in-order input)."""
+    ``state_ttl_s`` evicts idle keys (fork GC; per key on the wall
+    clock)."""
     import math
     from decimal import Decimal, localcontext
 
@@ -2558,901 +2240,71 @@ def stream_zscore_sharded(
 
     win_us = int(round(window_s * 1_000_000))
 
-    def shard_fold(carry, ks, pdf):
-        t = _series_us(pdf[time_col])
-        vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        zs = np.full(len(pdf), np.nan)
-        unset = object()
-        prev = unset
-        cur = None
-        live: dict = {}  # decoded states this batch (decimal objects)
-
-        def _load(k):
-            if k in live:
-                return live[k]
-            st = carry.get(k)
-            if st is None:
-                c = [[], Decimal(0), Decimal(0), 0, 0]
-            else:
-                c = [
-                    [
-                        (
-                            tt,
-                            None if a is None else Decimal(a),
-                            None if b is None else Decimal(b),
-                        )
-                        for tt, a, b in st["b"]
-                    ],
-                    Decimal(st["s1"]),
-                    Decimal(st["s2"]),
-                    # pre-r8 carries had no counters (no NULL terms then)
-                    st.get("c1", sum(1 for e in st["b"] if e[1] is not None)),
-                    st.get("c2", sum(1 for e in st["b"] if e[2] is not None)),
-                ]
-            live[k] = c
-            return c
-
-        with localcontext() as ctx:
-            ctx.prec = _ZSCORE_PREC
-            for i in range(len(pdf)):
-                k = ks[i]
-                if k != prev:
-                    cur = _load(k)
-                    prev = k
-                buf = cur[0]
-                ti = int(t[i])
-                v = vals[i]
-                m = 0.0 if v != v else float(v)
-                q1, q2 = _zscore_q9(m), _zscore_q9(m * m)
-                buf.append((ti, q1, q2))
-                if q1 is not None:
-                    cur[1] += q1
-                    cur[3] += 1
-                if q2 is not None:
-                    cur[2] += q2
-                    cur[4] += 1
-                lo = ti - win_us
-                drop = 0
-                for tt, a, b in buf:
-                    if tt >= lo:
-                        break
-                    if a is not None:
-                        cur[1] -= a
-                        cur[3] -= 1
-                    if b is not None:
-                        cur[2] -= b
-                        cur[4] -= 1
-                    drop += 1
-                if drop:
-                    del buf[:drop]
-                n = len(buf)
-                if n >= min_n and v == v and cur[3] and cur[4]:
-                    nd = float(n)
-                    mean = float(cur[1]) / nd
-                    var = max(float(cur[2]) / nd - mean * mean, 0.0)
-                    if var > 0.0:
-                        zs[i] = (float(v) - mean) / math.sqrt(var)
-        for k, (b, a1, a2, k1, k2) in live.items():
-            carry[k] = {
-                "b": [
-                    [tt, None if x is None else str(x), None if y is None else str(y)]
-                    for tt, x, y in b
-                ],
-                "s1": str(a1),
-                "s2": str(a2),
-                "c1": k1,
-                "c2": k2,
-            }
-        res = pdf.copy()
-        res[out] = pd.array(zs, dtype="float64")
-        return res
-
-    return _sharded_keyed_batch_scan(
-        df, by, time_col, shards, shard_fold, extra_out=f"{out} double"
-    )
-
-
-def stream_throttle_sharded(
-    df: DataFrame,
-    count: int,
-    duration_s: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_throttle`: the same
-    anchored (anchor_us, n) recurrence per key through the sharded
-    shell — `shards` Python calls per micro-batch instead of one per
-    key; identical kept rows (parity pytest)."""
-    import numpy as np
-
-    dur_us = int(round(duration_s * 1_000_000))
-
-    def shard_fold(carry, ks, pdf):
-        tv = _series_us(pdf[time_col])
-        keep = np.empty(len(tv), dtype=bool)
-        unset = object()
-        prev = unset
-        anchor, n = None, 0
-        for i, (k, t) in enumerate(zip(ks, tv.tolist())):
-            if k != prev:
-                if prev is not unset:
-                    carry[prev] = (anchor, n)
-                anchor, n = carry.get(k, (None, 0))
-                prev = k
-            if anchor is None or t >= anchor + dur_us:
-                anchor, n = t, 1
-                keep[i] = True
-            elif n < count:
-                n += 1
-                keep[i] = True
-            else:
-                keep[i] = False
-        if prev is not unset:
-            carry[prev] = (anchor, n)
-        return pdf[keep]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_smax_jvm(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-) -> DataFrame:
-    """Pure-JVM smax tier (VERDICT r7 ask #1b): keyed streaming
-    aggregation ``max(struct(metric, -t, row))`` — scalar-struct
-    state in Spark's own state store, NO Python on the path at all.
-
-    Emission grain is the trade vs :func:`stream_smax`: the per-key
-    twin forwards the best-so-far event for EVERY input event
-    (action.clj:2742-2772's per-event Riemann semantics); this tier
-    emits one best-so-far row per key per micro-batch that touched
-    the key (update output mode) — at 1M+ hot keys that is the
-    emission grain an alert consumer can absorb anyway, and the last
-    update per key is bit-equal to the batch twin's final best
-    (parity pytest). Tie-breaks deterministically: strictly greater
-    metric wins, then the EARLIEST event (the per-key twin's
-    first-winner-on-ties rule under time-ordered arrival); a NULL
-    metric never beats a non-null one (struct ordering sorts nulls
-    lowest), diverging from the per-key twin's "a null first event
-    occupies the slot" edge.
-
-    State per key is one struct row (bounded by key cardinality, no
-    row buffers); use ``.outputMode("update")`` on the writer."""
-    is_ts = dict(df.dtypes)[time_col].startswith("timestamp")
-    tnum = (
-        F.unix_micros(F.col(time_col))
-        if is_ts
-        else F.col(time_col).cast("double")
-    )
-    best = F.max(
-        F.struct(
-            F.col(metric_col).alias("__m__"),
-            (-tnum).alias("__nt__"),
-            F.struct(*[F.col(c) for c in df.columns]).alias("__row__"),
-        )
-    ).alias("__best__")
-    return df.groupBy(*[F.col(c) for c in by]).agg(best).select("__best__.__row__.*")
-
-
-def stream_smin_jvm(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-) -> DataFrame:
-    """Pure-JVM smin tier: :func:`stream_smax_jvm` over the negated
-    metric, negated back (the same composition as the per-key
-    :func:`stream_smin`; -NULL = NULL so null metrics still lose)."""
-    neg = df.withColumn(metric_col, -F.col(metric_col))
-    out = stream_smax_jvm(neg, by, time_col, metric_col)
-    return out.withColumn(metric_col, -F.col(metric_col))
-
-
-def _cell_native(v):
-    """One buffered cell → JSON-able (timestamps to isoformat — the
-    per-key twins' _row_ser rule, applied per value)."""
-    return _native(v.isoformat() if hasattr(v, "isoformat") else v)
-
-
-class _RawCols:
-    """Cell access for the sharded row-buffer folds, adaptive to the
-    touch density the batch size implies. ``pdf[c].iloc[i]`` per
-    touch pays a Series lookup + slice object; two regimes fix it:
-
-    - small/medium batches (≤ ``_DENSE_MAX`` rows — where a fold may
-      touch MOST rows, e.g. every key buffering at 1M distinct
-      keys): one lazy ``.tolist()`` per touched column, then plain
-      list indexing (measured 2-2.7× on the §43 worst case);
-    - huge batches (a 10M-row availableNow pass touching only a few
-      thousand buffered cells): cached-Series ``.iat``/``.iloc`` —
-      whole-column materialization there costs more than it saves.
-
-    Both regimes yield the same values the old iloc path did
-    (datetime64 → pd.Timestamp, numpy scalars native via _native)."""
-
-    _DENSE_MAX = 2_000_000
-
-    def __init__(self, pdf):
-        self._pdf = pdf
-        self._dense = len(pdf) <= self._DENSE_MAX
-        self._cols: dict = {}
-
-    def _series(self, c):
-        got = self._cols.get(c)
-        if got is None:
-            got = self._cols[c] = (
-                self._pdf[c].tolist() if self._dense else self._pdf[c]
-            )
-        return got
-
-    def cell(self, c, i):
-        col = self._series(c)
-        return _cell_native(col[i] if self._dense else col.iat[i])
-
-    def row(self, cols, i):
-        return {c: self.cell(c, i) for c in cols}
-
-    def slice_native(self, c, i, j):
-        col = self._series(c)
-        vals = col[i:j] if self._dense else col.iloc[i:j]
-        return [_cell_native(v) for v in vals]
-
-
-def _revive_datetime_cols(bdf, like_pdf):
-    import pandas as pd
-
-    for c in like_pdf.columns:
-        if str(like_pdf[c].dtype).startswith("datetime64"):
-            bdf[c] = pd.to_datetime(bdf[c])
-    return bdf
-
-
-def _revive_ts_fields(e, ts_cols):
-    """One buffered JSON row dict → emission: isoformat strings back
-    to pd.Timestamp for EVERY timestamp-typed column — a
-    timestamp-typed payload field must round-trip the JSON buffer
-    exactly like the time column (ADVICE r8 #2 and siblings)."""
-    import pandas as pd
-
-    rv = {c: pd.Timestamp(e[c]) for c in ts_cols if e.get(c) is not None}
-    return {**e, **rv} if rv else e
-
-
-def stream_stable_sharded(
-    df: DataFrame,
-    dt_s: float,
-    field: str,
-    by: Sequence[str],
-    time_col: str = "time",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_stable` (VERDICT r7
-    ask #1a): the identical per-key value-run state machine
-    (action.clj:2053-2138) through the sharded shell, with each
-    key's unconfirmed-run buffer carried as PARALLEL COLUMN ARRAYS
-    ({col: [values]}) instead of dict-per-row — the §39 micro-lesson
-    applied to row-buffer state. Python work per batch is
-    O(value-runs), not O(rows): run boundaries come from one
-    vectorized null-safe shift compare, confirmation points from
-    searchsorted, confirmed-run emission from slice coalescing (one
-    concat at the end), and only UNCONFIRMED rows (the flap buffer)
-    pay per-value JSON conversion. Bit-exact kept rows vs the
-    per-key twin (parity pytest)."""
-    import json as _json
-
-    import numpy as np
-    import pandas as pd
-
-    dt_us = int(round(dt_s * 1_000_000))
-
-    def _eq(a, b):
-        if a is None or b is None:
-            return a is None and b is None
-        if isinstance(a, float) and isinstance(b, float) and a != a and b != b:
-            return True
-        return a == b
-
-    def _store(v):
-        # keep NaN as NaN in the carry: Python json round-trips it
-        # and _eq treats NaN==NaN — matching the per-key twin.
-        # _native's NaN→None fold would make _eq(nan, None) False and
-        # reset the run at every micro-batch boundary (ADVICE r8 #1).
-        if isinstance(v, float) and v != v:
-            return float(v)
-        return _native(v)
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        if not n:
-            return pdf
-        t = _series_us(pdf[time_col])
-        ks_arr = np.asarray(ks, dtype=object)
-        kstart = np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        starts = np.flatnonzero(kstart)
-        ends = np.concatenate((starts[1:], [n]))
-        # out-of-order drop + running-max update per key, vectorized
-        # per segment: the slice is (key, time)-sorted so only rows
-        # below the key's STORED max can drop, and the new max is the
-        # segment's last timestamp
-        keep = np.ones(n, dtype=bool)
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            st = carry.get(ks_arr[s0])
-            if st is not None and st["s"][0] is not None:
-                keep[s0:e0] = t[s0:e0] >= st["s"][0]
-                st["s"][0] = max(st["s"][0], int(t[e0 - 1]))
-            elif st is not None:
-                st["s"][0] = int(t[e0 - 1])
-        if not keep.all():
-            pdf = pdf[keep].reset_index(drop=True)
-            ks_arr = ks_arr[keep]
-            t = t[keep]
-            n = len(pdf)
-            if not n:
-                return pdf
-            kstart = np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            starts = np.flatnonzero(kstart)
-            ends = np.concatenate((starts[1:], [n]))
-        # run boundaries: key change OR null-safe field value change
-        fs = pdf[field]
-        same_val = (fs.eq(fs.shift()) | (fs.isna() & fs.isna().shift(fill_value=False))).to_numpy(dtype=bool)
-        run_start = kstart | ~same_val
-        rstarts = np.flatnonzero(run_start)
-        rends = np.concatenate((rstarts[1:], [n]))
-        vals = fs.tolist()
-        cols = list(pdf.columns)
-        raw = _RawCols(pdf)
-
-        parts: list = []  # ordered mix of (i, j) slices and DataFrames
-
-        def emit_slice(i, j):
-            if parts and isinstance(parts[-1], list) and parts[-1][1] == i:
-                parts[-1][1] = j  # coalesce adjacent confirmed slices
-            else:
-                parts.append([i, j])
-
-        cur_key = None
-        st = None
-        for i, j in zip(rstarts.tolist(), rends.tolist()):
-            k = ks_arr[i]
-            if k != cur_key:
-                if cur_key is not None:
-                    carry[cur_key] = st
-                st = carry.get(k)
-                if st is None:
-                    # s = [max_us, has, value, flip_us, confirmed]
-                    st = {"s": [int(t[j - 1]), False, None, None, False],
-                          "b": None}
-                    # max over the FULL key segment was set above only
-                    # for existing states; find this key's segment end
-                    e0 = ends[np.searchsorted(starts, i, side="right") - 1]
-                    st["s"][0] = int(t[e0 - 1])
-                cur_key = k
-            v = vals[i]
-            if not (st["s"][1] and _eq(v, st["s"][2])):
-                st["s"][1] = True
-                st["s"][2] = _store(v)
-                st["s"][3] = int(t[i])
-                st["s"][4] = False
-                st["b"] = None
-            if not st["s"][4]:
-                thresh = st["s"][3] + dt_us
-                kk = i + int(np.searchsorted(t[i:j], thresh, side="right"))
-                if kk == j:  # run not yet stable: buffer the segment
-                    if st["b"] is None:
-                        st["b"] = {c: [] for c in cols}
-                    for c in cols:
-                        st["b"][c].extend(raw.slice_native(c, i, j))
-                else:  # confirmed at kk: flush buffer + whole segment
-                    st["s"][4] = True
-                    if st["b"] is not None and next(iter(st["b"].values())):
-                        bdf = pd.DataFrame(
-                            {c: st["b"][c] for c in cols}, columns=cols
-                        )
-                        parts.append(_revive_datetime_cols(bdf, pdf))
-                    st["b"] = None
-                    emit_slice(i, j)
-            else:
-                emit_slice(i, j)
-        if cur_key is not None:
-            carry[cur_key] = st
-        if not parts:
-            return pdf.iloc[0:0]
-        frames = [
-            pdf.iloc[p[0]:p[1]] if isinstance(p, list) else p for p in parts
+    def load(st):
+        if st is None:
+            return [], Decimal(0), Decimal(0), 0, 0
+        buf = [
+            (tt, None if a is None else Decimal(a), None if b is None else Decimal(b))
+            for tt, a, b in st["b"]
         ]
-        return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+        # pre-r8 carries had no term counters: every stored term was
+        # non-NULL then, so recount from the buffer
+        c1 = st.get("c1", sum(1 for e in buf if e[1] is not None))
+        c2 = st.get("c2", sum(1 for e in buf if e[2] is not None))
+        return buf, Decimal(st["s1"]), Decimal(st["s2"]), c1, c2
 
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_coalesce_sharded(
-    df: DataFrame,
-    duration_s: float,
-    fields: Sequence[str],
-    by: Sequence[str],
-    time_col: str = "time",
-    ttl_col: str = "ttl",
-    state_col: str = "state",
-    default_ttl_s: float = 120.0,
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_coalesce` (keyed form
-    only — the reference's UNKEYED coalesce has one global tick
-    clock and stays a single state group by definition). Identical
-    per-key recurrence (action.clj:721-791: latest event per fields
-    tuple, flush on event-time tick, event.clj:12-19 expiry), with
-    each key's buffer carried COLUMNAR and batch rows referenced by
-    POSITION until the end of the batch: the per-event loop touches
-    only scalars/tuples (tick clock, dict upsert, expiry compare) —
-    no dict-per-row serialization; JSON conversion happens once per
-    batch for the rows still buffered at its end, and emission is
-    two positional gathers (batch-sourced + carry-sourced) merged
-    back into flush order. Bit-exact emitted rows vs the per-key
-    twin (parity pytest)."""
-    import json as _json
-
-    import numpy as np
-    import pandas as pd
-
-    dur_us = int(round(duration_s * 1_000_000))
-    default_ttl_us = int(round(default_ttl_s * 1_000_000))
-    has_ttl_col = ttl_col in df.columns
-    has_state_col = state_col in df.columns
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        if not n:
-            return pdf
-        t = _series_us(pdf[time_col])
-        null_t = pdf[time_col].isna().to_numpy(dtype=bool)
-        cols = list(pdf.columns)
-        f_arrs = [pdf[f].tolist() for f in fields]
-        st_arr = pdf[state_col].tolist() if has_state_col else None
-        ttl_arr = (
-            pdf[ttl_col].to_numpy(dtype="float64", na_value=np.nan)
-            if has_ttl_col
-            else None
-        )
-
-        def batch_expired(i, ti, ct):
-            if st_arr is not None and st_arr[i] == "expired":
-                return True
-            ttl_us = default_ttl_us
-            if ttl_arr is not None and ttl_arr[i] == ttl_arr[i]:
-                ttl_us = int(round(float(ttl_arr[i]) * 1_000_000))
-            return ct - ti > ttl_us
-
-        def old_expired(store, idx, ti, ct):
-            if has_state_col and store[state_col][idx] == "expired":
-                return True
-            ttl_us = default_ttl_us
-            if has_ttl_col and store[ttl_col][idx] is not None:
-                ttl_us = int(round(float(store[ttl_col][idx]) * 1_000_000))
-            return ct - ti > ttl_us
-
-        ks_arr = np.asarray(ks, dtype=object)
-        raw = _RawCols(pdf)
-        emit: list = []  # (src 0=batch/1=old_of_key, row idx, store ref)
-        live: dict = {}  # key -> [ct, lt, buf{ftk: [src, idx, t_us]}, store]
-
-        def _load(k):
-            got = live.get(k)
-            if got is not None:
-                return got
-            c = carry.get(k)
-            if c is None:
-                cur = [0, None, {}, None]
-            else:
-                store = c["bc"]
-                buf = {
-                    fk: [1, x, c["bt"][x]] for x, fk in enumerate(c["bf"])
-                }
-                cur = [c["ct"], c["lt"], buf, store]
-            live[k] = cur
-            return cur
-
-        cur_key = None
-        cur = None
-        for i in range(n):
-            if null_t[i]:
-                continue
-            k = ks_arr[i]
-            if k != cur_key:
-                cur = _load(k)
-                cur_key = k
-            ti = int(t[i])
-            if ti > cur[0]:
-                cur[0] = ti
-            if batch_expired(i, ti, cur[0]):
-                continue
-            # _cell_native, not _native: a timestamp-typed fields
-            # column must isoformat (the per-key twin's _row_ser
-            # rule) — raw pd.Timestamp is not JSON-serializable
-            # (ADVICE r8 #2)
-            ftk = _json.dumps([_cell_native(a[i]) for a in f_arrs])
-            buf = cur[2]
-            ent = buf.get(ftk)
-            # e/most-recent?: the stored event wins ties
-            if ent is None or ent[2] < ti:
-                buf[ftk] = [0, i, ti]
-            if cur[1] is None:
-                cur[1] = ti
-            elif cur[0] >= cur[1] + dur_us:
-                alive = {}
-                for fk, e in buf.items():
-                    if e[0] == 0:
-                        dead = batch_expired(e[1], e[2], cur[0])
-                    else:
-                        dead = old_expired(cur[3], e[1], e[2], cur[0])
-                    if not dead:
-                        alive[fk] = e
-                        emit.append((e[0], e[1], cur[3]))
-                cur[2] = alive
-                cur[1] = cur[0]
-        # rebuild each touched key's carry: surviving buffer rows go
-        # columnar (batch-sourced rows pay JSON conversion HERE, once)
-        for k, cur in live.items():
-            buf = cur[2]
-            if not buf:
-                carry[k] = {"ct": cur[0], "lt": cur[1], "bf": [], "bt": [],
-                            "bc": {c: [] for c in cols}}
-                continue
-            bf, bt = [], []
-            bc: dict = {c: [] for c in cols}
-            for fk, e in buf.items():
-                bf.append(fk)
-                bt.append(e[2])
-                if e[0] == 0:
-                    i = e[1]
-                    for c in cols:
-                        bc[c].append(raw.cell(c, i))
-                else:
-                    store = cur[3]
-                    for c in cols:
-                        bc[c].append(store[c][e[1]])
-            carry[k] = {"ct": cur[0], "lt": cur[1], "bf": bf, "bt": bt, "bc": bc}
-        if not emit:
-            return pdf.iloc[0:0]
-        b_pos = [p for p, e in enumerate(emit) if e[0] == 0]
-        o_pos = [p for p, e in enumerate(emit) if e[0] == 1]
-        frames = []
-        if b_pos:
-            frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
-        if o_pos:
-            odf = pd.DataFrame(
-                {c: [emit[p][2][c][emit[p][1]] for p in o_pos] for c in cols},
-                columns=cols,
-            )
-            frames.append(_revive_datetime_cols(odf, pdf))
-        if len(frames) == 1:
-            return frames[0]
-        out = pd.concat(frames, ignore_index=True)
-        # concat row q holds emit position (b_pos+o_pos)[q]; restore
-        # flush order by sorting rows on that position
-        return out.iloc[np.argsort(np.asarray(b_pos + o_pos), kind="stable")]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-
-def stream_fixed_event_window_sharded(
-    df: DataFrame,
-    n: int,
-    by: Sequence[str],
-    time_col: str = "time",
-    fork_ttl_s: float | None = None,
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_fixed_event_window`
-    (r8 — the event-window half of the row-buffer tier): identical
-    per-key count-buffer + event-clock :fork-ttl gap eviction
-    (stream_test.clj:331-408 semantics) through the sharded shell.
-    Each key's partial window carries COLUMNAR ({col: [...]}, ≤ n-1
-    rows); batch rows are referenced by position and serialize at
-    most once — when they emit into a window or remain buffered at
-    batch end. Bit-exact emitted windows vs the per-key twin
-    (parity pytest)."""
-    import numpy as np
-    import pandas as pd
-
-    ttl_us = int(round(fork_ttl_s * 1_000_000)) if fork_ttl_s else None
-    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-    key_cols = list(by)
-    ev_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    by_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-        if f.name in by
-    )
-    out_schema = (
-        f"{by_struct}, window_start double, events array<struct<{ev_struct}>>"
-    )
-
-    def shard_fold(carry, ks, pdf):
-        cols = list(pdf.columns)
-        out_rows: list = []
-        m = len(pdf)
-        if m:
-            raw = _RawCols(pdf)
-            t = _series_us(pdf[time_col])
-            ks_arr = np.asarray(ks, dtype=object)
-            starts = np.flatnonzero(
-                np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            )
-            ends = np.concatenate((starts[1:], [m]))
-
-            def revive(e):
-                return _revive_ts_fields(e, ts_cols)
-
-            for s0, e0 in zip(starts.tolist(), ends.tolist()):
-                k = ks_arr[s0]
-                st = carry.get(k)
-                if st is None:
-                    last_us = None
-                    buf: list = []
-                else:
-                    last_us = st["l"]
-                    bc = st["b"]
-                    blen = len(next(iter(bc.values()))) if bc else 0
-                    buf = [
-                        {c: bc[c][x] for c in cols} for x in range(blen)
-                    ]
-                keyvals = {c: pdf.iloc[s0][c] for c in key_cols}
+    def fold(carry, segs, pdf):
+        t = _series_us(pdf[time_col]).tolist()
+        vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan).tolist()
+        zs = np.full(len(t), np.nan)
+        with localcontext() as ctx:
+            ctx.prec = _ZSCORE_PREC
+            for k, s0, e0 in segs:
+                buf, s1, s2, c1, c2 = load(carry.get(k))
                 for i in range(s0, e0):
-                    ti = int(t[i])
-                    if (
-                        ttl_us is not None
-                        and last_us is not None
-                        and ti - last_us > ttl_us
-                    ):
-                        buf = []  # stale fork: GC dropped it pre-event
-                    buf.append(i)
-                    last_us = ti
-                    if len(buf) == n:
-                        evs = [
-                            revive(e if isinstance(e, dict)
-                                   else raw.row(cols, e))
-                            for e in buf
-                        ]
-                        first = evs[0][time_col]
-                        start = (
-                            first.timestamp()
-                            if hasattr(first, "timestamp")
-                            else float(first)
-                        )
-                        out_rows.append(
-                            {**keyvals, "window_start": start, "events": evs}
-                        )
-                        buf = []
-                rest = [
-                    e if isinstance(e, dict) else raw.row(cols, e)
-                    for e in buf
-                ]
+                    ti, v = t[i], vals[i]
+                    m = 0.0 if v != v else v
+                    q1, q2 = _zscore_q9(m), _zscore_q9(m * m)
+                    buf.append((ti, q1, q2))
+                    if q1 is not None:
+                        s1 += q1
+                        c1 += 1
+                    if q2 is not None:
+                        s2 += q2
+                        c2 += 1
+                    lo = ti - win_us
+                    drop = 0
+                    for tt, a, b in buf:
+                        if tt >= lo:
+                            break
+                        if a is not None:
+                            s1 -= a
+                            c1 -= 1
+                        if b is not None:
+                            s2 -= b
+                            c2 -= 1
+                        drop += 1
+                    if drop:
+                        del buf[:drop]
+                    n = len(buf)
+                    if n >= min_n and v == v and c1 and c2:
+                        nd = float(n)
+                        mean = float(s1) / nd
+                        var = max(float(s2) / nd - mean * mean, 0.0)
+                        if var > 0.0:
+                            zs[i] = (v - mean) / math.sqrt(var)
                 carry[k] = {
-                    "l": last_us,
-                    "b": {c: [e[c] for e in rest] for c in cols} if rest else {},
+                    "b": [
+                        [tt, None if a is None else str(a), None if b is None else str(b)]
+                        for tt, a, b in buf
+                    ],
+                    "s1": str(s1), "s2": str(s2), "c1": c1, "c2": c2,
                 }
-        if not out_rows:
-            return pd.DataFrame(
-                columns=key_cols + ["window_start", "events"]
-            )
-        return pd.DataFrame(out_rows)
+        res = pdf.copy()
+        res[out] = pd.array(zs, dtype="float64")
+        return res
 
-    return _sharded_keyed_batch_scan(
-        df, by, time_col, shards, shard_fold, out_schema=out_schema
+    return _keyed_scan(
+        df, by, time_col, fold, shards, extra_out=f"{out} double",
+        state_ttl_s=state_ttl_s, ttl_clock="processing",
     )
-
-
-def stream_moving_event_window_sharded(
-    df: DataFrame,
-    n: int,
-    by: Sequence[str],
-    time_col: str = "time",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_moving_event_window`:
-    per event, the trailing ≤ n events of its key as an ``events``
-    array — the same sliding dict buffer, one shard call instead of
-    one per key. Emission cost is O(rows·n) dict lists in BOTH
-    tiers (the output shape demands it); sharding removes only the
-    per-key interpreter round-trips. Bit-exact vs the per-key twin
-    (parity pytest)."""
-    import numpy as np
-    import pandas as pd
-
-    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-    ev_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    extra_out = f"events array<struct<{ev_struct}>>"
-
-    def shard_fold(carry, ks, pdf):
-        m = len(pdf)
-        cols = list(pdf.columns)
-        events_col: list = [None] * m
-        if m:
-            raw = _RawCols(pdf)
-            ks_arr = np.asarray(ks, dtype=object)
-            starts = np.flatnonzero(
-                np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            )
-            ends = np.concatenate((starts[1:], [m]))
-
-            def revive(e):
-                return _revive_ts_fields(e, ts_cols)
-
-            for s0, e0 in zip(starts.tolist(), ends.tolist()):
-                k = ks_arr[s0]
-                bc = carry.get(k)
-                if bc:
-                    blen = len(next(iter(bc.values())))
-                    buf = [{c: bc[c][x] for c in cols} for x in range(blen)]
-                else:
-                    buf = []
-                for i in range(s0, e0):
-                    buf.append(raw.row(cols, i))
-                    buf = buf[-n:]
-                    events_col[i] = [revive(e) for e in buf]
-                carry[k] = {c: [e[c] for e in buf] for c in cols} if buf else {}
-        out = pdf.copy()
-        out["events"] = events_col
-        return out
-
-    return _sharded_keyed_batch_scan(
-        df, by, time_col, shards, shard_fold, extra_out=extra_out
-    )
-
-
-def stream_expired_sharded(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    ttl_col: str | None = "ttl",
-    state_col: str | None = "state",
-    keep_expired: bool = True,
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_expired` (completing
-    the scalar-state tier): the per-key running-max clock carries in
-    the shard map, the whole shard slice evaluates in ONE vectorized
-    pass — segment starts seed each key's accumulate from the carry,
-    segment ends write it back; Python work is O(distinct keys in
-    batch). Bit-exact kept rows vs the per-key twin (parity
-    pytest)."""
-    import numpy as np
-
-    has_ttl = ttl_col is not None and ttl_col in df.columns
-    has_state = state_col is not None and state_col in df.columns
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        if not n:
-            return pdf
-        has_time = pdf[time_col].notna().to_numpy(dtype=bool)
-        t = _series_us(pdf[time_col]).astype("float64")
-        t = np.where(has_time, t, -np.inf)  # null time: no age, no clock
-        ks_arr = np.asarray(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        ends = np.concatenate((starts[1:], [n]))
-        run = np.empty(n, dtype="float64")
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            k = ks_arr[s0]
-            seg = np.maximum.accumulate(t[s0:e0])
-            mx = carry.get(k)
-            if mx is not None:
-                seg = np.maximum(seg, float(mx))
-            run[s0:e0] = seg
-            fin = seg[np.isfinite(seg)]
-            if len(fin):
-                carry[k] = float(fin[-1])
-        age_s = (run - t) / 1_000_000.0
-        if has_ttl:
-            ttl = pdf[ttl_col].astype("float64").fillna(120.0).to_numpy()
-        else:
-            ttl = np.full(n, 120.0)
-        exp = (age_s > ttl) & has_time
-        if has_state:
-            exp |= (pdf[state_col] == "expired").to_numpy(dtype=bool)
-        return pdf[exp if keep_expired else ~exp]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_smax_sharded(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality smax with the per-key twin's PER-EVENT
-    emission (action.clj:2742-2772 — forward the best-so-far event
-    for every input event; :func:`stream_smax_jvm` is the
-    per-batch-grain alternative): the stored-best row carries in the
-    shard map as one JSON dict per key, the fold walks the shard
-    slice with carry reload at key boundaries only, and the output
-    materializes as two positional gathers (batch-sourced winners +
-    carry-sourced re-emits) merged back into event order — no
-    per-event dict building. Bit-exact vs :func:`stream_smax`
-    (parity pytest); DSL-reachable via ``by {"shards": N}``."""
-    import numpy as np
-    import pandas as pd
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        if not n:
-            return pdf
-        cols = list(pdf.columns)
-        raw = _RawCols(pdf)
-        v = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        ks_arr = np.asarray(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        ends = np.concatenate((starts[1:], [n]))
-        emit: list = []  # ("b", idx) batch winner | ("o", dict) carried best
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            k = ks_arr[s0]
-            st = carry.get(k)
-            if st is None:
-                have = False
-                best_v = -np.inf
-                best_ref = None
-            else:
-                have = True
-                best_v = -np.inf if st["m"] is None else float(st["m"])
-                best_ref = ("o", st["b"])
-            for i in range(s0, e0):
-                x = v[i]
-                if not have or (x == x and x > best_v):
-                    best_ref = ("b", i)
-                    have = True
-                    if x == x:
-                        best_v = x
-                emit.append(best_ref)
-            # save state: winner row serialized once per batch per key
-            if best_ref is not None and best_ref[0] == "b":
-                i = best_ref[1]
-                carry[k] = {
-                    "m": None if v[i] != v[i] else float(v[i]),
-                    "b": raw.row(cols, i),
-                }
-        b_pos = [p for p, e in enumerate(emit) if e[0] == "b"]
-        o_pos = [p for p, e in enumerate(emit) if e[0] == "o"]
-        frames = []
-        if b_pos:
-            frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
-        if o_pos:
-            odf = pd.DataFrame(
-                {c: [emit[p][1][c] for p in o_pos] for c in cols}, columns=cols
-            )
-            frames.append(_revive_datetime_cols(odf, pdf))
-        if len(frames) == 1:
-            return frames[0]
-        out = pd.concat(frames, ignore_index=True)
-        return out.iloc[np.argsort(np.asarray(b_pos + o_pos), kind="stable")]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_smin_sharded(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality smin with per-event emission: the negate-
-    compare-negate composition of :func:`stream_smin`, through the
-    sharded smax fold (the stored metric stays un-negated)."""
-    neg = df.withColumn(metric_col, -F.col(metric_col))
-    out = stream_smax_sharded(
-        neg, by, time_col, metric_col, shards=shards
-    )
-    return out.withColumn(metric_col, -F.col(metric_col))

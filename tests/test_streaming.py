@@ -2038,7 +2038,7 @@ def test_stream_ewma_sharded_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    out = core.stream_ewma_sharded(
+    out = core.stream_ewma(
         stream, 0.25, by=["host"], time_col="time", metric_col="metric", shards=4
     )
     q = (
@@ -2055,7 +2055,8 @@ def test_stream_ewma_sharded_parity(spark, tmp_path):
 
 
 def test_stream_cond_dt_sharded_parity(spark, tmp_path):
-    """Sharded cond-dt emits exactly the per-key twin's rows: 200
+    """Sharded cond-dt emits exactly the per-key layout's rows and
+    the batch twin's (above-dt): 200
     keys with flip/hold/reset patterns through 4 shards across a
     two-file micro-batch split."""
     import pyspark.sql.functions as F
@@ -2101,15 +2102,18 @@ def test_stream_cond_dt_sharded_parity(spark, tmp_path):
         return {r.event_id for r in spark.sql(f"SELECT * FROM {name}").collect()}
 
     per_key = run(core.stream_cond_dt, "cds_per_key")
-    sharded = run(core.stream_cond_dt_sharded, "cds_sharded", shards=4)
-    assert sharded == per_key
+    sharded = run(core.stream_cond_dt, "cds_sharded", shards=4)
+    ref = {r.event_id for r in _batch_twin(
+        df, "above-dt", {"threshold": 100.0, "duration": 5.0})}
+    assert sharded == per_key == ref
     assert 0 < len(per_key) < 1600  # the condition actually filters
 
 
 def test_by_shards_dsl_dispatches_sharded_twins(spark, tmp_path):
-    """`by {"fields": [...], "shards": N}` flips the fork's ewma /
-    cond-dt streaming twins to shard-mapped keyed state with
-    unchanged values (the high-cardinality shape, PERF §39)."""
+    """`by {"fields": [...], "shards": N}` flips the fork's ewma to
+    shard-mapped keyed state with unchanged values (the
+    high-cardinality shape, PERF §39): per key == sharded == the same
+    tree compiled over the static input."""
     import json as _json
 
     import pyspark.sql.functions as F
@@ -2157,12 +2161,21 @@ def test_by_shards_dsl_dispatches_sharded_twins(spark, tmp_path):
 
     per_key = run(tree(None), "ew")
     sharded = run(tree(3), "ew")
-    assert sharded == per_key and len(per_key) == 20
+    static = (
+        spark.read.format("json").schema("time double, metric double, host string")
+        .load(str(src_dir)).withColumn("time", F.timestamp_seconds("time"))
+    )
+    batch = sorted(
+        (r.host, r.time.timestamp(), r.metric)
+        for r in compile_stream(static, tree(None), Ctx()).taps["ew"].collect()
+    )
+    assert sharded == per_key == batch and len(per_key) == 20
 
 
 def test_stream_sharded_changed_ddt_zscore_parity(spark, tmp_path):
-    """The r7 sharded tier (changed / ddt / zscore) emits exactly the
-    per-key twins' rows and values across a two-file micro-batch
+    """The sharded layout of changed / ddt / zscore emits exactly the
+    per-key layout's rows and values, and the batch twins', across a
+    two-file micro-batch
     split — including null metrics, :init semantics, and zscore's
     decimal-exact moments."""
     import pyspark.sql.functions as F
@@ -2210,32 +2223,37 @@ def test_stream_sharded_changed_ddt_zscore_parity(spark, tmp_path):
         lambda s: core.stream_changed(s, "state", by=["host"], time_col="time", init="ok"),
         "sh3_chg_pk")}
     shd = {r.event_id for r in run(
-        lambda s: core.stream_changed_sharded(s, "state", by=["host"], time_col="time",
+        lambda s: core.stream_changed(s, "state", by=["host"], time_col="time",
                                               init="ok", shards=4), "sh3_chg_sh")}
-    assert shd == per and 0 < len(per) < 960
+    ref = {r.event_id for r in _batch_twin(df, "changed", {"field": "state", "init": "ok"})}
+    assert shd == per == ref and 0 < len(per) < 960
 
     # ddt
     per_d = {r.event_id: r.metric for r in run(
         lambda s: core.stream_ddt(s, by=["host"], time_col="time"), "sh3_ddt_pk")}
     shd_d = {r.event_id: r.metric for r in run(
-        lambda s: core.stream_ddt_sharded(s, by=["host"], time_col="time", shards=4),
+        lambda s: core.stream_ddt(s, by=["host"], time_col="time", shards=4),
         "sh3_ddt_sh")}
-    assert shd_d == per_d and len(per_d) > 500
+    ref_d = {r.event_id: r.metric for r in _batch_twin(df, "ddt")}
+    assert shd_d == per_d == ref_d and len(per_d) > 500
 
     # zscore (bit-exact)
     per_z = {r.event_id: r.zscore for r in run(
         lambda s: core.stream_zscore(s, 50.0, by=["host"], time_col="time",
                                      metric_col="metric", min_n=2), "sh3_zs_pk")}
     shd_z = {r.event_id: r.zscore for r in run(
-        lambda s: core.stream_zscore_sharded(s, 50.0, by=["host"], time_col="time",
+        lambda s: core.stream_zscore(s, 50.0, by=["host"], time_col="time",
                                              metric_col="metric", min_n=2, shards=4),
         "sh3_zs_sh")}
-    assert set(shd_z) == set(per_z)
-    assert not {k for k in per_z if shd_z[k] != per_z[k]}
+    ref_z = {r.event_id: r.zscore for r in _batch_twin(
+        df, "zscore", {"window": 50.0, "min-n": 2})}
+    assert set(shd_z) == set(per_z) == set(ref_z)
+    assert not {k for k in per_z if shd_z[k] != per_z[k] or ref_z[k] != per_z[k]}
 
 
 def test_stream_throttle_sharded_parity(spark, tmp_path):
-    """Sharded throttle keeps exactly the per-key twin's rows across
+    """Sharded throttle keeps exactly the per-key layout's rows (and
+    the batch twin's) across
     a micro-batch split (anchored-window recurrence)."""
     import pyspark.sql.functions as F
 
@@ -2271,73 +2289,14 @@ def test_stream_throttle_sharded_parity(spark, tmp_path):
         return {r.event_id for r in spark.sql(f"SELECT * FROM {name}").collect()}
 
     per = run(core.stream_throttle, "ths_pk")
-    shd = run(core.stream_throttle_sharded, "ths_sh", shards=4)
-    assert shd == per and 0 < len(per) < 1200
-
-
-def test_stream_changed_jvm_fb_parity(spark, tmp_path):
-    """The foreachBatch pure-JVM changed tier (VERDICT r8 ask #6)
-    emits exactly the per-key twin's rows across a micro-batch split
-    — within-batch lag, cross-batch parquet state join, :init
-    semantics, null field values."""
-    import pyspark.sql.functions as F
-
-    from mirabelle_spark.streaming import core
-
-    rows = []
-    eid = 0
-    for i in range(80):
-        host = f"h{i:03d}"
-        for j in range(8):
-            state = (
-                ["ok", "ok", "warn", "warn", "ok", "crit", None, "ok"][j]
-                if i % 2 == 0
-                else "ok"
-            )
-            rows.append((eid, host, float(j * 15), state))
-            eid += 1
-    df = spark.createDataFrame(
-        rows, "event_id bigint, host string, t double, state string"
-    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
-
-    src_dir = str(tmp_path / "cj_in")
-    df.where("event_id % 8 < 4").coalesce(1).write.mode("append").parquet(src_dir)
-    df.where("event_id % 8 >= 4").coalesce(1).write.mode("append").parquet(src_dir)
-
-    def stream():
-        return (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-
-    # per-key twin (memory sink)
-    out = core.stream_changed(stream(), "state", by=["host"], time_col="time",
-                              init="ok")
-    q = (
-        out.writeStream.format("memory").queryName("cj_pk")
-        .option("checkpointLocation", str(tmp_path / "cj_pk_ck"))
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    per = sorted(r.event_id for r in spark.sql("SELECT event_id FROM cj_pk").collect())
-
-    # JVM tier: collect emitted batches through out_writer
-    got: list = []
-
-    def collect_writer(bdf, _bid):
-        got.extend(r.event_id for r in bdf.select("event_id").collect())
-
-    q = core.stream_changed_jvm_run(
-        stream(), "state", by=["host"], work_dir=str(tmp_path / "cj_jvm"),
-        time_col="time", init="ok", out_writer=collect_writer,
-    )
-    q.awaitTermination()
-    assert sorted(got) == per and 0 < len(per) < 640
+    shd = run(core.stream_throttle, "ths_sh", shards=4)
+    ref = {r.event_id for r in _batch_twin(df, "throttle", {"count": 2, "duration": 10.0})}
+    assert shd == per == ref and 0 < len(per) < 1200
 
 
 def test_stream_smax_smin_sharded_parity(spark, tmp_path):
-    """The sharded smax/smin tier keeps the per-key twins' PER-EVENT
+    """Sharded smax/smin keep the per-key layout's (and the batch
+    twins') PER-EVENT
     emission bit-exactly across a micro-batch split — including null
     metrics and carried-best re-emits (ADVICE r8 #3: the tier is now
     exported, DSL-dispatched via by{shards}, and parity-proven)."""
@@ -2351,7 +2310,9 @@ def test_stream_smax_smin_sharded_parity(spark, tmp_path):
         host = f"h{i:03d}"
         for j in range(8):
             v = None if (i + j) % 17 == 5 else float((i * 31 + j * 7) % 53) - 26.0
-            rows.append((eid, host, float(j * 10), v))
+            # some fractional times: carried rows then revive from two
+            # isoformat layouts in one column
+            rows.append((eid, host, j * 10 + (0.25 if (i + j) % 3 == 0 else 0.0), v))
             eid += 1
     df = spark.createDataFrame(
         rows, "event_id bigint, host string, t double, metric double"
@@ -2380,17 +2341,19 @@ def test_stream_smax_smin_sharded_parity(spark, tmp_path):
 
     per_mx = run(lambda s: core.stream_smax(s, by=["host"], time_col="time"), "smx_pk")
     shd_mx = run(
-        lambda s: core.stream_smax_sharded(s, by=["host"], time_col="time", shards=4),
+        lambda s: core.stream_smax(s, by=["host"], time_col="time", shards=4),
         "smx_sh",
     )
-    assert shd_mx == per_mx and len(per_mx) == 800  # per-event: one emit per input
+    ref_mx = sorted((r.event_id, r.metric) for r in _batch_twin(df, "smax"))
+    assert shd_mx == per_mx == ref_mx and len(per_mx) == 800  # one emit per input
 
     per_mn = run(lambda s: core.stream_smin(s, by=["host"], time_col="time"), "smn_pk")
     shd_mn = run(
-        lambda s: core.stream_smin_sharded(s, by=["host"], time_col="time", shards=4),
+        lambda s: core.stream_smin(s, by=["host"], time_col="time", shards=4),
         "smn_sh",
     )
-    assert shd_mn == per_mn and len(per_mn) == 800
+    ref_mn = sorted((r.event_id, r.metric) for r in _batch_twin(df, "smin"))
+    assert shd_mn == per_mn == ref_mn and len(per_mn) == 800
 
 
 def test_stream_stable_sharded_nan_run_parity(spark, tmp_path):
@@ -2444,12 +2407,13 @@ def test_stream_stable_sharded_nan_run_parity(spark, tmp_path):
         "stn_pk",
     )
     shd = run(
-        lambda s: core.stream_stable_sharded(
+        lambda s: core.stream_stable(
             s, 20.0, "metric", by=["host"], time_col="time", shards=4
         ),
         "stn_sh",
     )
-    assert shd == per and len(per) > 150  # NaN runs DO confirm
+    ref = sorted(r.event_id for r in _batch_twin(df, "stable", 20.0, "metric"))
+    assert shd == per == ref and len(per) > 150  # NaN runs DO confirm
 
 
 def test_stream_coalesce_sharded_timestamp_fields_parity(spark, tmp_path):
@@ -2503,12 +2467,18 @@ def test_stream_coalesce_sharded_timestamp_fields_parity(spark, tmp_path):
         "cts_pk",
     )
     shd = run(
-        lambda s: core.stream_coalesce_sharded(
+        lambda s: core.stream_coalesce(
             s, 60.0, ["seen"], by=["host"], time_col="time", shards=4
         ),
         "cts_sh",
     )
-    assert shd == per and len(per) > 0
+    seen = {r.event_id: str(r.seen) for r in df.collect()}
+    ref = sorted(
+        (eid, seen[eid])
+        for eid, n in _coalesce_model(df.collect(), 60.0, ["seen"]).items()
+        for _ in range(n)
+    )
+    assert shd == per == ref and len(per) > 0
 
     # the window row-buffers JSON-carry whole rows too: a timestamp
     # payload column must revive in their events structs as well
@@ -2534,12 +2504,20 @@ def test_stream_coalesce_sharded_timestamp_fields_parity(spark, tmp_path):
         "cts_few_pk",
     )
     shd_w = run_win(
-        lambda s: core.stream_fixed_event_window_sharded(
+        lambda s: core.stream_fixed_event_window(
             s, 3, by=["host"], time_col="time", shards=4
         ),
         "cts_few_sh",
     )
-    assert shd_w == per_w and len(per_w) == 60  # 30 hosts × 2 full windows
+    def members(rows_):
+        return sorted((r[0], r[2]) for r in rows_)
+
+    ref_w = sorted(
+        (r.host, tuple(str(e.seen) for e in r.events))
+        for r in _batch_twin(df, "fixed-event-window", {"size": 3})
+    )
+    assert shd_w == per_w and members(per_w) == ref_w
+    assert len(per_w) == 60  # 30 hosts × 2 full windows
 
 
 def test_streaming_document_pipeline_end_to_end(spark, tmp_path):
@@ -2629,7 +2607,7 @@ def test_sharded_state_ttl_evicts_idle_keys(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    out = core.stream_ewma_sharded(
+    out = core.stream_ewma(
         stream, 0.5, by=["host"], time_col="time", metric_col="metric",
         shards=1, state_ttl_s=100.0,
     )
@@ -2674,7 +2652,7 @@ def test_sharded_key_strings_type_stable_with_null_keys(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    out = core.stream_ewma_sharded(
+    out = core.stream_ewma(
         stream, 0.5, by=["service_id"], time_col="time", metric_col="metric",
         shards=1,
     )
@@ -2730,19 +2708,8 @@ def test_stream_changed_sharded_timestamp_field(spark, tmp_path):
         return {r.event_id for r in spark.sql(f"SELECT * FROM {name}").collect()}
 
     per = run(core.stream_changed, "tsf_pk")
-    shd = run(core.stream_changed_sharded, "tsf_sh", shards=2)
+    shd = run(core.stream_changed, "tsf_sh", shards=2)
     assert shd == per == {0, 2}
-
-    # non-JSON-carryable dtypes raise a NAMED error up front
-    import pytest as _pytest
-
-    dec_df = df.withColumn("updated_at", F.col("event_id").cast("decimal(10,2)"))
-    stream = spark.readStream.schema(dec_df.schema).parquet(src_dir)
-    with _pytest.raises(NotImplementedError, match="decimal"):
-        core.stream_changed_sharded(
-            stream.withColumn("updated_at", F.col("event_id").cast("decimal(10,2)")),
-            "updated_at", by=["host"], time_col="time",
-        )
 
 
 def test_stream_zscore_huge_values_fold_exact(spark, tmp_path):
@@ -2806,7 +2773,7 @@ def test_stream_zscore_huge_values_fold_exact(spark, tmp_path):
 
     for fn, name, kw in (
         (core.stream_zscore, "zsh_pk", {}),
-        (core.stream_zscore_sharded, "zsh_sh", {"shards": 2}),
+        (core.stream_zscore, "zsh_sh", {"shards": 2}),
     ):
         stream = (
             spark.readStream.schema(df.schema)
@@ -2863,20 +2830,71 @@ def test_shard_key_strings_injective_adversarial():
     assert len(set(ks1)) == 3
 
 
-def test_stream_changed_sharded_rejects_interval(spark, tmp_path):
-    """ADVICE r7 (low): an interval-typed field must hit the up-front
-    NotImplementedError (exact dtype names), not a runtime json.dumps
-    failure inside the executor."""
-    df = spark.createDataFrame(
-        [(0, "a", 1.0)], "event_id bigint, host string, t double"
-    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))) \
-     .withColumn("gap", F.expr("make_dt_interval(0, 0, 0, event_id)")).drop("t")
-    assert dict(df.dtypes)["gap"].startswith("interval")
-
+def test_stream_changed_interval_field(spark, tmp_path):
+    """An interval-typed watched field carries through both shells
+    (the per-key form always accepted it; the sharded carry codec now
+    holds it as integer nanoseconds): per key == shards=2 == the
+    hand-computed changes, across a micro-batch split."""
     from mirabelle_spark.streaming import core
 
-    with pytest.raises(NotImplementedError, match="interval"):
-        core.stream_changed_sharded(df, "gap", by=["host"], time_col="time")
+    gaps = [1, 1, 2, None, None, 2]
+    df = spark.createDataFrame(
+        [(i, "a", float(i), g) for i, g in enumerate(gaps)],
+        "event_id bigint, host string, t double, g int",
+    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))) \
+     .withColumn("gap", F.expr("make_dt_interval(0, 0, 0, g)")).drop("t", "g")
+    assert dict(df.dtypes)["gap"].startswith("interval")
+
+    got, _ = _run_both_shells(spark, tmp_path, df, "event_id < 3", {
+        f"chg_iv_{tag}": (lambda s, kw=kw: core.stream_changed(
+            s, "gap", by=["host"], time_col="time", **kw))
+        for tag, kw in (("pk", {}), ("sh", {"shards": 2}))
+    })
+    for tag in ("pk", "sh"):
+        assert sorted(r.event_id for r in got[f"chg_iv_{tag}"]) == [0, 2, 3, 5], tag
+
+
+def test_stream_changed_every_field_dtype(spark, tmp_path):
+    """Every field dtype the per-key ``changed`` accepted before the
+    shells merged still works, in both shells, with the last value
+    carried across a micro-batch split: per key == shards=2 == the
+    hand-computed changes (values 1, 1, 2, NULL, NULL, 2, 3 per host).
+    Arrays hold two elements, so nested cells compare whole."""
+    from mirabelle_spark.streaming import core
+
+    exprs = {
+        "string": "CAST(v AS STRING)",
+        "boolean": "v % 2 = 0",
+        "double": "CAST(v AS DOUBLE) / 2",
+        "float": "CAST(v AS FLOAT)",
+        "tinyint": "CAST(v AS TINYINT)",
+        "smallint": "CAST(v AS SMALLINT)",
+        "int": "CAST(v AS INT)",
+        "bigint": "v",
+        "decimal": "CAST(v AS DECIMAL(10, 2))",
+        "date": "DATE_ADD(DATE'2024-01-01', CAST(v AS INT))",
+        "timestamp": "TIMESTAMP_SECONDS(v)",
+        "timestamp_ntz": "CAST(TIMESTAMP_SECONDS(v) AS TIMESTAMP_NTZ)",
+        "binary": "CAST(CAST(v AS STRING) AS BINARY)",
+        "interval": "MAKE_DT_INTERVAL(0, 0, 0, v)",
+        "array": "ARRAY(CAST(v AS STRING), 'x')",
+        "struct": "NAMED_STRUCT('a', v)",
+    }
+    vals = [1, 1, 2, None, None, 2, 3]
+    rows = [(i, "h", float(i), v) for i, v in enumerate(vals)]
+    rows += [(10 + i, "g", float(i), v) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "event_id bigint, host string, t double, v bigint") \
+        .withColumn("time", F.timestamp_seconds("t")) \
+        .selectExpr("event_id", "host", "time", *[f"{e} AS f_{n}" for n, e in exprs.items()])
+    expect = [0, 2, 3, 5, 6, 10, 12, 13, 15, 16]
+    for name in exprs:
+        got, _ = _run_both_shells(spark, tmp_path, df, "event_id % 10 < 3", {
+            f"chg_{name}_{tag}": (lambda s, kw=kw, name=name: core.stream_changed(
+                s, f"f_{name}", by=["host"], time_col="time", **kw))
+            for tag, kw in (("pk", {}), ("sh", {"shards": 2}))
+        })
+        for q, got_rows in got.items():
+            assert sorted(r.event_id for r in got_rows) == expect, q
 
 
 def _two_batch_runner(spark, tmp_path, df, split_pred, tag):
@@ -2903,8 +2921,178 @@ def _two_batch_runner(spark, tmp_path, df, split_pred, tag):
     return run
 
 
+def _coalesce_model(rows, duration_s, fields, by=("host",)):
+    """Emission multiset {event_id: times emitted} of the reference's
+    coalesce (action.clj:721-791): per key in event-time order, keep
+    the latest event per ``fields`` tuple (a stored event wins ties);
+    once the key's clock (its max event time) is ``duration_s`` past
+    the last tick, drop expired events (event.clj:12-19: state ==
+    "expired" or age > ttl, default 120 s) and emit every kept one.
+    An independent model: the batch coalesce does not re-emit on
+    every tick, so it cannot serve as the reference here."""
+    from datetime import timedelta
+
+    def expired(e, now):
+        ttl = e.get("ttl")
+        age = (now - e["time"]).total_seconds()
+        return e.get("state") == "expired" or age > (120.0 if ttl is None else ttl)
+
+    per_key: dict = {}
+    for r in sorted((r.asDict() for r in rows), key=lambda d: (d["time"], d["event_id"])):
+        per_key.setdefault(tuple(r[c] for c in by), []).append(r)
+    out: dict = {}
+    for events in per_key.values():
+        clock, tick, kept = None, None, {}
+        for e in events:
+            clock = e["time"] if clock is None else max(clock, e["time"])
+            if expired(e, clock):
+                continue
+            fk = tuple(e[f] for f in fields)
+            if fk not in kept or kept[fk]["time"] < e["time"]:
+                kept[fk] = e
+            if tick is None:
+                tick = e["time"]
+            elif clock >= tick + timedelta(seconds=duration_s):
+                kept = {k: v for k, v in kept.items() if not expired(v, clock)}
+                for v in kept.values():
+                    out[v["event_id"]] = out.get(v["event_id"], 0) + 1
+                tick = clock
+    return out
+
+
+def _batch_twin(df, action, *params, by=("host",)):
+    """Rows of the batch twin of a keyed streaming action: the same DSL
+    node compiled over the static frame (``compile_stream(tree,
+    Ctx())``), time ties broken by ``event_id`` — the replay's arrival
+    order. An independent reference: it shares no code with the
+    streaming shells."""
+    from mirabelle_spark.plans.builder import Ctx, compile_stream
+
+    tree = {"action": "by", "params": [{"fields": list(by)}], "children": [{
+        "action": action, "params": list(params),
+        "children": [{"action": "tap", "params": ["out"]}]}]}
+    return compile_stream(df, tree, Ctx(order_cols=("event_id",))).taps["out"].collect()
+
+
+def _run_both_shells(spark, tmp_path, df, split_pred, builds, while_running=None):
+    """Replay ``df`` through every ``builds`` entry (name ->
+    fn(stream) -> DataFrame) at once — one query each, started
+    together so the set costs about one query's latency — as two
+    micro-batches split on ``split_pred``, or one when it is None.
+    ``while_running()`` (e.g. the batch twins) runs while the queries
+    do. Returns ({name: rows}, while_running's result)."""
+    src_dir = str(tmp_path / f"{next(iter(builds))}_in")
+    preds = [split_pred, f"NOT ({split_pred})"] if split_pred else ["true"]
+    for pred in preds:
+        df.where(pred).coalesce(1).write.mode("append").parquet(src_dir)
+    qs = {}
+    # one state partition per query: the queries run side by side, and
+    # the shard layout still splits its slice into `shards` groups.
+    # Arrow batches of 4 rows hand every group to the state fn in
+    # several chunks, which must still fold in event-time order.
+    conf = {"spark.sql.shuffle.partitions": "1",
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "4"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        for name, build in builds.items():
+            stream = (
+                spark.readStream.schema(df.schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src_dir)
+            )
+            qs[name] = (
+                build(stream).writeStream.format("memory").queryName(name)
+                .option("checkpointLocation", str(tmp_path / f"{name}_ck"))
+                .outputMode("append").trigger(availableNow=True).start()
+            )
+        side = while_running() if while_running else None
+        for q in qs.values():
+            q.awaitTermination()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    return {name: spark.sql(f"SELECT * FROM {name}").collect() for name in qs}, side
+
+
+def test_keyed_shells_share_one_fold(spark, tmp_path):
+    """Default-run cross-shell pin: ewma (scalar loop per key,
+    vectorized across keys when sharded) and stable (row-buffer carry)
+    agree per key == shards=4 == the batch twin, row for row (one
+    micro-batch each, so the pin stays cheap; the slow
+    ``*_sharded_parity`` pins carry state across batch splits). Events
+    arrive newest first in 4-row Arrow chunks: the shell must fold a
+    group's whole batch in time order, not each chunk on its own."""
+    from mirabelle_spark.streaming import core
+
+    rows = []
+    eid = 0
+    for h in range(6):
+        for j in range(6):
+            v = None if (h + j) % 7 == 4 else float((h * 5 + j * 3) % 11)
+            status = "up" if (h + j // 2) % 3 else "down"
+            rows.append((eid, f"h{h}", float(j * 4), v, status))
+            eid += 1
+    # newest first: every key's events arrive out of time order, in
+    # several Arrow chunks of one micro-batch
+    rows.reverse()
+    df = spark.createDataFrame(
+        rows, "event_id bigint, host string, t double, metric double, status string"
+    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
+
+    got, (ewma_ref, stable_ref) = _run_both_shells(spark, tmp_path, df, None, {
+        f"pin_{op}_{tag}": build
+        for tag, kw in (("pk", {}), ("sh", {"shards": 4}))
+        for op, build in (
+            ("ewma", lambda s, kw=kw: core.stream_ewma(
+                s, 0.5, by=["host"], time_col="time", **kw)),
+            ("stable", lambda s, kw=kw: core.stream_stable(
+                s, 5.0, "status", by=["host"], time_col="time", **kw)),
+        )
+    }, while_running=lambda: (
+        sorted((r.event_id, r.metric) for r in _batch_twin(df, "ewma-timeless", 0.5)),
+        sorted(r.event_id for r in _batch_twin(df, "stable", 5.0, "status")),
+    ))
+    for tag in ("pk", "sh"):
+        assert sorted((r.event_id, r.metric) for r in got[f"pin_ewma_{tag}"]) == ewma_ref
+        assert sorted(r.event_id for r in got[f"pin_stable_{tag}"]) == stable_ref
+    assert len(ewma_ref) == len(rows) and any(m is None for _, m in ewma_ref)
+    assert 0 < len(stable_ref) < len(rows)
+
+
+def test_stream_ewma_float_key_identity(spark, tmp_path):
+    """Keys follow Spark's grouping identity in both shells: -0.0 and
+    0.0 are ONE key (interleaved, across a micro-batch split), NaN and
+    NULL are TWO. Guards against shard key strings that split the
+    first pair or merge the second (a re-entering key then reads a
+    stale carry), and against per-key state keyed by raw key bytes
+    (-0.0's state lost when a later batch's group key is 0.0).
+    Expected rows are hand-computed: r = 0.5 over metrics of 1.0."""
+    from mirabelle_spark.streaming import core
+
+    zero = [(i, -0.0 if i % 2 == 0 else 0.0, float(i), 1.0) for i in range(6)]
+    nans = [(10 + i, None if i % 2 == 0 else float("nan"), float(i), 1.0) for i in range(6)]
+    df = spark.createDataFrame(
+        zero + nans, "event_id bigint, k double, t double, metric double"
+    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
+
+    got, _ = _run_both_shells(spark, tmp_path, df, "event_id % 10 < 3", {
+        f"fkey_{tag}": (lambda s, kw=kw: core.stream_ewma(
+            s, 0.5, by=["k"], time_col="time", **kw))
+        for tag, kw in (("pk", {}), ("sh", {"shards": 4}))
+    })
+    run = [0.5, 0.75, 0.875, 0.9375, 0.96875, 0.984375]
+    expect = {i: run[i] for i in range(6)}  # one key: -0.0 == 0.0
+    # NULL: events 10, 12, 14; NaN: events 11, 13, 15 — two keys
+    expect.update({10 + i: run[i // 2] for i in range(6)})
+    for tag in ("pk", "sh"):
+        assert {r.event_id: r.metric for r in got[f"fkey_{tag}"]} == expect, tag
+
+
 def test_stream_stable_sharded_parity(spark, tmp_path):
-    """Columnar-carry sharded stable emits exactly the per-key twin's
+    """Columnar-carry sharded stable emits exactly the per-key layout's
+    (and the batch twin's)
     rows: flapping runs (unconfirmed buffers dropped), confirmation
     inside and across the micro-batch boundary, buffer flushes whose
     rows came from the PREVIOUS batch, and null field values."""
@@ -2936,10 +3124,11 @@ def test_stream_stable_sharded_parity(spark, tmp_path):
     )
     shd = sorted(
         r.event_id
-        for r in run(lambda s: core.stream_stable_sharded(
+        for r in run(lambda s: core.stream_stable(
             s, 5.0, "status", by=["host"], time_col="time", shards=4), "sts_sh")
     )
-    assert shd == per
+    ref = sorted(r.event_id for r in _batch_twin(df, "stable", 5.0, "status"))
+    assert shd == per == ref
     assert 0 < len(per) < len(rows)
 
 
@@ -2969,10 +3158,11 @@ def test_stream_stable_sharded_out_of_order_drop(spark, tmp_path):
         lambda s: core.stream_stable(s, 5.0, "status", by=["host"],
                                      time_col="time"), "sto_pk"))
     shd = sorted(r.event_id for r in run(
-        lambda s: core.stream_stable_sharded(s, 5.0, "status", by=["host"],
+        lambda s: core.stream_stable(s, 5.0, "status", by=["host"],
                                              time_col="time", shards=2), "sto_sh"))
-    assert shd == per
-    assert 4 not in per and 6 not in per
+    # a confirms at t=10 (flushing event 0) and keeps emitting; b's
+    # buffered event 3 flushes when event 7 confirms the run
+    assert shd == per == [0, 1, 2, 3, 5, 7]
 
 
 def test_stream_coalesce_sharded_parity(spark, tmp_path):
@@ -3010,9 +3200,9 @@ def test_stream_coalesce_sharded_parity(spark, tmp_path):
 
     per = counts(run(lambda s: core.stream_coalesce(
         s, 10.0, ["service"], by=["host"], time_col="time"), "cls_pk"))
-    shd = counts(run(lambda s: core.stream_coalesce_sharded(
+    shd = counts(run(lambda s: core.stream_coalesce(
         s, 10.0, ["service"], by=["host"], time_col="time", shards=4), "cls_sh"))
-    assert shd == per
+    assert shd == per == _coalesce_model(df.collect(), 10.0, ["service"])
     assert per and max(per.values()) >= 2  # re-emission actually exercised
 
 
@@ -3155,15 +3345,23 @@ def test_stream_event_window_sharded_parity(spark, tmp_path):
 
     per_f = fixed_rows(run(lambda s: core.stream_fixed_event_window(
         s, 4, by=["host"], time_col="time", fork_ttl_s=60.0), "ews_pf"))
-    shd_f = fixed_rows(run(lambda s: core.stream_fixed_event_window_sharded(
+    shd_f = fixed_rows(run(lambda s: core.stream_fixed_event_window(
         s, 4, by=["host"], time_col="time", fork_ttl_s=60.0, shards=4), "ews_sf"))
-    assert shd_f == per_f
-    assert per_f  # windows actually emitted
-    # the ttl gap dropped a partial buffer mid-key, so the second
-    # window of each key starts AFTER the gap — different membership
-    # than the no-ttl run (same count, different content)
+    # fork-ttl is streaming-only (the batch twin has no gap reset):
+    # the >60 s gap before event 7 drops events 4-6, so each key's
+    # windows are events 0-3 (from t=0) and 7-10 (from t=190)
+    hand = sorted(
+        (f"h{h:02d}", start, tuple(h * 11 + i for i in ids))
+        for h in range(40)
+        for start, ids in ((0.0, range(4)), (190.0, range(7, 11)))
+    )
+    assert shd_f == per_f == hand
     no_ttl = fixed_rows(run(lambda s: core.stream_fixed_event_window(
         s, 4, by=["host"], time_col="time"), "ews_pf0"))
+    assert sorted((h, ids) for h, _, ids in no_ttl) == sorted(
+        (r.host, tuple(e.event_id for e in r.events))
+        for r in _batch_twin(df, "fixed-event-window", {"size": 4})
+    )
     assert per_f != no_ttl
 
     def moving_rows(rows_):
@@ -3173,16 +3371,16 @@ def test_stream_event_window_sharded_parity(spark, tmp_path):
 
     per_m = moving_rows(run(lambda s: core.stream_moving_event_window(
         s, 3, by=["host"], time_col="time"), "ews_pm"))
-    shd_m = moving_rows(run(lambda s: core.stream_moving_event_window_sharded(
+    shd_m = moving_rows(run(lambda s: core.stream_moving_event_window(
         s, 3, by=["host"], time_col="time", shards=4), "ews_sm"))
-    assert shd_m == per_m
+    assert shd_m == per_m == moving_rows(_batch_twin(df, "moving-event-window", {"size": 3}))
     assert len(per_m) == len(rows)
 
 
 def test_by_shards_dsl_dispatches_row_buffer_twins(spark):
-    """`by {"shards": N}` routes the r8 row-buffer actions (stable,
-    keyed coalesce, fixed/moving-event-window) to their sharded
-    twins — asserted structurally: the compiled plan groups on the
+    """`by {"shards": N}` runs the row-buffer actions (stable, keyed
+    coalesce, fixed/moving-event-window) in the sharded layout —
+    asserted structurally: the compiled plan groups on the
     __shard__ column; without shards it groups on the fork keys.
     Unkeyed coalesce must IGNORE shards (one global tick clock)."""
     import pyspark.sql.functions as F
@@ -3249,7 +3447,8 @@ def test_control_plane_soak_small(spark):
 
 
 def test_stream_expired_sharded_parity(spark, tmp_path):
-    """Sharded expired/not-expired keeps exactly the per-key twin's
+    """Sharded expired/not-expired keeps exactly the per-key layout's
+    (and the batch twin's)
     rows across a micro-batch boundary: per-key running-max clocks
     seeded from the carry, null-time rows never expire by age,
     state=='expired' forces, per-event ttl respected."""
@@ -3276,133 +3475,12 @@ def test_stream_expired_sharded_parity(spark, tmp_path):
             lambda s: core.stream_expired(s, by=["host"], time_col="time",
                                           keep_expired=keep), f"exs_pk_{tag}"))
         shd = sorted(r.event_id for r in run(
-            lambda s: core.stream_expired_sharded(
+            lambda s: core.stream_expired(
                 s, by=["host"], time_col="time", keep_expired=keep,
                 shards=4), f"exs_sh_{tag}"))
-        assert shd == per
+        ref = sorted(r.event_id for r in _batch_twin(df, "expired" if keep else "not-expired"))
+        assert shd == per == ref
         assert 0 < len(per) < len(rows)
-
-
-def test_stream_changed_jvm_replay_and_buckets(spark, tmp_path):
-    """r10 state redesign (r9 ADVICE medium + verdict ask #3):
-    (1) untouched buckets carry forward by manifest reference — a
-    second batch touching one key rewrites only that key's bucket;
-    (2) a replayed micro-batch (commit-log gap after crash) re-emits
-    from the PRE-batch state — first-of-key changed rows are NOT
-    suppressed — and does not double-apply state;
-    (3) a crash before the manifest rename (simulated by deleting
-    the newest manifest) leaves the previous manifest authoritative
-    and the retried batch converges to the same state."""
-    import json
-    import os
-
-    import pyspark.sql.functions as F
-
-    from mirabelle_spark.streaming import core
-
-    schema = "event_id bigint, host string, time timestamp, state string"
-
-    def mkdf(rows):
-        return (
-            spark.createDataFrame(rows, "event_id bigint, host string, t double, state string")
-            .withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long")))
-            .drop("t")
-            .select("event_id", "host", "time", "state")
-        )
-
-    src = str(tmp_path / "in")
-    work = str(tmp_path / "work")
-    # batch 0: 20 hosts, all flip ok->warn (every row emits: init None)
-    b0 = [(i, f"h{i:02d}", float(i), "ok") for i in range(20)]
-    mkdf(b0).coalesce(1).write.mode("append").parquet(src)
-
-    got: dict[int, list] = {}
-
-    def collect_writer(bdf, bid):
-        got.setdefault(bid, []).extend(
-            sorted(r.event_id for r in bdf.select("event_id").collect())
-        )
-
-    def run():
-        q = core.stream_changed_jvm_run(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
-            "state", by=["host"], work_dir=work, time_col="time",
-            out_writer=collect_writer, n_buckets=8,
-        )
-        q.awaitTermination()
-
-    run()
-    state_root = os.path.join(work, "state")
-    m0 = [f for f in os.listdir(state_root) if f.startswith("manifest")]
-    assert len(m0) == 1
-    man0 = json.load(open(os.path.join(state_root, m0[0])))
-    assert man0["base"] and man0["deltas"] == []  # first batch compacts
-    assert got[0] == sorted(r[0] for r in b0)
-
-    # batch 1: ONE host changes value -> a DELTA of one key, the
-    # base carried forward by reference (no full-state rewrite)
-    b1 = [(100, "h03", 100.0, "warn")]
-    mkdf(b1).coalesce(1).write.mode("append").parquet(src)
-    got.clear()
-    run()
-    ids = sorted(
-        int(f[len("manifest_b"):-len(".json")])
-        for f in os.listdir(state_root) if f.startswith("manifest")
-    )
-    assert len(ids) == 2
-    man1 = json.load(open(os.path.join(state_root, f"manifest_b{ids[-1]}.json")))
-    assert man1["base"] == man0["base"]  # base untouched
-    assert len(man1["deltas"]) == 1 and f"b{ids[-1]}" in man1["deltas"][0]
-    # the delta holds ONLY the touched key
-    delta_rows = spark.read.parquet(man1["deltas"][0]).collect()
-    assert len(delta_rows) == 1 and delta_rows[0]["host"] == "h03"
-    assert got[1] == [100]
-
-    # (2) replay: drop the last commit entry -> Spark re-runs batch 1
-    ck_commits = os.path.join(work, "ck", "commits")
-
-    def drop_newest_commit():
-        newest = max(int(f) for f in os.listdir(ck_commits) if f.isdigit())
-        os.remove(os.path.join(ck_commits, str(newest)))
-        crc = os.path.join(ck_commits, f".{newest}.crc")
-        if os.path.exists(crc):  # stale checksum shadow breaks rewrite
-            os.remove(crc)
-
-    drop_newest_commit()
-    got.clear()
-    run()
-    assert got.get(1) == [100], got  # re-emitted, NOT suppressed
-    ids2 = sorted(
-        int(f[len("manifest_b"):-len(".json")])
-        for f in os.listdir(state_root) if f.startswith("manifest")
-    )
-    assert ids2 == ids  # replay did not write a new state version
-
-    # batch 2 sees the correct state: same value again -> no emission
-    b2 = [(200, "h03", 200.0, "warn"), (201, "h04", 200.0, "flip")]
-    mkdf(b2).coalesce(1).write.mode("append").parquet(src)
-    got.clear()
-    run()
-    assert got.get(2) == [201], got
-
-    # (3) crash before manifest rename: delete newest manifest AND
-    # its commit entry; retried batch rebuilds identical state
-    ids3 = sorted(
-        int(f[len("manifest_b"):-len(".json")])
-        for f in os.listdir(state_root) if f.startswith("manifest")
-    )
-    man_before = json.load(
-        open(os.path.join(state_root, f"manifest_b{ids3[-1]}.json"))
-    )
-    os.remove(os.path.join(state_root, f"manifest_b{ids3[-1]}.json"))
-    drop_newest_commit()
-    got.clear()
-    run()
-    man_after = json.load(
-        open(os.path.join(state_root, f"manifest_b{ids3[-1]}.json"))
-    )
-    assert man_after == man_before
-    assert got.get(2) == [201], got
 
 
 def test_stream_curate_parity(spark, tmp_path):

@@ -4,25 +4,20 @@
 Measures events/s through one availableNow pass for each mode:
 
   jvm              windowed sum aggregate (JVM baseline, update mode)
-  apws             stream_ewma — per-key applyInPandasWithState
-  sharded          stream_ewma_sharded (r7 shard-mapped keyed state)
+  apws             stream_ewma, one state group per key
+  sharded          stream_ewma(shards=N), shard-mapped keyed state
   sharded_ttl      same + state_ttl_s=3600 (prices the fork GC)
-  tws              transformWithStateInPandas ewma prototype (needs
-                   the google.protobuf package; import-gated)
-  cond_dt[_sharded], changed[_sharded], ddt[_sharded],
-  zscore[_sharded], throttle[_sharded], coalesce[_sharded],
-  stable[_sharded]  the other keyed twins, per-key and sharded
-                    (r8: the row-buffer twins stable/coalesce shard
-                    with columnar carries)
-  smax / smax_jvm   per-key row state vs the pure-JVM max_by tier
-                    (update mode; per-batch emission grain)
-  few[_sharded], mew[_sharded], expired[_sharded]
-                    fixed/moving event windows and the expiry clock,
-                    per-key and sharded
+  cond_dt, changed, ddt, zscore, throttle, coalesce, stable, smax,
+  few, mew, expired
+                   the other keyed operators, one state group per key
+  <op>_sharded     the same operator with shards=N (e.g.
+                   cond_dt_sharded)
+  smax_jvm         the pure-JVM max_by tier (update mode; per-batch
+                   emission grain)
 
 Usage:
   python tools/bench_streaming_state.py [--events 1000000]
-      [--keys 1000000] [--modes jvm,apws,sharded,tws]
+      [--keys 1000000] [--modes jvm,apws,sharded]
       [--cpus 32] [--shards 64]
 
 Prints one JSON line: {"events": N, "keys": K,
@@ -30,9 +25,7 @@ Prints one JSON line: {"events": N, "keys": K,
 
 Notes: the generator writes one parquet dir per run; all modes read
 the same files through the same file source into a noop sink, so the
-delta between modes is the operator, not I/O. tws requires the
-RocksDB state store provider (set automatically for that mode's
-query via spark.sql.streaming.stateStore.providerClass).
+delta between modes is the operator, not I/O.
 """
 
 from __future__ import annotations
@@ -84,65 +77,47 @@ def gen_events(spark, path: str, n: int, keys: int, files: int = 8) -> None:
     )
 
 
-class EwmaTws:
-    """transformWithStateInPandas ewma: per-key ValueState in the JVM
-    state store, same double fold as stream_ewma."""
+def keyed_ops():
+    """mode -> fn(stream, **kw) building that keyed operator; kw is
+    empty (one state group per key) or {"shards": N}."""
+    from pyspark.sql import functions as F
 
-    def __init__(self, r: float):
-        self.r = r
+    from mirabelle_spark import streaming as stx
 
-    def build(self):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+    kw0 = dict(by=["host"], time_col="time")
 
-        r = self.r
+    def stable(s, **kw):
+        # status flips when the metric ramp crosses the threshold —
+        # long confirmed runs (the steady-state fast path) with
+        # periodic flaps that exercise the buffer machinery
+        st = s.withColumn("status", F.when(F.col("metric") > 70.0, "hi").otherwise("lo"))
+        return stx.stream_stable(st, 5.0, "status", **kw0, **kw)
 
-        class P(StatefulProcessor):
-            def init(self, handle):
-                self.m = handle.getValueState("m", "m DOUBLE")
-
-            def handleInputRows(self, key, rows, timerValues):
-                import numpy as np
-                import pandas as pd
-
-                m = self.m.get()[0] if self.m.exists() else None
-                for pdf in rows:
-                    pdf = pdf.sort_values("time", kind="mergesort")
-                    x = pdf["metric"].to_numpy(dtype="float64", na_value=np.nan)
-                    out = np.empty(len(x))
-                    for i, v in enumerate(x.tolist()):
-                        if v != v:
-                            out[i] = np.nan
-                        else:
-                            m = r * v + (1.0 - r) * (m if m is not None else 0.0)
-                            out[i] = m
-                    res = pdf.copy()
-                    res["metric"] = pd.array(out, dtype="float64")
-                    yield res
-                if m is not None:
-                    self.m.update((m,))
-
-            def close(self):
-                pass
-
-        return P()
+    return {
+        "ewma": lambda s, **kw: stx.stream_ewma(s, 0.25, **kw0, **kw),
+        "cond_dt": lambda s, **kw: stx.stream_cond_dt(
+            s, [":>", "metric", 60.0], 5.0, **kw0, **kw),
+        "changed": lambda s, **kw: stx.stream_changed(s, "metric", **kw0, **kw),
+        "ddt": lambda s, **kw: stx.stream_ddt(s, **kw0, **kw),
+        "zscore": lambda s, **kw: stx.stream_zscore(s, 30.0, **kw0, **kw),
+        "throttle": lambda s, **kw: stx.stream_throttle(s, 5, 30.0, **kw0, **kw),
+        "coalesce": lambda s, **kw: stx.stream_coalesce(
+            s, 60.0, fields=["host"], **kw0, **kw),
+        "stable": stable,
+        "smax": lambda s, **kw: stx.stream_smax(s, **kw0, **kw),
+        "few": lambda s, **kw: stx.stream_fixed_event_window(s, 5, **kw0, **kw),
+        "mew": lambda s, **kw: stx.stream_moving_event_window(s, 5, **kw0, **kw),
+        "expired": lambda s, **kw: stx.stream_expired(s, **kw0, **kw),
+    }
 
 
 def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int):
     from pyspark.sql import functions as F
 
-    stream = spark.readStream.schema(schema).parquet(src)
-    if mode == "changed_jvm":
-        # foreachBatch terminal op: lag-over-batch + parquet state
-        # join, zero Python on the data path (r9, VERDICT r8 ask #6)
-        from mirabelle_spark.streaming import stream_changed_jvm_run
+    from mirabelle_spark.streaming import stream_smax_jvm
 
-        work = os.path.join(ck_root, f"changed_jvm_{time.monotonic_ns()}")
-        t0 = time.monotonic()
-        q = stream_changed_jvm_run(
-            stream, "metric", by=["host"], work_dir=work, time_col="time"
-        )
-        q.awaitTermination()
-        return time.monotonic() - t0
+    stream = spark.readStream.schema(schema).parquet(src)
+    ops = keyed_ops()
     if mode == "jvm":
         out = (
             stream.withWatermark("time", "0 seconds")
@@ -150,143 +125,17 @@ def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int)
             .agg(F.sum("metric").alias("metric"))
         )
     elif mode == "apws":
-        from mirabelle_spark.streaming import stream_ewma
-
-        out = stream_ewma(stream, 0.25, by=["host"], time_col="time")
+        out = ops["ewma"](stream)
     elif mode == "sharded":
-        from mirabelle_spark.streaming import stream_ewma_sharded
-
-        out = stream_ewma_sharded(
-            stream, 0.25, by=["host"], time_col="time", shards=shards
-        )
+        out = ops["ewma"](stream, shards=shards)
     elif mode == "sharded_ttl":
-        from mirabelle_spark.streaming import stream_ewma_sharded
-
-        out = stream_ewma_sharded(
-            stream, 0.25, by=["host"], time_col="time", shards=shards,
-            state_ttl_s=3600.0,
-        )
-    elif mode == "tws":
-        out = stream.groupBy("host").transformWithStateInPandas(
-            EwmaTws(0.25).build(),
-            outputStructType=schema,
-            outputMode="append",
-            timeMode="none",
-        )
-    elif mode == "cond_dt":
-        from mirabelle_spark.streaming import stream_cond_dt
-
-        out = stream_cond_dt(
-            stream, [":>", "metric", 60.0], 5.0, by=["host"], time_col="time"
-        )
-    elif mode == "cond_dt_sharded":
-        from mirabelle_spark.streaming import stream_cond_dt_sharded
-
-        out = stream_cond_dt_sharded(
-            stream, [":>", "metric", 60.0], 5.0, by=["host"], time_col="time",
-            shards=shards,
-        )
-    elif mode == "coalesce":
-        from mirabelle_spark.streaming import stream_coalesce
-
-        out = stream_coalesce(
-            stream, 60.0, fields=["host"], by=["host"], time_col="time"
-        )
-    elif mode == "zscore":
-        from mirabelle_spark.streaming import stream_zscore
-
-        out = stream_zscore(stream, 30.0, by=["host"], time_col="time")
-    elif mode == "zscore_sharded":
-        from mirabelle_spark.streaming import stream_zscore_sharded
-
-        out = stream_zscore_sharded(
-            stream, 30.0, by=["host"], time_col="time", shards=shards
-        )
-    elif mode == "changed":
-        from mirabelle_spark.streaming import stream_changed
-
-        out = stream_changed(stream, "metric", by=["host"], time_col="time")
-    elif mode == "changed_sharded":
-        from mirabelle_spark.streaming import stream_changed_sharded
-
-        out = stream_changed_sharded(
-            stream, "metric", by=["host"], time_col="time", shards=shards
-        )
-    elif mode == "ddt":
-        from mirabelle_spark.streaming import stream_ddt
-
-        out = stream_ddt(stream, by=["host"], time_col="time")
-    elif mode == "throttle":
-        from mirabelle_spark.streaming import stream_throttle
-
-        out = stream_throttle(stream, 5, 30.0, by=["host"], time_col="time")
-    elif mode == "throttle_sharded":
-        from mirabelle_spark.streaming import stream_throttle_sharded
-
-        out = stream_throttle_sharded(
-            stream, 5, 30.0, by=["host"], time_col="time", shards=shards
-        )
-    elif mode == "ddt_sharded":
-        from mirabelle_spark.streaming import stream_ddt_sharded
-
-        out = stream_ddt_sharded(stream, by=["host"], time_col="time", shards=shards)
-    elif mode in ("stable", "stable_sharded"):
-        # status flips when the metric ramp crosses the threshold —
-        # long confirmed runs (the steady-state fast path) with
-        # periodic flaps that exercise the buffer machinery
-        st = stream.withColumn(
-            "status", F.when(F.col("metric") > 70.0, "hi").otherwise("lo")
-        )
-        if mode == "stable":
-            from mirabelle_spark.streaming import stream_stable
-
-            out = stream_stable(st, 5.0, "status", by=["host"], time_col="time")
-        else:
-            from mirabelle_spark.streaming import stream_stable_sharded
-
-            out = stream_stable_sharded(
-                st, 5.0, "status", by=["host"], time_col="time", shards=shards
-            )
-    elif mode == "coalesce_sharded":
-        from mirabelle_spark.streaming import stream_coalesce_sharded
-
-        out = stream_coalesce_sharded(
-            stream, 60.0, fields=["host"], by=["host"], time_col="time",
-            shards=shards,
-        )
-    elif mode in ("few", "few_sharded"):
-        if mode == "few":
-            from mirabelle_spark.streaming import stream_fixed_event_window as f
-        else:
-            from mirabelle_spark.streaming import (
-                stream_fixed_event_window_sharded as f,
-            )
-        kw = {"shards": shards} if mode.endswith("sharded") else {}
-        out = f(stream, 5, by=["host"], time_col="time", **kw)
-    elif mode in ("mew", "mew_sharded"):
-        if mode == "mew":
-            from mirabelle_spark.streaming import stream_moving_event_window as f
-        else:
-            from mirabelle_spark.streaming import (
-                stream_moving_event_window_sharded as f,
-            )
-        kw = {"shards": shards} if mode.endswith("sharded") else {}
-        out = f(stream, 5, by=["host"], time_col="time", **kw)
-    elif mode in ("expired", "expired_sharded"):
-        if mode == "expired":
-            from mirabelle_spark.streaming import stream_expired as f
-        else:
-            from mirabelle_spark.streaming import stream_expired_sharded as f
-        kw = {"shards": shards} if mode.endswith("sharded") else {}
-        out = f(stream, by=["host"], time_col="time", **kw)
-    elif mode == "smax":
-        from mirabelle_spark.streaming import stream_smax
-
-        out = stream_smax(stream, by=["host"], time_col="time")
+        out = ops["ewma"](stream, shards=shards, state_ttl_s=3600.0)
     elif mode == "smax_jvm":
-        from mirabelle_spark.streaming import stream_smax_jvm
-
         out = stream_smax_jvm(stream, by=["host"], time_col="time")
+    elif mode in ops:
+        out = ops[mode](stream)
+    elif mode.endswith("_sharded") and mode[: -len("_sharded")] in ops:
+        out = ops[mode[: -len("_sharded")]](stream, shards=shards)
     else:
         raise SystemExit(f"unknown mode {mode}")
 
@@ -315,32 +164,8 @@ def main() -> None:
     ap.add_argument("--keys", type=int, default=1_000_000)
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--shards", type=int, default=64)
-    ap.add_argument("--modes", default="jvm,apws,sharded,tws")
+    ap.add_argument("--modes", default="jvm,apws,sharded")
     args = ap.parse_args()
-
-    if "tws" in args.modes:
-        # transformWithStateInPandas speaks protobuf to the JVM state
-        # server; this container has no google.protobuf package, but
-        # the gcloud SDK's App Engine dir bundles a pure-python
-        # runtime. The sitecustomize shim (tools/tws_pythonpath)
-        # inserts it and relaxes the gencode-minor-version check —
-        # set PYTHONPATH BEFORE the session so every python worker
-        # inherits it, and import it here for the driver process.
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-        except ImportError:
-            shim = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "tws_pythonpath")
-            os.environ["PYTHONPATH"] = shim + (
-                os.pathsep + os.environ["PYTHONPATH"]
-                if os.environ.get("PYTHONPATH") else ""
-            )
-            sys.path.insert(0, shim)
-            try:
-                import sitecustomize  # noqa: F401
-                from google.protobuf import descriptor  # noqa: F401
-            except ImportError:
-                pass
 
     spark = make_spark(args.cpus)
     spark.sparkContext.setLogLevel("WARN")
@@ -352,24 +177,7 @@ def main() -> None:
         results = {}
         for mode in args.modes.split(","):
             mode = mode.strip()
-            if mode == "tws":
-                # transformWithStateInPandas speaks protobuf to the
-                # JVM state server; without the google.protobuf
-                # python package the driver worker crashes at init
-                try:
-                    from google.protobuf import descriptor  # noqa: F401
-                except ImportError:
-                    print("# tws: SKIPPED (google.protobuf not installed)", flush=True)
-                    results["tws"] = {"error": "requires google.protobuf python package"}
-                    continue
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass",
-                    "org.apache.spark.sql.execution.streaming.state."
-                    "RocksDBStateStoreProvider",
-                )
             sec = run_mode(spark, mode, src, schema, os.path.join(work, "ck"), args.shards)
-            if mode == "tws":
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
             results[mode] = {
                 "sec": round(sec, 2),
                 "ev_per_s": int(args.events / sec),
