@@ -5,7 +5,13 @@ windows, per-window accumulator (``keyword->aggr-fn``,
 ``action.clj:2285-2348``), optional finalizer
 (``action.clj:2350-2374``), ``:delay`` lateness. In Spark this IS
 ``groupBy(by…, window).agg(...)`` — partial+final hash aggregation,
-one shuffle keyed on (by…, bucket), watermark in the streaming twin.
+one shuffle keyed on (by…, bucket).
+
+Each windowed aggregate is ONE function for batch and streaming
+input: :func:`_grouped` owns the grouping (the bucket column in
+batch; a watermarked ``window()`` on a stream, with ``delay_s`` as
+the reference's ``:delay``, ignored in batch) and the aggregate
+expressions are shared, so the two modes cannot drift apart.
 
 Documented divergence: the reference anchors window index 0 at the
 time of the *first event seen* (``action.clj:2380-2385``
@@ -25,12 +31,12 @@ it rides on.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
-from mirabelle_spark.timeutil import window_start_s
+from mirabelle_spark.timeutil import US, window_start_s
 
 DEC = "decimal(38,9)"
 
@@ -39,9 +45,38 @@ def _cols(names: Sequence[str]) -> list[Column]:
     return [F.col(n) for n in names]
 
 
-def _grouped(df: DataFrame, duration_s: float, by: Sequence[str], time_col: str):
-    bucket = window_start_s(time_col, duration_s).alias("window_start")
-    return df.groupBy(*_cols(by), bucket)
+def _watermarked(df: DataFrame, time_col: str, delay_s: float) -> DataFrame:
+    """Streaming input carries ``:delay`` as its watermark
+    (action.clj:2420-2432: later events drop, a window seals
+    ``delay_s`` after its end); batch input passes through."""
+    return df.withWatermark(time_col, f"{delay_s} seconds") if df.isStreaming else df
+
+
+def _grouped(
+    df: DataFrame,
+    duration_s: float,
+    by: Sequence[str],
+    time_col: str,
+    delay_s: float = 0.0,
+) -> tuple[GroupedData, Callable[[DataFrame], DataFrame]]:
+    """Group by (by…, tumbling window) on either kind of input and
+    return ``(grouped, finish)``: aggregate ``grouped``, then
+    ``finish`` the result into (by…, window_start, aggregates…).
+
+    Batch input groups on the epoch-aligned bucket column and
+    ``finish`` is the identity. Streaming input groups on ``window()``
+    over the watermarked time — append mode seals a window only when
+    the grouping key is the window struct itself — and ``finish``
+    turns the struct into its start. Both spell the width in whole
+    microseconds, so fractional durations bucket alike."""
+    if not df.isStreaming:
+        bucket = window_start_s(time_col, duration_s).alias("window_start")
+        return df.groupBy(*_cols(by), bucket), lambda out: out
+    w = F.window(F.col(time_col), f"{int(round(duration_s * US))} microseconds")
+    grouped = _watermarked(df, time_col, delay_s).groupBy(*_cols(by), w.alias("__w__"))
+    return grouped, lambda out: out.withColumn(
+        "__w__", F.col("__w__.start").cast("double")
+    ).withColumnRenamed("__w__", "window_start")
 
 
 def exact_sum(metric_col: str | Column) -> Column:
@@ -50,18 +85,52 @@ def exact_sum(metric_col: str | Column) -> Column:
     return F.sum(c.cast(DEC)).cast("double")
 
 
+def _aggr(kind: str, m: Column, duration_s: float) -> Column:
+    """A window's accumulator and finalizer as one aggregate
+    expression (``keyword->aggr-fn``, action.clj:2285-2348;
+    finalizers :2350-2374). Null metric counts as 0 in sums."""
+    n = F.count(F.lit(1))
+    s = exact_sum(F.coalesce(m, F.lit(0.0)))
+    exprs = {
+        "sum": s,
+        "mean": s / n,
+        "count": n.cast("double"),
+        "rate": n / F.lit(float(duration_s)),
+        "max": F.max(m),
+        "min": F.min(m),
+    }
+    if kind not in exprs:
+        raise ValueError(f"invalid aggregation function {kind!r}")
+    return exprs[kind]
+
+
+def aggregate(
+    df: DataFrame,
+    kind: str,
+    duration_s: float,
+    by: Sequence[str] = (),
+    time_col: str = "time",
+    metric_col: str = "metric",
+    delay_s: float = 0.0,
+) -> DataFrame:
+    """Per-window ``kind`` aggregate (sum/mean/count/rate/max/min) as
+    (by…, window_start, metric)."""
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    return finish(g.agg(_aggr(kind, F.col(metric_col), duration_s).alias("metric")))
+
+
 def agg_sum(
     df: DataFrame,
     duration_s: float,
     by: Sequence[str] = (),
     time_col: str = "time",
     metric_col: str = "metric",
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Per-window sum of metric (``sum``, action.clj:2468-2490,
-    accumulator ``:+`` :2342-2348; null metric counts as 0)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        exact_sum(F.coalesce(F.col(metric_col), F.lit(0.0))).alias("metric")
-    )
+    accumulator ``:+`` :2342-2348; null metric counts as 0). Also
+    ``coll-sum`` (math.clj:65-72)."""
+    return aggregate(df, "sum", duration_s, by, time_col, metric_col, delay_s)
 
 
 def aggregation_delayed(
@@ -95,17 +164,12 @@ def aggregation_delayed(
     "fixed-time-window"`` (the reference's list-accumulating
     ``:aggr-fn``, action_test.clj:569-640), which emits the window's
     accepted events themselves, time-sorted, as an ``events``
-    array<struct> column instead of ``metric``.
+    array<struct> column instead of ``metric``. On streaming input
+    the watermark is this rule (``plans.builder``'s streaming
+    ``aggregation`` runs :func:`aggregate` with ``delay_s``).
     """
     from mirabelle_spark.operators.filters import with_clock
 
-    exprs = {
-        "sum": lambda m: exact_sum(F.coalesce(m, F.lit(0.0))),
-        "mean": lambda m: exact_sum(F.coalesce(m, F.lit(0.0))) / F.count(F.lit(1)),
-        "max": lambda m: F.max(m),
-        "min": lambda m: F.min(m),
-        "count": lambda m: F.count(F.lit(1)).cast("double"),
-    }
     if aggr == "fixed-time-window":
         payload = list(df.columns)
         # the reference accumulates a window's events in ARRIVAL
@@ -117,7 +181,7 @@ def aggregation_delayed(
             F.col(c).cast("double").alias(f"__k{i}__")
             for i, c in enumerate(arrival_cols or [time_col])
         ]
-        exprs[aggr] = lambda m: F.transform(
+        value = F.transform(
             F.array_sort(
                 F.collect_list(
                     F.struct(
@@ -128,8 +192,8 @@ def aggregation_delayed(
             ),
             lambda s: s["e"],
         )
-    if aggr not in exprs:
-        raise ValueError(f"invalid aggregation function {aggr!r}")
+    else:
+        value = _aggr(aggr, F.col(metric_col), duration_s)
 
     dfc, clock = with_clock(df, time_col, arrival_cols, by=by)
     t = F.col(time_col).cast("double")
@@ -147,7 +211,7 @@ def aggregation_delayed(
     out = (
         accepted.groupBy(*_cols(by), bucket)
         .agg(
-            exprs[aggr](F.col(metric_col)).alias(value_name),
+            value.alias(value_name),
             F.max(t).alias("time"),
             F.max(F.col("__fc__")).alias("__fc__"),
         )
@@ -165,13 +229,21 @@ def agg_mean(
     by: Sequence[str] = (),
     time_col: str = "time",
     metric_col: str = "metric",
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Per-window mean = exact-sum / count (``mean``,
-    action.clj:2540-2562, accum :2312-2320, finalizer :2371-2374)."""
-    s = F.sum(F.coalesce(F.col(metric_col), F.lit(0.0)).cast(DEC)).cast("double")
-    return _grouped(df, duration_s, by, time_col).agg(
-        (s / F.count(F.lit(1))).alias("metric")
-    )
+    action.clj:2540-2562, accum :2312-2320, finalizer :2371-2374).
+    Also ``coll-mean`` (math.clj:5-14)."""
+    return aggregate(df, "mean", duration_s, by, time_col, metric_col, delay_s)
+
+
+def _best_event(df, key, duration_s, by, time_col, event_cols, delay_s):
+    """The event with the greatest ``key`` per window, as
+    (by…, window_start, event columns…)."""
+    ev = F.struct(*[F.col(c) for c in (event_cols or df.columns)])
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    out = finish(g.agg(F.max_by(ev, key).alias("__e__")))
+    return out.select(*_cols(by), "window_start", "__e__.*")
 
 
 def agg_top(
@@ -182,13 +254,12 @@ def agg_top(
     metric_col: str = "metric",
     order_cols: Sequence[str] = (),
     event_cols: Sequence[str] | None = None,
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Per-window max-metric event (``top``, action.clj:2492-2514,
     accum ``:max`` :2286-2292 — ties go to the later event)."""
-    ev = F.struct(*[F.col(c) for c in (event_cols or df.columns)])
     key = F.struct(F.col(metric_col), F.col(time_col), *_cols(order_cols))
-    out = _grouped(df, duration_s, by, time_col).agg(F.max_by(ev, key).alias("__e__"))
-    return out.select(*_cols(by), "window_start", "__e__.*")
+    return _best_event(df, key, duration_s, by, time_col, event_cols, delay_s)
 
 
 def agg_bottom(
@@ -199,14 +270,13 @@ def agg_bottom(
     metric_col: str = "metric",
     order_cols: Sequence[str] = (),
     event_cols: Sequence[str] | None = None,
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Per-window min-metric event (``bottom``, action.clj:2516-2538)."""
-    ev = F.struct(*[F.col(c) for c in (event_cols or df.columns)])
     # min over (metric, -time): ties go to the later event, like the
     # reference's `<` replace rule; emulate with max_by on negated key
     key = F.struct((-F.col(metric_col)).alias("m"), F.col(time_col), *_cols(order_cols))
-    out = _grouped(df, duration_s, by, time_col).agg(F.max_by(ev, key).alias("__e__"))
-    return out.select(*_cols(by), "window_start", "__e__.*")
+    return _best_event(df, key, duration_s, by, time_col, event_cols, delay_s)
 
 
 def agg_rate(
@@ -214,12 +284,11 @@ def agg_rate(
     duration_s: float,
     by: Sequence[str] = (),
     time_col: str = "time",
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Per-window event rate = count / duration (``rate``,
     action.clj:2833-2843, finalizer :2364-2370)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        (F.count(F.lit(1)) / F.lit(float(duration_s))).alias("metric")
-    )
+    return aggregate(df, "rate", duration_s, by, time_col, delay_s=delay_s)
 
 
 def agg_ratio(
@@ -231,6 +300,7 @@ def agg_ratio(
     time_col: str = "time",
     metric_col: str = "metric",
     use_metric: bool = False,
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Per-window ratio of events matching cond1 vs cond2 (``ratio``,
     action.clj:2967-3009, accum :2326-2341, finalizer :2357-2363).
@@ -248,7 +318,8 @@ def agg_ratio(
         num = F.count_if(c1).cast("double")
         den = F.count_if(c2).cast("double")
     ratio = F.when(den == 0, F.lit(0.0)).otherwise(num / den)
-    return _grouped(df, duration_s, by, time_col).agg(ratio.alias("metric"))
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    return finish(g.agg(ratio.alias("metric")))
 
 
 def agg_percentiles(
@@ -259,6 +330,7 @@ def agg_percentiles(
     time_col: str = "time",
     metric_col: str = "metric",
     approx: bool = False,
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Per-window quantiles of metric, one row per quantile with a
     ``quantile`` column (``percentiles``, action.clj:2845-2929).
@@ -279,13 +351,14 @@ def agg_percentiles(
     bit-for-bit; the sketch twin is deterministic for a given plan
     but not engine-portable.
     """
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
     if approx:
         qs_lit = F.array(*[F.lit(float(q)) for q in quantiles])
-        sk = _grouped(df, duration_s, by, time_col).agg(
+        sk = finish(g.agg(
             F.percentile_approx(
                 F.col(metric_col), [float(q) for q in quantiles]
             ).alias("__p__")
-        )
+        ))
         zipped = F.explode(F.arrays_zip(qs_lit.alias("q"), F.col("__p__").alias("m")))
         return (
             sk.select("*", zipped.alias("__z__"))
@@ -296,7 +369,7 @@ def agg_percentiles(
     sorted_m = F.sort_array(
         F.collect_list(F.col(metric_col))
     )  # nulls excluded by collect_list
-    out = _grouped(df, duration_s, by, time_col).agg(sorted_m.alias("__m__"))
+    out = finish(g.agg(sorted_m.alias("__m__")))
     qs = F.array(*[F.lit(float(q)) for q in quantiles])
     out = out.withColumn("quantile", F.explode(qs))
     n = F.size("__m__")
@@ -312,40 +385,19 @@ def agg_percentiles(
 
 
 def coll_count(
-    df: DataFrame, duration_s: float, by: Sequence[str] = (), time_col: str = "time"
+    df: DataFrame,
+    duration_s: float,
+    by: Sequence[str] = (),
+    time_col: str = "time",
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Count events per window (``coll-count``, action.clj:1465-1487,
     math.clj:28-36)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        F.count(F.lit(1)).cast("double").alias("metric")
-    )
+    return aggregate(df, "count", duration_s, by, time_col, delay_s=delay_s)
 
 
-def coll_sum(
-    df: DataFrame,
-    duration_s: float,
-    by: Sequence[str] = (),
-    time_col: str = "time",
-    metric_col: str = "metric",
-) -> DataFrame:
-    """Sum per window (``coll-sum``, math.clj:65-72)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        exact_sum(F.coalesce(F.col(metric_col), F.lit(0.0))).alias("metric")
-    )
-
-
-def coll_mean(
-    df: DataFrame,
-    duration_s: float,
-    by: Sequence[str] = (),
-    time_col: str = "time",
-    metric_col: str = "metric",
-) -> DataFrame:
-    """Mean per window (``coll-mean``, math.clj:5-14)."""
-    s = F.sum(F.coalesce(F.col(metric_col), F.lit(0.0)).cast(DEC)).cast("double")
-    return _grouped(df, duration_s, by, time_col).agg(
-        (s / F.count(F.lit(1))).alias("metric")
-    )
+coll_sum = agg_sum
+coll_mean = agg_mean
 
 
 def coll_max(
@@ -354,11 +406,10 @@ def coll_max(
     by: Sequence[str] = (),
     time_col: str = "time",
     metric_col: str = "metric",
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Max metric per window (``coll-max``, math.clj:57-62)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        F.max(metric_col).alias("metric")
-    )
+    return aggregate(df, "max", duration_s, by, time_col, metric_col, delay_s)
 
 
 def coll_min(
@@ -367,11 +418,10 @@ def coll_min(
     by: Sequence[str] = (),
     time_col: str = "time",
     metric_col: str = "metric",
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Min metric per window (``coll-min``, math.clj:74-78)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        F.min(metric_col).alias("metric")
-    )
+    return aggregate(df, "min", duration_s, by, time_col, metric_col, delay_s)
 
 
 def coll_rate(
@@ -380,17 +430,17 @@ def coll_rate(
     by: Sequence[str] = (),
     time_col: str = "time",
     metric_col: str = "metric",
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """sum(metric) / (max(time) − min(time)) per window; if the
     interval is zero the metric is the plain sum (``coll-rate``,
     action.clj:885-913, math.clj:80-106)."""
-    s = exact_sum(F.coalesce(F.col(metric_col), F.lit(0.0)))
+    s = _aggr("sum", F.col(metric_col), duration_s)
     span_us = F.max(F.unix_micros(F.col(time_col))) - F.min(
         F.unix_micros(F.col(time_col))
     )
-    g = _grouped(df, duration_s, by, time_col).agg(
-        s.alias("__s__"), span_us.alias("__span__")
-    )
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    g = finish(g.agg(s.alias("__s__"), span_us.alias("__span__")))
     metric = F.when(F.col("__span__") == 0, F.col("__s__")).otherwise(
         F.col("__s__") / (F.col("__span__") / F.lit(1_000_000))
     )
@@ -404,15 +454,15 @@ def coll_quotient(
     time_col: str = "time",
     metric_col: str = "metric",
     order_cols: Sequence[str] = (),
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """First metric ÷ each subsequent metric, in event order
     (``coll-quotient``, action.clj:309-322, math.clj:16-26).
     Sequential fold via the ``aggregate`` higher-order function —
     JVM-side, deterministic order from sort_array."""
     ev = F.struct(F.col(time_col), *_cols(order_cols), F.col(metric_col).alias("m"))
-    g = _grouped(df, duration_s, by, time_col).agg(
-        F.sort_array(F.collect_list(ev)).alias("__evs__")
-    )
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    g = finish(g.agg(F.sort_array(F.collect_list(ev)).alias("__evs__")))
     ms = F.transform(F.col("__evs__"), lambda x: x["m"])
     quot = F.aggregate(
         F.slice(ms, 2, F.greatest(F.size(ms) - 1, F.lit(0))),
@@ -429,11 +479,55 @@ def coll_percentiles(
     by: Sequence[str] = (),
     time_col: str = "time",
     metric_col: str = "metric",
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Exact nearest-rank quantiles per window
     (``coll-percentiles``, action.clj:1528-1556, rule math.clj:120:
     idx = min(n-1, floor(n*q)))."""
-    return agg_percentiles(df, quantiles, duration_s, by, time_col, metric_col)
+    return agg_percentiles(
+        df, quantiles, duration_s, by, time_col, metric_col, delay_s=delay_s
+    )
+
+
+def _coll_topk(df, k, duration_s, by, time_col, metric_col, order_cols, delay_s, biggest):
+    """The k best events per window as rows (event columns…,
+    window_start): by metric (descending for top, ascending for
+    bottom), then the later event, then ``order_cols``.
+
+    Batch ranks with ``row_number`` inside (by…, window) — a
+    spillable sort, no global order. Structured Streaming rejects
+    window functions, so streaming input slices a sorted
+    ``collect_list`` instead; the sort key spells the same order
+    (``order_cols`` are numeric, as in :func:`coll_increase`)."""
+    if not df.isStreaming:
+        from pyspark.sql import Window as W
+
+        bucket = window_start_s(time_col, duration_s).alias("window_start")
+        d = df.withColumn("window_start", bucket)
+        m = F.col(metric_col)
+        w = W.partitionBy(*_cols(by), "window_start").orderBy(
+            m.desc() if biggest else m.asc(), F.col(time_col).desc(), *_cols(order_cols)
+        )
+        return d.withColumn("__rn__", F.row_number().over(w)).filter(
+            F.col("__rn__") <= k
+        ).drop("__rn__")
+    # top sorts descending, bottom ascending; either way the later
+    # event and then the smaller order_cols come first
+    t = F.unix_micros(F.col(time_col))
+    o = _cols(order_cols)
+    ties = [t, *[-c for c in o]] if biggest else [-t, *o]
+    key = F.struct(
+        F.col(metric_col).alias("m"),
+        *[c.alias(f"k{i}") for i, c in enumerate(ties)],
+        F.struct(*_cols(df.columns)).alias("e"),
+    )
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    top = finish(g.agg(
+        F.slice(F.sort_array(F.collect_list(key), asc=not biggest), 1, k).alias("__k__")
+    ))
+    return top.select(F.explode("__k__.e").alias("__e__"), "window_start").select(
+        "__e__.*", "window_start"
+    )
 
 
 def coll_top(
@@ -444,20 +538,14 @@ def coll_top(
     time_col: str = "time",
     metric_col: str = "metric",
     order_cols: Sequence[str] = (),
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Top-K events by metric per window (``coll-top``,
     action.clj:2007-2028, math.clj:140-146). Classic windowed top-K:
     rank within (by…, window) and keep k — no global sort."""
-    from pyspark.sql import Window as W
-
-    bucket = window_start_s(time_col, duration_s).alias("window_start")
-    d = df.withColumn("window_start", bucket)
-    w = W.partitionBy(*_cols(by), "window_start").orderBy(
-        F.col(metric_col).desc(), F.col(time_col).desc(), *_cols(order_cols)
+    return _coll_topk(
+        df, k, duration_s, by, time_col, metric_col, order_cols, delay_s, True
     )
-    return d.withColumn("__rn__", F.row_number().over(w)).filter(
-        F.col("__rn__") <= k
-    ).drop("__rn__")
 
 
 def coll_bottom(
@@ -468,19 +556,13 @@ def coll_bottom(
     time_col: str = "time",
     metric_col: str = "metric",
     order_cols: Sequence[str] = (),
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Bottom-K events by metric per window (``coll-bottom``,
     action.clj:2030-2051)."""
-    from pyspark.sql import Window as W
-
-    bucket = window_start_s(time_col, duration_s).alias("window_start")
-    d = df.withColumn("window_start", bucket)
-    w = W.partitionBy(*_cols(by), "window_start").orderBy(
-        F.col(metric_col).asc(), F.col(time_col).desc(), *_cols(order_cols)
+    return _coll_topk(
+        df, k, duration_s, by, time_col, metric_col, order_cols, delay_s, False
     )
-    return d.withColumn("__rn__", F.row_number().over(w)).filter(
-        F.col("__rn__") <= k
-    ).drop("__rn__")
 
 
 def coll_increase(
@@ -490,6 +572,7 @@ def coll_increase(
     time_col: str = "time",
     metric_col: str = "metric",
     order_cols: Sequence[str] = (),
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Counter increase per window = latest.metric − oldest.metric,
     rows with non-positive increase (counter reset) dropped
@@ -498,11 +581,12 @@ def coll_increase(
     t = F.unix_micros(F.col(time_col))
     newest_key = F.struct(t.alias("t"), *[(-F.col(c)).alias(f"o{i}") for i, c in enumerate(order_cols)])
     oldest_key = F.struct((-t).alias("t"), *[(-F.col(c)).alias(f"o{i}") for i, c in enumerate(order_cols)])
-    g = _grouped(df, duration_s, by, time_col).agg(
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    g = finish(g.agg(
         F.max_by(F.col(metric_col), newest_key).alias("__new__"),
         F.max_by(F.col(metric_col), oldest_key).alias("__old__"),
         F.count(F.lit(1)).alias("__n__"),
-    )
+    ))
     out = g.withColumn("metric", F.col("__new__") - F.col("__old__")).drop(
         "__new__", "__old__"
     )
@@ -517,16 +601,15 @@ def coll_sort(
     by: Sequence[str] = (),
     time_col: str = "time",
     payload_cols: Sequence[str] | None = None,
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Sort a window's events by field (``coll-sort``,
     action.clj:368-389): emits (by…, window_start, events array
     sorted by field)."""
     payload_cols = list(payload_cols or df.columns)
     ev = F.struct(F.col(field).alias("__k__"), *[F.col(c) for c in payload_cols])
-    g = _grouped(df, duration_s, by, time_col).agg(
-        F.sort_array(F.collect_list(ev)).alias("events")
-    )
-    return g
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    return finish(g.agg(F.sort_array(F.collect_list(ev)).alias("events")))
 
 
 def ewma_timeless(

@@ -1,4 +1,4 @@
-"""Window operators (SURVEY.md §2.5) — batch realizations.
+"""Window operators (SURVEY.md §2.5).
 
 Event-time tumbling windows use integer-µs bucket math
 (:mod:`mirabelle_spark.timeutil`) matching the reference's floored
@@ -10,6 +10,11 @@ Every operator threads ``by`` keys (the reference's ``by`` grouping,
 — that is the scale story: per-key windows shuffle once on the keys
 and parallelize across the cluster, instead of the reference's
 per-key closure forks on one node.
+
+The tumbling-window operators (``fixed_time_window``, ``ssort``,
+``project``) and ``sessionize`` also run on streaming input, with
+``delay_s`` as the watermark; the count and sliding windows have
+keyed-state twins in :mod:`mirabelle_spark.streaming.core`.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from mirabelle_spark.operators.aggregations import _aggr, _grouped, _watermarked
 from mirabelle_spark.timeutil import US, window_start_s
 
 
@@ -40,6 +46,7 @@ def fixed_time_window(
     by: Sequence[str] = (),
     time_col: str = "time",
     event_cols: Sequence[str] | None = None,
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Tumbling event-time window emitting the list of events per
     window (``fixed-time-window``, action.clj:2564-2594 over the
@@ -48,15 +55,13 @@ def fixed_time_window(
     Returns one row per (by…, window_start) with an ``events``
     array<struct> column sorted by event time. Plan shape:
     partial+final hash aggregate on (by…, bucket) — one shuffle.
+    On streaming input ``delay_s`` is the watermark (the reference's
+    ``:delay``): a window emits once it seals.
     """
     event_cols = list(event_cols or df.columns)
-    bucket = window_start_s(time_col, duration_s).alias("window_start")
     ev = F.struct(*[F.col(c) for c in event_cols])
-    out = (
-        df.groupBy(*_cols(by), bucket)
-        .agg(F.sort_array(F.collect_list(ev)).alias("events"))
-    )
-    return out
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    return finish(g.agg(F.sort_array(F.collect_list(ev)).alias("events")))
 
 
 def fixed_event_window(
@@ -135,16 +140,17 @@ def ssort(
     by: Sequence[str] = (),
     time_col: str = "time",
     payload_cols: Sequence[str] | None = None,
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Buffer ``duration`` seconds, re-emit events sorted by
     ``field`` (action.clj:2641-2691) — the late-event repair
-    operator. Batch: per tumbling bucket, sort_array by (field,
-    payload) and explode back to rows."""
+    operator. Per tumbling bucket (a sealed window on streaming
+    input), sort_array by (field, payload) and explode back to rows
+    (by…, window_start, seq, payload…)."""
     payload_cols = list(payload_cols or df.columns)
-    bucket = window_start_s(time_col, duration_s).alias("window_start")
     ev = F.struct(F.col(field).alias("__k__"), *[F.col(c) for c in payload_cols])
-    sorted_list = F.sort_array(F.collect_list(ev))
-    out = df.groupBy(*_cols(by), bucket).agg(sorted_list.alias("__evs__"))
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    out = finish(g.agg(F.sort_array(F.collect_list(ev)).alias("__evs__")))
     exploded = out.select(
         *_cols(by), "window_start", F.posexplode("__evs__").alias("seq", "__e__")
     )
@@ -195,20 +201,20 @@ def project(
     metric_col: str = "metric",
     order_cols: Sequence[str] = (),
     by: Sequence[str] = (),
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Latest event matching each of N conditions, correlated per
     tumbling window (action.clj:1377-1463) — the reference's only
     join-like operator, expressed as N conditional ``max_by``
     aggregates in ONE groupBy (no self-join, no second shuffle).
 
-    Returns (window_start[, by…], metric_1 … metric_N): the metric of
+    Returns ([by…,] window_start, metric_1 … metric_N): the metric of
     the latest event matching condition i within the window. ``by``
     is the fork isolation a `by` upstream implies (each fork
-    correlates its own events — same keying as the streaming twin).
+    correlates its own events).
     """
     from mirabelle_spark.conditions import compile_condition
 
-    bucket = window_start_s(time_col, duration_s).alias("window_start")
     ord_key = F.struct(F.col(time_col), *_cols(order_cols))
     aggs = []
     for i, cond in enumerate(conditions, start=1):
@@ -218,7 +224,8 @@ def project(
                 f"metric_{i}"
             )
         )
-    return df.groupBy(bucket, *_cols(by)).agg(*aggs)
+    g, finish = _grouped(df, duration_s, by, time_col, delay_s)
+    return finish(g.agg(*aggs))
 
 
 def coalesce_ticks(
@@ -287,6 +294,7 @@ def sessionize(
     by: Sequence[str] = (),
     time_col: str = "time",
     metric_col: str | None = "metric",
+    delay_s: float = 0.0,
 ) -> DataFrame:
     """Gap-based sessionization — an operator the reference has no
     analog for (its windows are fixed/moving), but the native Spark
@@ -304,17 +312,16 @@ def sessionize(
 
     Scale shape: one shuffle on the grouping keys; sessions form
     inside the aggregation (no window function, no per-key sort
-    stage beyond the hash aggregate's own)."""
+    stage beyond the hash aggregate's own).
+
+    On streaming input ``delay_s`` is the watermark: a session emits
+    (append mode) once the watermark passes its gap-extended end."""
     w = F.session_window(F.col(time_col), f"{int(gap_s * 1_000_000)} microseconds")
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if metric_col is not None:
-        aggs.append(
-            F.sum(F.coalesce(F.col(metric_col), F.lit(0.0)).cast("decimal(38,9)"))
-            .cast("double")
-            .alias("metric")
-        )
+        aggs.append(_aggr("sum", F.col(metric_col), gap_s).alias("metric"))
     return (
-        df.groupBy(*_cols(by), w.alias("__s__"))
+        _watermarked(df, time_col, delay_s).groupBy(*_cols(by), w.alias("__s__"))
         .agg(*aggs)
         .withColumn("session_start", F.unix_micros(F.col("__s__.start")))
         .withColumn("session_end", F.unix_micros(F.col("__s__.end")))

@@ -102,11 +102,11 @@ def bounded_topk(
     spillable streaming sort-limit where this form buffers a
     ``collect_list`` array per group. Measured on a 1M-row × 64-dim
     corpus, 2 queries (the adversarial few-queries-huge-mass
-    shape, fresh JVM per configuration, min-of-3,
-    tools/bench_topk.py): window 25.2 s vs this form 29.4 s — the
+    shape, fresh JVM per configuration, min-of-3; protocol and
+    table in PERF §87): window 25.2 s vs this form 29.4 s — the
     optimizer's plan wins, so the rankers keep the declarative
     window and this helper documents (and continuously re-checks,
-    via its equivalence pytest) the alternative. PERF §87.
+    via its equivalence pytest) the alternative.
 
     Phase 1 keeps the k best (dist, id) structs per (query,
     input-partition) via collect-then-slice — the ``collect_list``
@@ -1019,6 +1019,10 @@ def ivf_topk(
 
     Returns (query_id, vec_id, cosine, rank) like the exact
     baseline; recall grows with ``nprobe`` (== nlist ⇒ exhaustive).
+    A zero-norm corpus or query vector scores cosine NULL (ranked
+    after every scored row) whatever ``spark.sql.ansi.enabled``
+    says: the fused probe kernel divides in Python, where the
+    relational cosine would raise under ANSI.
     """
     c = corpus.select(F.col(id_col), as_double_vec(F.col(vec_col)).alias("__cv__"))
     if centroids is None:

@@ -1107,6 +1107,11 @@ def resolve_clusters(
     rounds than the text chains). Old generations' blocks are freed
     by the context cleaner; the driver holds one decimal per round
     (the monotone label-sum fixpoint probe), never the labels.
+
+    ``clean_pairs=True`` requires ``ids`` to hold each id once: ids
+    in no pair skip the rounds' ``groupBy("id")`` and pass through
+    one output row per input row, so a duplicated id is emitted
+    once per duplicate.
     """
     # pin the PAIR table ONCE before symmetrizing (r16): the
     # two-direction union references ``pairs`` twice, so an unpinned

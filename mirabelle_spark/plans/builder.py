@@ -56,11 +56,13 @@ class Ctx:
 
     ``streaming=True`` compiles the SAME tree against a streaming
     DataFrame: stateless actions are streaming-transparent (identical
-    Catalyst ops), and stateful/windowed actions dispatch to their
-    Structured Streaming twins (keyed state / watermarked windows)
-    instead of the batch window-function realizations. ``delay_s``
-    is the default watermark tolerance for windowed twins (the
-    reference's per-op :delay overrides it via cfg). ``shards``
+    Catalyst ops), windowed aggregates run the same functions (they
+    group on a watermarked ``window()`` when the input is a stream),
+    and keyed stateful actions dispatch to their Structured Streaming
+    twins (keyed state) instead of the batch window-function
+    realizations. ``delay_s`` is the default watermark tolerance of
+    windowed actions (the reference's per-op :delay overrides it via
+    cfg; batch grouping ignores it). ``shards``
     (set per-fork via ``by``'s ``{"shards": N}`` config key, or
     session-wide here) is passed to every keyed-state twin as its
     ``shards`` argument: N runs the operator's one fold over
@@ -79,8 +81,14 @@ class Ctx:
     shards: int | None = None
 
 
-def _tw(ctx: Ctx) -> dict:
-    return dict(by=list(ctx.by), time_col=ctx.time_col)
+def _tw(ctx: Ctx, cfg: dict | None = None) -> dict:
+    """Keys of a tumbling-window action: ``by``, time column and the
+    watermark tolerance — the action's own :delay, else the
+    context's (only streaming input uses it)."""
+    return dict(
+        by=list(ctx.by), time_col=ctx.time_col,
+        delay_s=(cfg or {}).get("delay", ctx.delay_s),
+    )
 
 
 # action name -> fn(df, ctx, *params) -> DataFrame (or None for sinks)
@@ -159,7 +167,7 @@ action("custom")(lambda df, ctx, name, *a: _ACTIONS[name](df, ctx, *a))
 # -- windows ---------------------------------------------------------------
 
 action("fixed-time-window")(
-    lambda df, ctx, cfg: win.fixed_time_window(df, cfg["duration"], **_tw(ctx))
+    lambda df, ctx, cfg: win.fixed_time_window(df, cfg["duration"], **_tw(ctx, cfg))
 )
 action("fixed-event-window")(
     lambda df, ctx, cfg: win.fixed_event_window(
@@ -174,10 +182,12 @@ action("moving-event-window")(
     )
 )
 action("moving-time-window")(
-    lambda df, ctx, cfg: win.moving_time_window(df, cfg["duration"], **_tw(ctx))
+    lambda df, ctx, cfg: win.moving_time_window(
+        df, cfg["duration"], by=list(ctx.by), time_col=ctx.time_col
+    )
 )
 action("ssort")(
-    lambda df, ctx, cfg: win.ssort(df, cfg["duration"], cfg["field"], **_tw(ctx))
+    lambda df, ctx, cfg: win.ssort(df, cfg["duration"], cfg["field"], **_tw(ctx, cfg))
 )
 # fork isolation (stream.clj:38-44): a `by` upstream gives every fork
 # its own coalesce state in the reference, so the fork keys join the
@@ -193,101 +203,90 @@ action("coalesce")(
 )
 action("project")(
     lambda df, ctx, conds, cfg=None: win.project(
-        df, conds, (cfg or {}).get("duration", 60.0), time_col=ctx.time_col,
+        df, conds, (cfg or {}).get("duration", 60.0),
         metric_col=ctx.metric_col, order_cols=list(ctx.order_cols),
-        by=list(ctx.by),  # fork isolation, same keying as the twin
+        **_tw(ctx, cfg),  # by: fork isolation
     )
 )
 
 # -- aggregations ----------------------------------------------------------
 
 
-def _aggk(ctx: Ctx) -> dict:
-    return dict(by=list(ctx.by), time_col=ctx.time_col, metric_col=ctx.metric_col)
+def _aggk(ctx: Ctx, cfg: dict | None = None) -> dict:
+    return dict(_tw(ctx, cfg), metric_col=ctx.metric_col)
 
 
-action("sum")(lambda df, ctx, cfg: agg.agg_sum(df, cfg["duration"], **_aggk(ctx)))
+action("sum")(lambda df, ctx, cfg: agg.agg_sum(df, cfg["duration"], **_aggk(ctx, cfg)))
 action("aggregation")(
     lambda df, ctx, cfg: agg.aggregation_delayed(
         df, cfg["duration"], cfg.get("delay", 0), aggr=cfg.get("aggr-fn", "sum"),
-        **_aggk(ctx), arrival_cols=list(ctx.order_cols),
+        by=list(ctx.by), time_col=ctx.time_col, metric_col=ctx.metric_col,
+        arrival_cols=list(ctx.order_cols),
     )
 )
-action("mean")(lambda df, ctx, cfg: agg.agg_mean(df, cfg["duration"], **_aggk(ctx)))
+action("mean")(lambda df, ctx, cfg: agg.agg_mean(df, cfg["duration"], **_aggk(ctx, cfg)))
 action("top")(
     lambda df, ctx, cfg: agg.agg_top(
-        df, cfg["duration"], **_aggk(ctx), order_cols=list(ctx.order_cols)
+        df, cfg["duration"], **_aggk(ctx, cfg), order_cols=list(ctx.order_cols)
     )
 )
 action("bottom")(
     lambda df, ctx, cfg: agg.agg_bottom(
-        df, cfg["duration"], **_aggk(ctx), order_cols=list(ctx.order_cols)
+        df, cfg["duration"], **_aggk(ctx, cfg), order_cols=list(ctx.order_cols)
     )
 )
-action("rate")(
-    lambda df, ctx, cfg: agg.agg_rate(
-        df, cfg["duration"], by=list(ctx.by), time_col=ctx.time_col
-    )
-)
+action("rate")(lambda df, ctx, cfg: agg.agg_rate(df, cfg["duration"], **_tw(ctx, cfg)))
 action("ratio")(
     lambda df, ctx, conds, cfg: agg.agg_ratio(
-        df, conds[0], conds[1], cfg["duration"], by=list(ctx.by),
-        time_col=ctx.time_col, metric_col=ctx.metric_col,
+        df, conds[0], conds[1], cfg["duration"], **_aggk(ctx, cfg),
         use_metric=cfg.get("metric", False),
     )
 )
 action("percentiles")(
     lambda df, ctx, cfg: agg.agg_percentiles(
-        df, cfg["quantiles"], cfg["duration"], **_aggk(ctx)
+        df, cfg["quantiles"], cfg["duration"], **_aggk(ctx, cfg)
     )
 )
+action("coll-count")(
+    lambda df, ctx, cfg: agg.coll_count(df, cfg["duration"], **_tw(ctx, cfg))
+)
 for _name, _fn in {
-    "coll-count": agg.coll_count,
     "coll-sum": agg.coll_sum,
     "coll-mean": agg.coll_mean,
     "coll-max": agg.coll_max,
     "coll-min": agg.coll_min,
     "coll-rate": agg.coll_rate,
 }.items():
-    if _fn in (agg.coll_count,):
-        action(_name)(
-            lambda df, ctx, cfg, f=_fn: f(
-                df, cfg["duration"], by=list(ctx.by), time_col=ctx.time_col
-            )
-        )
-    else:
-        action(_name)(lambda df, ctx, cfg, f=_fn: f(df, cfg["duration"], **_aggk(ctx)))
+    action(_name)(lambda df, ctx, cfg, f=_fn: f(df, cfg["duration"], **_aggk(ctx, cfg)))
 action("coll-quotient")(
     lambda df, ctx, cfg: agg.coll_quotient(
-        df, cfg["duration"], **_aggk(ctx), order_cols=list(ctx.order_cols)
+        df, cfg["duration"], **_aggk(ctx, cfg), order_cols=list(ctx.order_cols)
     )
 )
 action("coll-percentiles")(
     lambda df, ctx, cfg: agg.coll_percentiles(
-        df, cfg["quantiles"], cfg["duration"], **_aggk(ctx)
+        df, cfg["quantiles"], cfg["duration"], **_aggk(ctx, cfg)
     )
 )
 action("coll-top")(
     lambda df, ctx, cfg: agg.coll_top(
-        df, cfg["nb"], cfg["duration"], **_aggk(ctx),
+        df, cfg["nb"], cfg["duration"], **_aggk(ctx, cfg),
         order_cols=list(ctx.order_cols),
     )
 )
 action("coll-bottom")(
     lambda df, ctx, cfg: agg.coll_bottom(
-        df, cfg["nb"], cfg["duration"], **_aggk(ctx),
+        df, cfg["nb"], cfg["duration"], **_aggk(ctx, cfg),
         order_cols=list(ctx.order_cols),
     )
 )
 action("coll-increase")(
     lambda df, ctx, cfg=None: agg.coll_increase(
-        df, (cfg or {}).get("duration", 60.0), **_aggk(ctx),
+        df, (cfg or {}).get("duration", 60.0), **_aggk(ctx, cfg),
         order_cols=list(ctx.order_cols),
     )
 )
-action("coll-sort")(
-    lambda df, ctx, f: agg.coll_sort(df, f, 60.0, by=list(ctx.by), time_col=ctx.time_col)
-)
+action("coll-sort")(lambda df, ctx, f: agg.coll_sort(df, f, 60.0, **_tw(ctx)))
 action("ewma-timeless")(
     lambda df, ctx, r: agg.ewma_timeless(
         df, r, by=list(ctx.by), time_col=ctx.time_col, metric_col=ctx.metric_col,
@@ -296,10 +295,7 @@ action("ewma-timeless")(
 )
 # beyond-reference windowed ops, DSL-exposed for parity of surface
 action("sessionize")(
-    lambda df, ctx, cfg: win.sessionize(
-        df, float(cfg["gap"]), by=list(ctx.by), time_col=ctx.time_col,
-        metric_col=ctx.metric_col,
-    )
+    lambda df, ctx, cfg: win.sessionize(df, float(cfg["gap"]), **_aggk(ctx, cfg))
 )
 action("zscore")(
     lambda df, ctx, cfg: st.zscore(
@@ -510,8 +506,9 @@ action("stable")(
 
 # -- streaming twins -------------------------------------------------------
 # Same tree, streaming source: these entries replace the batch
-# realization when ctx.streaming is set. Stateless actions need no
-# entry (same Catalyst ops both ways). Keyed twins REQUIRE `by` keys:
+# realization when ctx.streaming is set. Stateless actions and the
+# tumbling-window aggregates need no entry (the same functions run
+# on streaming input). Keyed twins REQUIRE `by` keys:
 # unkeyed ordered state has no sane streaming shape (one global task
 # forever), so the compiler refuses instead of degrading silently.
 
@@ -536,59 +533,17 @@ def _need_by(ctx: Ctx, name: str) -> list:
     return list(ctx.by)
 
 
-def _stream_agg_kind(kind):
-    def fn(df, ctx, cfg):
-        from mirabelle_spark import streaming as stx
-
-        return stx.stream_agg(
-            df, kind, cfg["duration"], delay_s=cfg.get("delay", ctx.delay_s),
-            by=list(ctx.by), time_col=ctx.time_col, metric_col=ctx.metric_col,
-        )
-
-    return fn
-
-
-for _kind, _names in {
-    "sum": ("sum", "coll-sum"),
-    "mean": ("mean", "coll-mean"),
-    "rate": ("rate", "coll-rate"),
-    "count": ("coll-count",),
-    "max": ("coll-max",),
-    "min": ("coll-min",),
-}.items():
-    for _n in _names:
-        stream_action(_n)(_stream_agg_kind(_kind))
-
-
 @stream_action("aggregation")
 def _s_aggregation(df, ctx, cfg):
     """Push-mode aggregation with :delay → watermarked streaming agg:
     the watermark IS the late-drop rule (events later than delay are
     dropped; windows seal delay seconds after their end —
-    action.clj:2420-2432). aggr-fn ssort maps to the ssort twin."""
-    from mirabelle_spark import streaming as stx
-
+    action.clj:2420-2432). aggr-fn ssort maps to ssort."""
     kind = cfg.get("aggr-fn", "sum")
-    delay = cfg.get("delay", ctx.delay_s)
+    kw = _tw(ctx, cfg)
     if kind == "ssort":
-        return stx.stream_ssort(
-            df, cfg["duration"], cfg.get("field", ctx.time_col),
-            by=list(ctx.by), delay_s=delay, time_col=ctx.time_col,
-        )
-    return stx.stream_agg(
-        df, kind, cfg["duration"], delay_s=delay, by=list(ctx.by),
-        time_col=ctx.time_col, metric_col=ctx.metric_col,
-    )
-
-
-@stream_action("fixed-time-window")
-def _s_ftw(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_fixed_time_window(
-        df, cfg["duration"], delay_s=cfg.get("delay", ctx.delay_s),
-        by=list(ctx.by), time_col=ctx.time_col,
-    )
+        return win.ssort(df, cfg["duration"], cfg.get("field", ctx.time_col), **kw)
+    return agg.aggregate(df, kind, cfg["duration"], metric_col=ctx.metric_col, **kw)
 
 
 @stream_action("fixed-event-window")
@@ -621,16 +576,6 @@ def _s_coalesce(df, ctx, cfg):
     )
 
 
-@stream_action("ssort")
-def _s_ssort(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_ssort(
-        df, cfg["duration"], cfg["field"], by=list(ctx.by),
-        delay_s=cfg.get("delay", ctx.delay_s), time_col=ctx.time_col,
-    )
-
-
 @stream_action("throttle")
 def _s_throttle(df, ctx, cfg):
     from mirabelle_spark import streaming as stx
@@ -648,16 +593,6 @@ def _s_ewma(df, ctx, r):
     return stx.stream_ewma(
         df, r, by=_need_by(ctx, "ewma-timeless"), time_col=ctx.time_col,
         metric_col=ctx.metric_col, shards=ctx.shards,
-    )
-
-
-@stream_action("sessionize")
-def _s_sessionize(df, ctx, cfg):
-    from mirabelle_spark.streaming import core as stx
-
-    return stx.stream_sessionize(
-        df, float(cfg["gap"]), delay_s=ctx.delay_s, by=list(ctx.by),
-        time_col=ctx.time_col, metric_col=ctx.metric_col,
     )
 
 
@@ -808,74 +743,6 @@ stream_action("critical-dt")(_s_cond_dt_vec(
 stream_action("cond-dt")(_s_cond_dt_vec(
     lambda ctx, cond, cfg: (cond, cfg["duration"])))
 
-def _s_windowed(fn_name):
-    def fn(df, ctx, *params):
-        from mirabelle_spark import streaming as stx
-
-        cfg = params[-1] if params and isinstance(params[-1], dict) else {}
-        delay = cfg.get("delay", ctx.delay_s)
-        kw = dict(by=list(ctx.by), time_col=ctx.time_col, delay_s=delay)
-        if fn_name in ("top", "bottom"):
-            f = stx.stream_top if fn_name == "top" else stx.stream_bottom
-            return f(df, cfg["duration"], metric_col=ctx.metric_col, **kw)
-        if fn_name == "percentiles":
-            return stx.stream_percentiles(
-                df, cfg["quantiles"], cfg["duration"],
-                metric_col=ctx.metric_col, **kw,
-            )
-        if fn_name == "coll-quotient":
-            return stx.stream_coll_quotient(
-                df, cfg["duration"], metric_col=ctx.metric_col, **kw
-            )
-        if fn_name == "coll-increase":
-            return stx.stream_coll_increase(
-                df, cfg["duration"], metric_col=ctx.metric_col, **kw
-            )
-        if fn_name == "ratio":
-            conds = params[0]
-            return stx.stream_ratio(
-                df, conds[0], conds[1], cfg["duration"],
-                metric_col=ctx.metric_col,
-                use_metric=cfg.get("metric", False), **kw,
-            )
-        if fn_name in ("coll-top", "coll-bottom"):
-            return stx.stream_coll_topk(
-                df, cfg["nb"], cfg["duration"], metric_col=ctx.metric_col,
-                biggest=(fn_name == "coll-top"), **kw,
-            )
-        raise AssertionError(fn_name)
-
-    return fn
-
-
-for _n in ("top", "bottom", "ratio", "coll-quotient", "coll-increase",
-           "coll-top", "coll-bottom"):
-    stream_action(_n)(_s_windowed(_n))
-stream_action("percentiles")(_s_windowed("percentiles"))
-stream_action("coll-percentiles")(_s_windowed("percentiles"))
-
-
-@stream_action("coll-sort")
-def _s_coll_sort(df, ctx, f):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_ssort(
-        df, 60.0, f, by=list(ctx.by), delay_s=ctx.delay_s,
-        time_col=ctx.time_col,
-    )
-
-
-@stream_action("project")
-def _s_project(df, ctx, conds, cfg=None):
-    from mirabelle_spark import streaming as stx
-
-    cfg = cfg or {}
-    return stx.stream_project(
-        df, conds, cfg.get("duration", 60.0),
-        delay_s=cfg.get("delay", ctx.delay_s), time_col=ctx.time_col,
-        metric_col=ctx.metric_col, by=list(ctx.by),
-    )
-
 
 @stream_action("moving-time-window")
 def _s_mtw(df, ctx, cfg):
@@ -905,12 +772,6 @@ def _s_not_expired(df, ctx):
         df, by=_need_by(ctx, "not-expired"), time_col=ctx.time_col,
         keep_expired=False, shards=ctx.shards,
     )
-
-
-# every remaining action is either stateless (streaming-transparent)
-# or mapped above; nothing refuses anymore, but keep the mechanism
-# for future batch-only shapes
-_STREAM_UNSUPPORTED: frozenset = frozenset()
 
 
 # -- structural / sinks ----------------------------------------------------
@@ -1023,12 +884,6 @@ def _walk(df: DataFrame, node: dict | list, ctx: Ctx) -> None:
         for child in children:
             _walk(out, child, ctx)
         return
-    if ctx.streaming and name in _STREAM_UNSUPPORTED:
-        raise NotImplementedError(
-            f"action {name!r} has no streaming twin; run it in batch mode "
-            "(its batch realization uses window functions, which "
-            "Structured Streaming rejects)"
-        )
     if name in _UNKEYED_SEQUENTIAL and not ctx.by:
         _LOG.warning(
             "action %r compiled with no `by` keys: the order-dependent "

@@ -1,17 +1,11 @@
-"""Structured Streaming twins of the batch operators."""
+"""Structured Streaming: keyed-state twins of the batch stateful
+operators, sources, sinks and the control plane. Windowed aggregates
+need no twin — the batch functions in ``operators.aggregations`` and
+``operators.windows`` take streaming input directly."""
 
 from mirabelle_spark.streaming.core import (  # noqa: F401
     file_source,
     rate_source,
-    stream_agg,
-    stream_bottom,
-    stream_coll_increase,
-    stream_coll_quotient,
-    stream_coll_topk,
-    stream_percentiles,
-    stream_project,
-    stream_ratio,
-    stream_top,
     stream_changed,
     stream_coalesce,
     stream_cond_dt,
@@ -20,14 +14,12 @@ from mirabelle_spark.streaming.core import (  # noqa: F401
     stream_ewma,
     stream_expired,
     stream_fixed_event_window,
-    stream_fixed_time_window,
     stream_moving_event_window,
     stream_moving_time_window,
     stream_smax,
     stream_smax_jvm,
     stream_smin,
     stream_smin_jvm,
-    stream_ssort,
     stream_stable,
     stream_throttle,
     stream_zscore,

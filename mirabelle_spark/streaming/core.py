@@ -7,6 +7,12 @@ column, not arrival: the per-operator ``:delay`` lateness tolerance
 ``fixed-time-window``/aggregations ARE ``groupBy(window(...))``, and
 per-key operator state IS the keyed state store.
 
+Windowed aggregates have no twin here: each operator in
+:mod:`~mirabelle_spark.operators.aggregations` /
+:mod:`~mirabelle_spark.operators.windows` runs on streaming input
+itself (watermarked ``window()`` grouping, ``delay_s``). This module
+holds the keyed-state operators, sources and sinks.
+
 Batch/stream parity contract: every function here produces the same
 rows as its batch twin over the same finite input when run with an
 ``availableNow`` trigger (asserted in tests/test_streaming.py).
@@ -16,11 +22,8 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from mirabelle_spark.conditions import compile_condition
-from mirabelle_spark.operators.aggregations import DEC
 
 
 def file_source(
@@ -44,60 +47,6 @@ def rate_source(spark: SparkSession, rows_per_sec: int = 100) -> DataFrame:
             (F.col("value") % 100).cast("double").alias("metric"),
             F.concat(F.lit("host-"), (F.col("value") % 5)).alias("host"),
         )
-    )
-
-
-def stream_fixed_time_window(
-    df: DataFrame,
-    duration_s: float,
-    delay_s: float = 0.0,
-    by: Sequence[str] = (),
-    time_col: str = "time",
-) -> DataFrame:
-    """Streaming ``fixed-time-window``: tumbling event-time window +
-    watermark(:delay), emitting the event list per closed window."""
-    src = df.withWatermark(time_col, f"{delay_s} seconds")
-    w = F.window(F.col(time_col), f"{int(duration_s)} seconds")
-    ev = F.struct(*[F.col(c) for c in df.columns])
-    return (
-        src.groupBy(*[F.col(c) for c in by], w.alias("__w__"))
-        .agg(F.sort_array(F.collect_list(ev)).alias("events"))
-        .withColumn("window_start", F.col("__w__.start").cast("double"))
-        .drop("__w__")
-    )
-
-
-def stream_agg(
-    df: DataFrame,
-    kind: str,
-    duration_s: float,
-    delay_s: float = 0.0,
-    by: Sequence[str] = (),
-    time_col: str = "time",
-    metric_col: str = "metric",
-) -> DataFrame:
-    """Streaming twin of the aggregation* family (sum/mean/rate/
-    count/max/min): watermarked tumbling-window aggregate. Uses the
-    same DECIMAL accumulation as the batch twin so results match
-    bit-for-bit."""
-    src = df.withWatermark(time_col, f"{delay_s} seconds")
-    w = F.window(F.col(time_col), f"{int(duration_s)} seconds")
-    m = F.coalesce(F.col(metric_col), F.lit(0.0)).cast(DEC)
-    exprs = {
-        "sum": F.sum(m).cast("double"),
-        "mean": F.sum(m).cast("double") / F.count(F.lit(1)),
-        "rate": F.count(F.lit(1)) / F.lit(float(duration_s)),
-        "count": F.count(F.lit(1)).cast("double"),
-        "max": F.max(F.col(metric_col)),
-        "min": F.min(F.col(metric_col)),
-    }
-    if kind not in exprs:
-        raise ValueError(f"unsupported streaming aggregate {kind!r}")
-    return (
-        src.groupBy(*[F.col(c) for c in by], w.alias("__w__"))
-        .agg(exprs[kind].alias("metric"))
-        .withColumn("window_start", F.col("__w__.start").cast("double"))
-        .drop("__w__")
     )
 
 
@@ -614,235 +563,6 @@ def reinject_source(spark: SparkSession, topic_dir: str, schema: str) -> DataFra
     """``reinject!`` read half: subscribe a (destination) stream to a
     loopback topic."""
     return file_source(spark, topic_dir, schema)
-
-
-def stream_ssort(
-    df: DataFrame,
-    duration_s: float,
-    field: str,
-    by: Sequence[str] = (),
-    delay_s: float = 0.0,
-    time_col: str = "time",
-    payload_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Streaming ``ssort`` (action.clj:2641-2691): buffer ``duration``
-    seconds, re-emit each sealed bucket sorted by ``field``.
-
-    Pure windowed aggregation — watermark(:delay) + tumbling window +
-    sort_array(collect_list) + posexplode; no Python state at all.
-    Output matches the batch twin column-for-column
-    (by…, window_start, seq, payload…)."""
-    payload_cols = list(payload_cols or df.columns)
-    src = df.withWatermark(time_col, f"{delay_s} seconds")
-    w = F.window(F.col(time_col), f"{int(duration_s)} seconds")
-    ev = F.struct(F.col(field).alias("__k__"), *[F.col(c) for c in payload_cols])
-    agg = (
-        src.groupBy(*[F.col(c) for c in by], w.alias("__w__"))
-        .agg(F.sort_array(F.collect_list(ev)).alias("__evs__"))
-        .withColumn("window_start", F.col("__w__.start").cast("double"))
-        .drop("__w__")
-    )
-    exploded = agg.select(
-        *[F.col(c) for c in by],
-        "window_start",
-        F.posexplode("__evs__").alias("seq", "__e__"),
-    )
-    return exploded.select(
-        *[F.col(c) for c in by], "window_start", "seq", "__e__.*"
-    ).drop("__k__")
-
-
-# -- windowed aggregation twins (watermark + tumbling window) ---------------
-# Expression bodies mirror operators/aggregations.py (same max_by /
-# sorted-collect_list + post-projection shapes — keep in sync); only
-# the grouping differs: F.window() + watermark instead of the batch
-# bucket column, so append mode seals windows.
-
-
-def _wgroup(df, duration_s, delay_s, by, time_col):
-    src = df.withWatermark(time_col, f"{delay_s} seconds")
-    w = F.window(F.col(time_col), f"{int(duration_s)} seconds")
-    return src.groupBy(*[F.col(c) for c in by], w.alias("__w__"))
-
-
-def _wfinish(g):
-    return g.withColumn(
-        "window_start", F.col("__w__.start").cast("double")
-    ).drop("__w__")
-
-
-def stream_top(
-    df, duration_s, delay_s=0.0, by=(), time_col="time", metric_col="metric"
-):
-    """Streaming ``top`` (action.clj:2492-2514): per sealed window,
-    the max-metric EVENT (ties to the later event) — mirrors
-    aggregations.agg_top."""
-    ev = F.struct(*[F.col(c) for c in df.columns])
-    key = F.struct(F.col(metric_col), F.col(time_col))
-    g = _wfinish(_wgroup(df, duration_s, delay_s, by, time_col).agg(
-        F.max_by(ev, key).alias("__e__")))
-    return g.select(*by, "window_start", "__e__.*")
-
-
-def stream_bottom(
-    df, duration_s, delay_s=0.0, by=(), time_col="time", metric_col="metric"
-):
-    """Streaming ``bottom`` (action.clj:2516-2538) — mirrors
-    aggregations.agg_bottom."""
-    ev = F.struct(*[F.col(c) for c in df.columns])
-    key = F.struct((-F.col(metric_col)).alias("m"), F.col(time_col))
-    g = _wfinish(_wgroup(df, duration_s, delay_s, by, time_col).agg(
-        F.max_by(ev, key).alias("__e__")))
-    return g.select(*by, "window_start", "__e__.*")
-
-
-def stream_percentiles(
-    df, quantiles, duration_s, delay_s=0.0, by=(), time_col="time",
-    metric_col="metric",
-):
-    """Streaming ``percentiles``/``coll-percentiles`` — exact
-    nearest-rank over the sealed window (mirrors
-    aggregations.agg_percentiles: idx = min(n-1, floor(n*q)))."""
-    sorted_m = F.sort_array(F.collect_list(F.col(metric_col)))
-    g = _wfinish(_wgroup(df, duration_s, delay_s, by, time_col).agg(
-        sorted_m.alias("__m__")))
-    qs = F.array(*[F.lit(float(q)) for q in quantiles])
-    g = g.withColumn("quantile", F.explode(qs))
-    n = F.size("__m__")
-    idx = F.least(n - 1, F.floor(n.cast("double") * F.col("quantile")).cast("int"))
-    return g.withColumn("metric", F.try_element_at("__m__", idx + 1)).drop("__m__")
-
-
-def stream_coll_quotient(
-    df, duration_s, delay_s=0.0, by=(), time_col="time", metric_col="metric"
-):
-    """Streaming ``coll-quotient`` — first metric ÷ each subsequent,
-    event order (mirrors aggregations.coll_quotient's fold)."""
-    ev = F.struct(F.col(time_col), F.col(metric_col).alias("m"))
-    g = _wfinish(_wgroup(df, duration_s, delay_s, by, time_col).agg(
-        F.sort_array(F.collect_list(ev)).alias("__evs__")))
-    ms = F.transform(F.col("__evs__"), lambda x: x["m"])
-    quot = F.aggregate(
-        F.slice(ms, 2, F.greatest(F.size(ms) - 1, F.lit(0))),
-        F.element_at(ms, 1).cast("double"),
-        lambda acc, x: acc / x,
-    )
-    return g.withColumn("metric", quot).drop("__evs__")
-
-
-def stream_coll_increase(
-    df, duration_s, delay_s=0.0, by=(), time_col="time", metric_col="metric"
-):
-    """Streaming ``coll-increase`` — newest − oldest, ≥2 events,
-    positive only (mirrors aggregations.coll_increase)."""
-    t = F.unix_micros(F.col(time_col))
-    g = _wfinish(_wgroup(df, duration_s, delay_s, by, time_col).agg(
-        F.max_by(F.col(metric_col), t).alias("__new__"),
-        F.max_by(F.col(metric_col), -t).alias("__old__"),
-        F.count(F.lit(1)).alias("__n__"),
-    ))
-    out = g.withColumn("metric", F.col("__new__") - F.col("__old__")).drop(
-        "__new__", "__old__"
-    )
-    return out.filter((F.col("__n__") >= 2) & (F.col("metric") > 0)).drop("__n__")
-
-
-def stream_ratio(
-    df, cond1, cond2, duration_s, delay_s=0.0, by=(), time_col="time",
-    metric_col="metric", use_metric=False,
-):
-    """Streaming ``ratio`` (action.clj:2967-3009): conditional
-    count/sum ratio per sealed window, zero denominator → 0 (mirrors
-    aggregations.agg_ratio, same DECIMAL accumulation)."""
-    from pyspark.sql import Column as _Col
-
-    c1 = cond1 if isinstance(cond1, _Col) else compile_condition(cond1)
-    c2 = cond2 if isinstance(cond2, _Col) else compile_condition(cond2)
-    if use_metric:
-        v = F.coalesce(F.col(metric_col), F.lit(0.0)).cast(DEC)
-        num = F.sum(F.when(c1, v).otherwise(F.lit(0).cast(DEC))).cast("double")
-        den = F.sum(F.when(c2, v).otherwise(F.lit(0).cast(DEC))).cast("double")
-    else:
-        num = F.count_if(c1).cast("double")
-        den = F.count_if(c2).cast("double")
-    ratio = F.when(den == 0, F.lit(0.0)).otherwise(num / den)
-    return _wfinish(_wgroup(df, duration_s, delay_s, by, time_col).agg(
-        ratio.alias("metric")))
-
-
-def stream_coll_topk(
-    df, k, duration_s, delay_s=0.0, by=(), time_col="time",
-    metric_col="metric", biggest=True,
-):
-    """Streaming ``coll-top``/``coll-bottom``: the k best events per
-    sealed window as rows. The batch twin ranks with a window
-    function (not streamable); here the k-slice comes off a sorted
-    collect_list — same tie rule (metric, then later event wins)
-    encoded in the struct sort key."""
-    sign = -1 if biggest else 1
-    t = F.unix_micros(F.col(time_col))
-    ev = F.struct(*[F.col(c) for c in df.columns])
-    keyed = F.struct(
-        (F.col(metric_col) * sign).alias("m"), (-t).alias("nt"), ev.alias("e")
-    )
-    g = _wfinish(_wgroup(df, duration_s, delay_s, by, time_col).agg(
-        F.slice(F.sort_array(F.collect_list(keyed)), 1, k).alias("__top__")))
-    ex = g.select(*by, "window_start", F.explode("__top__").alias("__x__"))
-    return ex.select(*by, "window_start", "__x__.e.*")
-
-
-def stream_project(
-    df, conditions, duration_s, delay_s=0.0, time_col="time",
-    metric_col="metric", by=(),
-):
-    """Streaming ``project`` (action.clj:1377-1463): latest event
-    matching each of N conditions per sealed window — the same N
-    conditional max_by aggregates as the batch twin (windows.project),
-    watermarked tumbling window, no self-join."""
-    from pyspark.sql import Column as _Col
-
-    ord_key = F.struct(F.col(time_col))
-    aggs = []
-    for i, cond in enumerate(conditions, start=1):
-        c = cond if isinstance(cond, _Col) else compile_condition(cond)
-        aggs.append(
-            F.max_by(F.when(c, F.col(metric_col)), F.when(c, ord_key)).alias(
-                f"metric_{i}"
-            )
-        )
-    return _wfinish(_wgroup(df, duration_s, delay_s, by, time_col).agg(*aggs))
-
-
-def stream_sessionize(
-    df: DataFrame,
-    gap_s: float,
-    delay_s: float = 0.0,
-    by: Sequence[str] = (),
-    time_col: str = "time",
-    metric_col: str | None = "metric",
-) -> DataFrame:
-    """Streaming twin of
-    :func:`mirabelle_spark.operators.windows.sessionize`: the same
-    native session_window aggregate under a watermark — sessions
-    close (and emit, in append mode) once the watermark passes their
-    gap-extended end. Identical output columns and decimal-exact
-    metric sum, so batch/stream parity is exact on availableNow."""
-    src = df.withWatermark(time_col, f"{delay_s} seconds")
-    w = F.session_window(F.col(time_col), f"{int(gap_s * 1_000_000)} microseconds")
-    aggs = [F.count(F.lit(1)).alias("n_events")]
-    if metric_col is not None:
-        aggs.append(
-            F.sum(F.coalesce(F.col(metric_col), F.lit(0.0)).cast(DEC))
-            .cast("double")
-            .alias("metric")
-        )
-    return (
-        src.groupBy(*[F.col(c) for c in by], w.alias("__s__"))
-        .agg(*aggs)
-        .withColumn("session_start", F.unix_micros(F.col("__s__.start")))
-        .withColumn("session_end", F.unix_micros(F.col("__s__.end")))
-        .drop("__s__")
-    )
 
 
 def stream_smax_jvm(

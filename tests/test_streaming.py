@@ -32,13 +32,14 @@ def _write_input(path: str) -> list[dict]:
 
 def test_stream_agg_sum_parity(spark, tmpdir):
     from mirabelle_spark import streaming as stx
+    from mirabelle_spark.operators import aggregations as agg
 
     src_dir = os.path.join(tmpdir, "in")
     _write_input(src_dir)
     schema = "time timestamp, metric double, host string"
     stream = stx.file_source(spark, src_dir, schema)
-    agg = stx.stream_agg(stream, "sum", 60.0, by=["host"], time_col="time")
-    q = stx.to_memory(agg, "sum_test", output_mode="complete")
+    sums = agg.agg_sum(stream, 60.0, by=["host"], time_col="time")
+    q = stx.to_memory(sums, "sum_test", output_mode="complete")
     q.awaitTermination(60)
     got = {
         (r.host, r.window_start): r.metric
@@ -53,13 +54,14 @@ def test_stream_agg_sum_parity(spark, tmpdir):
 
 def test_stream_fixed_time_window_parity(spark, tmpdir):
     from mirabelle_spark import streaming as stx
+    from mirabelle_spark.operators import windows
 
     src_dir = os.path.join(tmpdir, "in2")
     _write_input(src_dir)
     schema = "time timestamp, metric double, host string"
     stream = stx.file_source(spark, src_dir, schema)
-    win = stx.stream_fixed_time_window(stream, 60.0, delay_s=5.0, time_col="time")
-    q = stx.to_memory(win, "ftw_test", output_mode="complete")
+    ftw = windows.fixed_time_window(stream, 60.0, delay_s=5.0, time_col="time")
+    q = stx.to_memory(ftw, "ftw_test", output_mode="complete")
     q.awaitTermination(60)
     rows = spark.sql("select * from ftw_test").collect()
     got = {r.window_start: [e.metric for e in r.events] for r in rows}
@@ -407,6 +409,7 @@ def test_watermark_drops_late_event(spark, tmpdir):
     micro-batch carrying an event older than watermark - delay is
     dropped from append output."""
     from mirabelle_spark import streaming as stx
+    from mirabelle_spark.operators import aggregations as agg
 
     src_dir = os.path.join(tmpdir, "late_in")
     out_dir = os.path.join(tmpdir, "late_out")
@@ -416,9 +419,9 @@ def test_watermark_drops_late_event(spark, tmpdir):
     def run_batch():
         schema = "time timestamp, metric double, host string"
         stream = stx.file_source(spark, src_dir, schema)
-        agg = stx.stream_agg(stream, "sum", 60.0, delay_s=30.0, by=["host"])
+        sums = agg.agg_sum(stream, 60.0, delay_s=30.0, by=["host"])
         q = (
-            agg.writeStream.format("json").option("path", out_dir)
+            sums.writeStream.format("json").option("path", out_dir)
             .outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -814,8 +817,8 @@ def test_load_persisted_restores_streams(spark, tmpdir):
 
 
 def test_stream_ssort_parity(spark, tmpdir):
-    """ssort streaming twin == batch twin over the same finite input
-    (sorted re-emission per sealed bucket)."""
+    """ssort on streaming input == ssort on batch input over the same
+    finite input (sorted re-emission per sealed bucket)."""
     from mirabelle_spark import streaming as stx
     from mirabelle_spark.operators import windows as win
 
@@ -829,7 +832,7 @@ def test_stream_ssort_parity(spark, tmpdir):
     _write_rows(src_dir, rows)
     schema = "time timestamp, metric double, host string"
     stream = stx.file_source(spark, src_dir, schema)
-    out = stx.stream_ssort(
+    out = win.ssort(
         stream, 60.0, "metric", by=["host"], payload_cols=["metric"]
     )
     q = stx.to_memory(out, "sso_test", output_mode="complete")
@@ -1210,6 +1213,66 @@ def test_streaming_dsl_aggregation_delay(spark, tmpdir):
     assert [(r.host, r.metric) for r in rows] == [("a", 2.0)]
 
 
+def test_streaming_dsl_windowed_reference_rows(spark, tmpdir):
+    """Windowed actions compiled with Ctx(streaming=True) run the batch
+    functions, so they emit the batch rows and columns (complete mode,
+    hand-computed): coll-rate is sum ÷ span, not count ÷ duration;
+    coll-sort emits one events array per window; coll-top/coll-bottom
+    carry each column once; fractional durations (0.5 s, 1.5 s)
+    window in whole µs like the batch bucket. All taps run at once."""
+    from mirabelle_spark.plans.builder import Ctx, compile_stream
+
+    def leaf(action, params, tap):
+        return {"action": action, "params": params,
+                "children": [{"action": "tap", "params": [tap]}]}
+
+    tree = {"action": "by", "params": [{"fields": ["host"]}], "children": [
+        leaf("coll-rate", [{"duration": 60}], "wr_rate"),
+        leaf("coll-sort", ["metric"], "wr_sort"),
+        leaf("coll-top", [{"nb": 2, "duration": 60}], "wr_top"),
+        leaf("coll-bottom", [{"nb": 2, "duration": 60}], "wr_bottom"),
+        leaf("sum", [{"duration": 0.5}], "wr_half"),
+        leaf("sum", [{"duration": 1.5}], "wr_1p5"),
+    ]}
+    src_dir = os.path.join(tmpdir, "wr_in")
+    _write_rows(src_dir, [_ev(t, m) for t, m in [(1, 4), (2, 10), (5, 2), (90, 3)]])
+    stream = spark.readStream.format("json").schema(
+        "time timestamp, metric double, host string").load(src_dir)
+    taps = compile_stream(stream, tree, Ctx(streaming=True, test_mode=True)).taps
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        qs = [
+            df.writeStream.format("memory").queryName(name)
+            .outputMode("complete").trigger(availableNow=True).start()
+            for name, df in taps.items()
+        ]
+        for q in qs:
+            q.awaitTermination(120)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    out = {name: spark.sql(f"select * from {name}") for name in taps}
+
+    def by_window(name):
+        return {(r.host, r.window_start): r.metric for r in out[name].collect()}
+
+    assert by_window("wr_rate") == {("foo", 0.0): 16.0 / 4.0, ("foo", 60.0): 3.0}
+    assert by_window("wr_half") == {
+        ("foo", 1.0): 4.0, ("foo", 2.0): 10.0, ("foo", 5.0): 2.0, ("foo", 90.0): 3.0}
+    assert by_window("wr_1p5") == {
+        ("foo", 0.0): 4.0, ("foo", 1.5): 10.0, ("foo", 4.5): 2.0, ("foo", 90.0): 3.0}
+    assert out["wr_sort"].columns == ["host", "window_start", "events"]
+    assert sorted(
+        (r.window_start, [e.metric for e in r.events]) for r in out["wr_sort"].collect()
+    ) == [(0.0, [2.0, 4.0, 10.0]), (60.0, [3.0])]
+    for name, expect in [
+        ("wr_top", [(0.0, 4.0), (0.0, 10.0), (60.0, 3.0)]),
+        ("wr_bottom", [(0.0, 2.0), (0.0, 4.0), (60.0, 3.0)]),
+    ]:
+        assert out[name].columns == ["time", "metric", "host", "window_start"]
+        assert sorted((r.window_start, r.metric) for r in out[name].collect()) == expect
+
+
 def test_stream_coalesce_reference_cases(spark, tmpdir):
     """action_test.clj coalesce*-test ported against the STREAMING
     twin (the batch twin's tick-explosion shape differs by design):
@@ -1280,11 +1343,10 @@ def test_stream_coalesce_reference_cases(spark, tmpdir):
 
 def test_stream_windowed_agg_twins_parity(spark, tmpdir):
     """top/bottom/percentiles/coll-quotient/coll-increase/ratio/
-    coll-topk streaming twins match their batch twins over the same
-    finite input (complete mode, sealed tumbling windows)."""
+    coll-top on streaming input match the same functions on batch
+    input (complete mode, sealed tumbling windows)."""
     from datetime import datetime
 
-    from mirabelle_spark import streaming as stx
     from mirabelle_spark.operators import aggregations as agg
 
     rows = [
@@ -1320,35 +1382,20 @@ def test_stream_windowed_agg_twins_parity(spark, tmpdir):
         )
 
     cases = [
-        ("w_top",
-         lambda s: stx.stream_top(s, 60.0, by=["host"]),
-         lambda d: agg.agg_top(d, 60.0, by=["host"])),
-        ("w_bottom",
-         lambda s: stx.stream_bottom(s, 60.0, by=["host"]),
-         lambda d: agg.agg_bottom(d, 60.0, by=["host"])),
-        ("w_pct",
-         lambda s: stx.stream_percentiles(s, [0, 0.5, 1], 60.0, by=["host"]),
-         lambda d: agg.agg_percentiles(d, [0, 0.5, 1], 60.0, by=["host"])),
-        ("w_quot",
-         lambda s: stx.stream_coll_quotient(s, 60.0, by=["host"]),
-         lambda d: agg.coll_quotient(d, 60.0, by=["host"])),
-        ("w_incr",
-         lambda s: stx.stream_coll_increase(s, 60.0, by=["host"]),
-         lambda d: agg.coll_increase(d, 60.0, by=["host"])),
-        ("w_ratio",
-         lambda s: stx.stream_ratio(
-             s, [":=", "state", "error"], [":true"], 60.0, by=["host"]),
-         lambda d: agg.agg_ratio(
-             d, [":=", "state", "error"], [":true"], 60.0, by=["host"])),
-        ("w_top2",
-         lambda s: stx.stream_coll_topk(s, 2, 60.0, by=["host"]),
-         lambda d: agg.coll_top(d, 2, 60.0, by=["host"])),
+        ("w_top", lambda d: agg.agg_top(d, 60.0, by=["host"])),
+        ("w_bottom", lambda d: agg.agg_bottom(d, 60.0, by=["host"])),
+        ("w_pct", lambda d: agg.agg_percentiles(d, [0, 0.5, 1], 60.0, by=["host"])),
+        ("w_quot", lambda d: agg.coll_quotient(d, 60.0, by=["host"])),
+        ("w_incr", lambda d: agg.coll_increase(d, 60.0, by=["host"])),
+        ("w_ratio", lambda d: agg.agg_ratio(
+            d, [":=", "state", "error"], [":true"], 60.0, by=["host"])),
+        ("w_top2", lambda d: agg.coll_top(d, 2, 60.0, by=["host"])),
     ]
-    for name, sfn, bfn in cases:
+    for name, fn in cases:
         got = canon(
-            (tuple(r.asDict().items()) for r in stream_rows(name, sfn))
+            (tuple(r.asDict().items()) for r in stream_rows(name, fn))
         )
-        exp_rows = bfn(batch_df).collect()
+        exp_rows = fn(batch_df).collect()
         exp = canon((tuple(r.asDict().items()) for r in exp_rows))
         # column order can differ between realizations; compare as
         # sorted (column, value) sets per row
@@ -1358,8 +1405,9 @@ def test_stream_windowed_agg_twins_parity(spark, tmpdir):
 
 
 def test_stream_mtw_project_expired_parity(spark, tmpdir):
-    """moving-time-window, project and expired/not-expired streaming
-    twins match their batch twins over the same finite input."""
+    """moving-time-window and expired/not-expired streaming twins, and
+    project on streaming input, match batch over the same finite
+    input."""
     from datetime import datetime
 
     from mirabelle_spark import streaming as stx
@@ -1397,7 +1445,7 @@ def test_stream_mtw_project_expired_parity(spark, tmpdir):
         os.path.join(tmpdir, "mtw")
     )
     q = (
-        stx.stream_project(stream, conds, 60.0)
+        win.project(stream, conds, 60.0)
         .writeStream.format("memory").queryName("proj_t")
         .outputMode("complete").trigger(availableNow=True).start()
     )
@@ -1440,14 +1488,14 @@ def test_stream_ftw_delay_reference_case(spark, tmpdir):
     seals once an event arrives ≥ end + delay; the tail window never
     flushes. Per-event batches reproduce the arrival order (the late
     t=14 event lands inside the still-open [10,20) window)."""
-    from mirabelle_spark import streaming as stx
+    from mirabelle_spark.operators import windows as win
 
     arrivals = [(0, 10), (7, 1), (19, 1), (14, -10), (20, 2), (23, 4),
                 (60, 1), (76, 1)]
     rows = _feed_batches(
         spark, tmpdir, "ftwd",
         [[_ev(t, m)] for t, m in arrivals],
-        lambda s: stx.stream_fixed_time_window(s, 10.0, delay_s=5.0),
+        lambda s: win.fixed_time_window(s, 10.0, delay_s=5.0),
     )
     got = {
         r.window_start: sorted(e.metric for e in r.events) for r in rows
@@ -1491,14 +1539,14 @@ def test_stream_rate_reference_case(spark, tmpdir):
     sealed window; the tail window (event 71) never flushes — the
     divergence vs the reference is only the label (window_start
     instead of last-event time), documented in COVERAGE.md."""
-    from mirabelle_spark import streaming as stx
+    from mirabelle_spark.operators import aggregations as agg
 
     arrivals = [(0, 10), (7, 1), (11, 3), (19, 1), (14, -10), (20, 2),
                 (23, 4), (60, 1), (71, 1)]
     rows = _feed_batches(
         spark, tmpdir, "rater",
         [[_ev(t, m)] for t, m in arrivals],
-        lambda s: stx.stream_agg(s, "rate", 10.0),
+        lambda s: agg.agg_rate(s, 10.0),
     )
     got = {r.window_start: r.metric for r in rows}
     assert got == {0.0: 0.2, 10.0: 0.3, 20.0: 0.2, 60.0: 0.1}
@@ -1891,11 +1939,10 @@ def test_metrics_endpoint_per_stream_timers(spark, tmpdir):
 
 
 def test_stream_sessionize_parity(spark, tmp_path):
-    """Batch sessionize vs the streaming twin on availableNow:
+    """sessionize on batch vs streaming input (availableNow):
     identical sessions (start/end/µs interval math, count,
     decimal-exact metric sum)."""
     from mirabelle_spark.operators import windows as win
-    from mirabelle_spark.streaming import core
 
     rows = [
         (1, 0.0, 1.0), (1, 10.0, 2.0), (1, 100.0, 3.0),   # 2 sessions @gap 30
@@ -1914,7 +1961,7 @@ def test_stream_sessionize_parity(spark, tmp_path):
     st = spark.readStream.schema(
         spark.read.parquet(src_dir).schema
     ).parquet(src_dir)
-    out = core.stream_sessionize(st, 30.0, by=["user_id"], time_col="time", metric_col="value")
+    out = win.sessionize(st, 30.0, by=["user_id"], time_col="time", metric_col="value")
     q = (
         out.writeStream.format("memory").queryName("sess_parity")
         .option("checkpointLocation", str(tmp_path / "ck"))
